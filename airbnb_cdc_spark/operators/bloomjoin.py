@@ -245,13 +245,10 @@ def bloom_semi_join(
     estimated key count exceeds ``MAX_BLOOM_BITS`` keys (< 1 bit/key
     even at the cap — FPR → 1, the filter passes everything) skips the
     bloom entirely and runs the plain ``left_semi``: same result, no
-    useless bitset build + double fact scan."""
+    useless bitset build + double fact scan. So do key dtypes that
+    differ and are not both integral."""
     dim_key = dim_key or fact_key
     keys = dim.select(F.col(dim_key).alias(fact_key)).distinct()
-    if num_bits is None:
-        num_bits, n_est = _auto_num_bits(dim, dim_key)
-        if n_est > _FALLBACK_KEYS:
-            return fact.join(keys, on=fact_key, how="left_semi")
     # xxh64 positions (r17): the verify join makes the result identical
     # for ANY position hash, so the probe uses the ~10x-cheaper native
     # xxhash64 instead of the oracle-replayable md5 chain (which only
@@ -259,18 +256,23 @@ def bloom_semi_join(
     # xxhash64 is TYPE-sensitive (int 7 and bigint 7 hash differently),
     # so mismatched key dtypes would make build and probe position sets
     # disjoint and silently prune TRUE matches before the verify (r17
-    # ADVICE). Normalize: same dtype hashes natively; differing integral
-    # dtypes widen both sides to bigint (value-preserving); anything
-    # else normalizes through the md5 string path.
+    # ADVICE). Same dtype hashes natively; differing integral dtypes
+    # widen both sides to bigint (value-preserving). Any other mismatch
+    # has no hash-safe common form (decimal 7.00, double 7.0 and bigint
+    # 7 stringify differently, and Spark's join coercion may match a
+    # string to a number), so it runs the plain semi-join.
     ftype = dict(fact.dtypes).get(fact_key)
     dtype = dict(dim.dtypes).get(dim_key)
-    key_cast, hash_fn = None, "xxh64"
+    key_cast = None
     if ftype != dtype:
         _ints = {"tinyint", "smallint", "int", "bigint"}
-        if ftype in _ints and dtype in _ints:
-            key_cast = "bigint"
-        else:
-            hash_fn = "md5"
+        if ftype not in _ints or dtype not in _ints:
+            return fact.join(keys, on=fact_key, how="left_semi")
+        key_cast = "bigint"
+    if num_bits is None:
+        num_bits, n_est = _auto_num_bits(dim, dim_key)
+        if n_est > _FALLBACK_KEYS:
+            return fact.join(keys, on=fact_key, how="left_semi")
     pruned = bloom_prune(
         fact,
         dim,
@@ -278,7 +280,7 @@ def bloom_semi_join(
         dim_key,
         num_bits,
         num_hashes,
-        hash_fn=hash_fn,
+        hash_fn="xxh64",
         key_cast=key_cast,
     )
     return pruned.join(keys, on=fact_key, how="left_semi")

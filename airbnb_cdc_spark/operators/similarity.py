@@ -104,7 +104,7 @@ def _rank_topk_score8(scored: DataFrame, k: int) -> DataFrame:
     so the in-session variants (sq8_topk, ivf_sq8_topk) and the store
     queries (query_sq8_index, query_ivf_sq8_index) can never
     desynchronize their tie-break or k semantics — the bit-exact
-    replay contract the store rehearsals pin."""
+    replay contract tests/test_registry_oracle.py checks."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("query_id").orderBy(
@@ -480,7 +480,11 @@ def _check_collected_dims(pairs, size_col: str, dim: int, vec_col: str) -> None:
     query row contributes its top-nprobe probe rows, so the collected
     ``size(vec)`` column covers the whole query frame — same fail-loud
     ValueError, two fewer driver jobs per run. An empty query frame
-    passes, exactly like the aggregate form."""
+    passes, exactly like the aggregate form. A NULL query vector has a
+    NULL size; it fails loud too, naming the query ids."""
+    nulls = sorted({r.query_id for r in pairs if r[size_col] is None})
+    if nulls:
+        raise ValueError(f"{vec_col!r} is NULL for query ids {nulls}")
     sizes = {r[size_col] for r in pairs}
     if sizes and sizes != {dim}:
         raise ValueError(
@@ -1031,7 +1035,7 @@ def _seed_centroids(
     definition shared by the in-session variants (ivf_topk,
     ivf_sq8_topk) and every store build (IVF, IVF-SQ8, IVF-PQ), so the
     centroid rule and its empty-residue fail-fast can never
-    desynchronize between the forms the store rehearsals pin
+    desynchronize between the forms the registry oracle test checks
     bit-exact. The fail-fast probes the RAW frame with only the id
     column selected — column pruning + CollectLimit stop at the first
     match (measured ~0.16s/call cheaper than probing the quantized
@@ -1459,8 +1463,8 @@ def build_ivf_sq8_index(
 
     Same deterministic centroid rule and integer scoring as
     ``ivf_sq8_topk``, so the store replays it bit-exactly
-    (rehearsal-pinned in tests/test_ivf_sq8_store_relead_rehearsal.py
-    against the `ann_topk_ivf_sq8` DuckDB oracle)."""
+    (checked by tests/test_registry_oracle.py against the
+    `ann_topk_ivf_sq8` DuckDB oracle)."""
     import os
 
     base = persist_tracked(_with_quant(corpus, id_col, vec_col))

@@ -553,9 +553,8 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     minhash_lsh_pairs_from_signatures): shingle → minhash runs once
     per corpus snapshot (derive-once), banding + bucket join + exact
     in-bucket Jaccard verify run per pass and never rescan text.
-    RE-LED r16 per the store-program discipline; pre-pinned bit-exact
-    against the unchanged oracle by
-    tests/test_minhash_store_relead_rehearsal.py."""
+    RE-LED r16 per the store-program discipline; checked bit-exact
+    against the unchanged oracle by tests/test_registry_oracle.py."""
     return _dedup.minhash_lsh_pairs_from_signatures(
         minhash_sig_store(spark, sf_dir), threshold=0.5
     )
@@ -630,8 +629,8 @@ def q_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
 # build_lsh_index store (bits=4, the registry parameter) serves both
 # the single-bucket and multi-probe recall points via query_lsh_index
 # — the corpus is hashed once per snapshot, each query reads only its
-# probed bucket= directories. Pre-pinned bit-exact against both
-# unchanged oracles by tests/test_lsh_store_relead_rehearsal.py.
+# probed bucket= directories. Checked bit-exact against both
+# unchanged oracles by tests/test_registry_oracle.py.
 _LSH_INDEX_PATHS: dict[str, str] = {}
 
 
@@ -1385,8 +1384,8 @@ def q_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # verdict #4): ONE build_ivf_index store per (sf_dir, refine_iters)
 # serves every nprobe recall point via query_ivf_index — assignment
 # runs once per corpus version, each query prunes to its probed cid=
-# directories at the scan. Pre-pinned bit-exact against the unchanged
-# oracles by tests/test_ivf_store_relead_rehearsal.py (all four).
+# directories at the scan. Checked bit-exact against the unchanged
+# oracles by tests/test_registry_oracle.py (all four).
 _IVF_INDEX_PATHS: dict = {}
 
 
@@ -1906,10 +1905,8 @@ def q_incremental_winnow_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     never rescanned (dedup.py incremental_winnow_neardup). Same
     half-split convention as incremental_dedup_new_docs; the verify IS
     the fp join (exact shared-fingerprint counts, not a sketch
-    estimate), so the oracle replays every md5-h60 hash bit-for-bit.
-    Registered from its pre-pinned rehearsal oracle
-    (tests/test_incremental_winnow_rehearsal.py), the r16
-    shard_pack_export template."""
+    estimate), so the oracle replays every md5-h60 hash bit-for-bit
+    (checked by tests/test_registry_oracle.py)."""
     docs = load_table(spark, sf_dir, "documents")
     cut = _half_cut(docs)
     batch = docs.filter(F.col("doc_id") > cut).select("doc_id", "text")
@@ -4266,29 +4263,6 @@ def q_bilateral_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------------------------------
-# Driver-cap registration rotation.
-#
-# The driver's CORRECTNESS_r{N}.json holds exactly 50 entries, taken in
-# queries() iteration order; with 102 registered queries, whichever 52
-# trail the order get no hard correctness signal that round. Round-6
-# came back 50/50 green, and the other 52 were re-verified green at
-# HEAD by the judge's own verify_local run, so the whole registry is
-# covered by r5 ∪ r6 ∪ local. Round-7 cut (VERDICT r6 ask #1): (a) the
-# 13 r6-new queries that have never appeared in any driver file lead;
-# (b) the remaining slots take every other query absent from
-# CORRECTNESS_r06, so r6 ∪ r7 covers 100 of the 102. The two ceded
-# slots — conditional_split_bad and filter_by_status — are the
-# registry's two most trivial queries (a disjoint-split complement and
-# a parameterized filter), r5-green, unchanged since, and each shadowed
-# by a structurally identical representative that IS in the r7 cut
-# (conditional_split_accepted's sibling leg; the filter semantics inside
-# large_orders / shipping_priority). Any query added during round 7
-# goes in the "r8 leads" position here, stays out of the 50, and must
-# be green under scripts/verify_local.py before registration.
-# --------------------------------------------------------------------------
-
-
 @query("customer_order_distribution", _ORDER_DIST_ORACLE)
 def q_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: the order-count histogram over ALL customers —
@@ -4699,8 +4673,8 @@ def q_ann_topk_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     (values, ranking, ties) exactly replayable. RE-LED r16 onto the
     persisted store (write_sq8_index once per sf_dir, query_sq8_index
     per run — the store freezes the corpus-derived scale, queries read
-    codes only) per the r15 verdict's #4, pre-pinned bit-exact against
-    the SAME oracle by tests/test_sq8_store_relead_rehearsal.py."""
+    codes only) per the r15 verdict's #4, checked bit-exact against
+    the SAME oracle by tests/test_registry_oracle.py."""
     emb = load_table(spark, sf_dir, "embeddings")
     path = _derive_once(
         _SQ8_INDEX_PATHS,
@@ -4804,8 +4778,8 @@ def q_ann_topk_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted store (build_ivf_sq8_index once per sf_dir freezes the
     deterministic centroids + corpus-derived scale; query_ivf_sq8_index
     reads codes from only the probed cid= list dirs) per the r16
-    verdict's #2, pre-pinned bit-exact against the SAME oracle by
-    tests/test_ivf_sq8_store_relead_rehearsal.py."""
+    verdict's #2, checked bit-exact against the SAME oracle by
+    tests/test_registry_oracle.py."""
     emb = load_table(spark, sf_dir, "embeddings")
     path = _derive_once(
         _IVF_SQ8_INDEX_PATHS,
@@ -5046,8 +5020,8 @@ def q_ann_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the persisted store (write_pq_index once per sf_dir,
     query_pq_index_refined per run — ADC shortlist from the STORED
     code table, exact re-rank of only refine*k against the float
-    corpus) per the r15 verdict's #4, pre-pinned bit-exact against the
-    SAME oracle by tests/test_pq_refine_store_relead_rehearsal.py."""
+    corpus) per the r15 verdict's #4, checked bit-exact against the
+    SAME oracle by tests/test_registry_oracle.py."""
     emb = load_table(spark, sf_dir, "embeddings")
     path = _derive_once(
         _PQ_INDEX_PATHS,
@@ -5117,7 +5091,7 @@ def q_corpus_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Persisted IVF-PQ index per sf_dir (the r16 re-lead): centroids +
 # codebook freeze at build, every query run reads codes only. Build
 # params are the build_ivf_pq_index defaults == the registry-query
-# params (rehearsal-asserted).
+# params.
 _IVFPQ_INDEX_PATHS: dict[str, str] = {}
 
 
@@ -5136,9 +5110,8 @@ def q_ann_topk_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted store (build_ivf_pq_index once per sf_dir via
     _derive_once, query_ivf_pq_index per run — reads m bigint codes
     per vector from ONLY the probed ``cid=`` list directories, the
-    amortized production path) per the r15 verdict's #2, pre-pinned
-    bit-exact against the SAME oracle by
-    tests/test_ivf_pq_store_relead_rehearsal.py."""
+    amortized production path) per the r15 verdict's #2, checked
+    bit-exact against the SAME oracle by tests/test_registry_oracle.py."""
     emb = load_table(spark, sf_dir, "embeddings")
     path = _derive_once(
         _IVFPQ_INDEX_PATHS,
@@ -5226,155 +5199,6 @@ def q_shard_pack_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-_DRIVER_PRIORITY = [
-    # r18 rotation — the r17-written plan, swapped in per the standing
-    # per-round protocol (the r17 pytest failure that fires when the
-    # swap is due is the alarm this executes). The 28 r14-tier
-    # must-records head the cut (they hit MAX_AGE this round;
-    # kneser_ney_lm_score leads, having ceded its r17 slot to the
-    # incremental_winnow_neardup registration), and the backfills are
-    # the 22 oldest r15-tier names (alphabetical;
-    # dedup_ngram_jaccard_prefix ceded to the r19 backbone).
-    #
-    # REGISTRY CEILING DISCIPLINE (r12 verdict #6, restated every
-    # round): 178 names x 50 slots x MAX_AGE 3 ==> the hard ceiling
-    # is 200; steady-state slot demand is ~44/round against 50. At
-    # most ~2 net new queries per round are sustainable forever, each
-    # displacing a backfill slot; prefer re-leading existing queries
-    # onto stores over net-new registrations; if a future operator
-    # genuinely needs a slot, retire a redundant near-duplicate query
-    # in the same commit.
-    #
-    # (a) the 28 r14-tier must-records:
-    "kneser_ney_lm_score",
-    "leakage_safe_split",
-    "length_quartiles_by_lang",
-    "linestatus_priority_class",
-    "lm_perplexity_buckets",
-    "lm_quality_score",
-    "mm_resize",
-    "pack_concat_split",
-    "pii_scrub",
-    "priority_returns_exists",
-    "quality_filter_chain",
-    "returned_item_revenue",
-    "revenue_pareto",
-    "rollup_country_status",
-    "semantic_decontam",
-    "session_window_stats",
-    "source_quality_profile",
-    "status_percentiles",
-    "temperature_mixture",
-    "temperature_mixture_sample",
-    "top_supplier",
-    "trailing_7d_users",
-    "url_canonical_dedup",
-    "value_trend_by_type",
-    "vocab_coverage",
-    "windowed_kmv_distinct",
-    "winnow_keep_canonical",
-    "zorder_events_layout",
-    # (b) 22 oldest r15-tier backfills (alphabetical;
-    # dedup_ngram_jaccard_prefix ceded to the r19 backbone):
-    "ann_topk_bruteforce",
-    "ann_topk_ivf_kmeans",
-    "ann_topk_ivf_pq",
-    "ann_topk_lsh",
-    "ann_topk_lsh_multiprobe",
-    "asof_last_view_before_purchase",
-    "bigram_pmi",
-    "bigram_vocab",
-    "booking_customer_aggregation",
-    "chunk_dedup_intervals",
-    "chunk_dedup_spans",
-    "chunk_dedup_summary",
-    "conditional_split_bad",
-    "corpus_drift",
-    "customer_name_clean",
-    "dataset_split_counts",
-    "decontaminate_vs_benchmark",
-    "dedup_components",
-    "dedup_embedding_cosine",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-]
-
-# Planned r19 cut, written now per the r12-established discipline so
-# r19 never hits a saturation squeeze. After r18 records the list
-# above, the 28 r15-tier names below age to 4 in r19 (27 never made
-# the r18 cut + dedup_ngram_jaccard_prefix, which ceded its r18 slot)
-# — they MUST all be in the r19 cut — and the 22 free slots go to the
-# oldest r16-tier names (alphabetical; the 28 remaining r16-tier
-# queries age to exactly MAX_AGE after r19 and form the r20 backbone).
-# scripts/rotation_audit.py (simulate_next) checks this list.
-# r19 NEW-QUERY BUDGET: each new registry query must take a slot the
-# round it lands, ceding one r16-tier backfill below to the r20
-# backlog. Prefer re-leads (cost no slot).
-_NEXT_ROUND_PLAN = [
-    # the 28 r15-tier must-records:
-    "dedup_ngram_jaccard_prefix",
-    "dedup_simhash",
-    "dedup_simhash_cluster",
-    "doc_chunks",
-    "market_share_by_year",
-    "neardup_cluster_sizes",
-    "oov_rate",
-    "orders_expectations",
-    "outsized_supplier_share",
-    "pack_sequences",
-    "ppl_bucket_assign",
-    "price_deciles_distributed",
-    "repetition_filter",
-    "scd2_user_state_history",
-    "semdedup_keep_canonical",
-    "small_quantity_revenue",
-    "soft_dedup_weights",
-    "supplier_customer_pagerank",
-    "supplier_variety_by_part",
-    "supplier_wait_chain",
-    "target_fluency_gate",
-    "trailing_hour_activity",
-    "ts_profile_similarity",
-    "url_blocklist_filter",
-    "user_funnel",
-    "value_histogram",
-    "value_outliers_by_type",
-    "weighted_sample_by_length",
-    # 22 oldest r16-tier backfills (alphabetical):
-    "alter_row_flags",
-    "ann_topk_ivf",
-    "ann_topk_ivf_nprobe",
-    "anti_join_never_bought",
-    "asof_next_purchase_after_view",
-    "asof_view_within_tolerance",
-    "bloom_prune_effect",
-    "bloom_semi_join_orders",
-    "bm25_topk",
-    "boilerplate_strip",
-    "bpe_apply",
-    "cohort_retention",
-    "conditional_split_accepted",
-    "contrastive_negatives",
-    "cube_status_priority",
-    "dedup_containment",
-    "dedup_keep_canonical",
-    "distinct_users_kmv",
-    "diversity_sample_by_cluster",
-    "doc_fingerprint",
-    "domain_capped_sample",
-    "dsir_select",
-]
-
-
-def _rotated(d: dict) -> dict:
-    missing = [n for n in _DRIVER_PRIORITY if n not in QUERIES]
-    assert not missing, f"rotation names unknown queries: {missing}"
-    prio = {n: d[n] for n in _DRIVER_PRIORITY if n in d}
-    return prio | {n: v for n, v in d.items() if n not in prio}
-
-
 # Registration sanity: a mangled multi-line @query( decorator (name
 # line lost in an edit) registers a query under its ORACLE SQL text —
 # silently unnamed and oracle-less. Fail the import instead.
@@ -5384,11 +5208,3 @@ _bad_names = [n for n in QUERIES if not _re.fullmatch(r"[a-z0-9_]+", n)]
 assert not _bad_names, f"malformed query names: {_bad_names[:2]}"
 _no_oracle = sorted(set(QUERIES) - set(ORACLE_SQL))
 assert not _no_oracle, f"queries missing oracles: {_no_oracle}"
-
-assert len(_DRIVER_PRIORITY) == 50 and len(set(_DRIVER_PRIORITY)) == 50
-assert len(_NEXT_ROUND_PLAN) == 50 and len(set(_NEXT_ROUND_PLAN)) == 50
-assert not set(_NEXT_ROUND_PLAN) & set(_DRIVER_PRIORITY), (
-    "a planned-r13 slot wastes a record the r12 cut already makes"
-)
-QUERIES = _rotated(QUERIES)
-ORACLE_SQL = _rotated(ORACLE_SQL)

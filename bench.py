@@ -45,7 +45,7 @@ def main() -> None:
             pass
         release_cached()
 
-    # Target-SF warm-up (r15 verdict #6): after every rotation-order
+    # Target-SF warm-up (r15 verdict #6): after every registry-order
     # change the first ~22 TIMED positions showed 1.2-1.6x phantom
     # movers — cold OS page cache for the target-SF parquet plus
     # first-at-SF executor memory growth, not code, and four rounds
@@ -147,54 +147,24 @@ def main() -> None:
 
 
 def _prior_timings() -> dict[str, float] | None:
-    """Most recent complete per-query seconds: BENCH_FULL.json (written
-    by the previous bench run, complete by construction) first, else the
-    newest driver BENCH_r{N}.json snapshot (tail-truncated)."""
+    """Per-query seconds from the previous bench run's BENCH_FULL.json,
+    or None when there is none."""
     full = REPO / "BENCH_FULL.json"
-    if full.exists():
-        try:
-            prior_q = json.loads(full.read_text()).get("queries")
-            if prior_q:
-                return prior_q
-        except Exception:
-            pass
-    priors = sorted(REPO.glob("BENCH_r*.json"))
-    if not priors:
-        return None
     try:
-        prior = json.loads(priors[-1].read_text())
-        # Driver snapshots may carry "parsed": null with the real JSON
-        # line only in the "tail" stdout capture — .get("parsed", prior)
-        # then returns None and a swallowed AttributeError would silently
-        # disable the gate (round-3 ADVICE). Fall back tail → last line.
-        prior_q = (prior.get("parsed") or prior).get("queries")
-        if not prior_q and isinstance(prior.get("tail"), str):
-            # tail is a (possibly front-truncated) stdout capture of the
-            # bench JSON line; the queries dict is flat name->seconds, so
-            # scalar "name": number pairs recover it. Non-query keys that
-            # match (sf, value, ...) are harmless — lookups below are by
-            # registered query name only.
-            import re
-
-            prior_q = {
-                m.group(1): float(m.group(2))
-                for m in re.finditer(r'"(\w+)":\s*([0-9]+\.?[0-9]*)\b', prior["tail"])
-            }
-        return prior_q or None
-    except Exception:
+        return json.loads(full.read_text()).get("queries") or None
+    except (OSError, ValueError):
         return None
 
 
 def _regressions_vs_prior(
     timings: dict[str, float], prior_q: dict[str, float] | None
 ) -> list[dict] | None:
-    """Per-query regression gate: compare against the most recent
-    BENCH_r{N}.json in the repo and list queries >1.5x slower (and
-    >0.3s absolute, to ignore sub-second scheduling jitter). Round 2
-    shipped two silent 2-3.5x regressions; this makes the next one
-    impossible to miss. ``prior_q`` is the same snapshot the noise
-    guard used — one read, one consistent baseline. Returns None when
-    no prior bench exists."""
+    """Per-query regression gate: compare against the previous run's
+    BENCH_FULL.json and list queries >1.5x slower (and >0.3s absolute,
+    to ignore sub-second scheduling jitter). Round 2 shipped two silent
+    2-3.5x regressions; this makes the next one impossible to miss.
+    ``prior_q`` is the same snapshot the noise guard used — one read,
+    one consistent baseline. Returns None when no prior bench exists."""
     if not prior_q:
         return None
     regs = []

@@ -1,11 +1,8 @@
-"""Oracle REHEARSAL for the planned-r13 quality-classifier registry
-query: the exact DuckDB SQL that will become its oracle is run here
-directly against the sf0.001 parquet and compared to the Spark
-operator output, value for value — so when the rotation opens a slot,
-registration is a move-the-SQL edit, not new verification work.
+"""Oracle REHEARSAL for the quality-classifier operator: an independent
+DuckDB SQL replay is run here directly against the sf0.001 parquet and
+compared to the Spark operator output, value for value.
 
-Planned query shape (matches the _NEXT_ROUND_PLAN comment in
-queries.py): positive class = the `_LM_TARGET`/'src0' source,
+Query shape: positive class = the `_LM_TARGET`/'src0' source,
 negative class = every other source, candidates = the negative pool,
 output = the TOP-K verdict rows by (margin desc, doc_id) — the
 keep_quality selection form. Probed for degeneracy first (the Q22

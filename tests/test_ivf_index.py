@@ -44,6 +44,21 @@ def test_wrong_width_frame_fails_loud(spark, tmp_path):
         append_ivf_index(spark, path, wide)
 
 
+def test_null_query_vector_fails_loud(spark, tmp_path):
+    """A NULL query vector has a NULL size in the probe collect; the
+    width guard must raise its ValueError naming the query, not a
+    TypeError from comparing None with an int."""
+    path = str(tmp_path / "ivf")
+    build_ivf_index(
+        _vecs(spark, range(60)), path, centroid_mod=11, centroid_rem=3
+    )
+    queries = _vecs(spark, range(3)).union(
+        spark.createDataFrame([(77, None)], _SCHEMA)
+    )
+    with pytest.raises(ValueError, match=r"NULL for query ids \[77\]"):
+        query_ivf_index(spark, path, queries, k=3)
+
+
 def test_mixed_width_append_batch_fails_loud(spark, tmp_path):
     """A mixed-width append batch whose FIRST row matches the stored
     centroid width slipped past the limit-1 probe (r14 ADVICE); the

@@ -1,10 +1,9 @@
-"""Oracle REHEARSAL for a future `ann_topk_ivf_pq` registry query
-(r15 stock — r14's two slots are already spoken for by `ann_topk_pq`
-and `content_chunk_dedup`): the exact DuckDB SQL replaying
-ivf_pq_topk runs directly against the sf0.001 parquet and is compared
-to the Spark operator value for value.
+"""Oracle REHEARSAL for the in-session IVF-PQ operator: a DuckDB SQL
+replay of ivf_pq_topk runs directly against the sf0.001 parquet and is
+compared to the Spark operator value for value. The `ann_topk_ivf_pq`
+registry query runs the persisted-store form instead.
 
-Planned shape: ivf_pq_topk(embeddings, vec_id % 50 == 0, k=5,
+Shape: ivf_pq_topk(embeddings, vec_id % 50 == 0, k=5,
 centroid_mod=37, centroid_rem=3, nprobe=2, m=16, dim=64,
 cb_mod=None→max(2, n//256), cb_rem=1) — IVF pruning by exact
 quantized cosine (the _IVF_SQ8_ORACLE assignment/probe CTEs) composed

@@ -1,11 +1,9 @@
-"""Oracle REHEARSAL for the planned-r14 PQ registry query: the exact
-DuckDB SQL that will become `ann_topk_pq`'s oracle runs here directly
-against the sf0.001 parquet and is compared to the Spark operator
-output value for value — so when the rotation opens a slot,
-registration is a move-the-SQL edit, not new verification work (the
-classifier/BPE r12→r13 pattern).
+"""Oracle REHEARSAL for the in-session PQ operator: a DuckDB SQL replay
+of ``pq_refine_topk`` runs here directly against the sf0.001 parquet
+and is compared to the Spark operator output value for value. The
+`ann_topk_pq` registry query runs the persisted-store form instead.
 
-Planned query shape: pq_refine_topk(embeddings, vec_id % 50 == 0,
+Shape: pq_refine_topk(embeddings, vec_id % 50 == 0,
 k=5, refine=10, m=16, dim=64, cb_mod=None→max(2, n//256), cb_rem=1) —
 ADC shortlist of 50 by exact-integer PQ score, exact quantized-cosine
 re-rank to 5. Every stage is integer or deterministic-double, and

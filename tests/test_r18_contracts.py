@@ -3,7 +3,9 @@
 - ``bloom_semi_join`` normalizes key dtypes before xxhash64 probing:
   Spark's xxhash64 is type-sensitive (int 7 != bigint 7), so mismatched
   fact/dim key types used to make build and probe position sets
-  disjoint — true matches pruned before the verify join.
+  disjoint — true matches pruned before the verify join. Non-integral
+  mismatches (decimal/double vs integer, string vs number) run the
+  plain ``left_semi``.
 - ``similarity._store_part_sig`` keys the artifact cache on the child
   LISTING (name, mtime_ns, size), not the 1 s-granularity dir mtime: a
   same-tick rebuild/append must invalidate.
@@ -46,8 +48,8 @@ def test_bloom_semi_join_mismatched_int_widths_stays_exact(spark):
 def test_bloom_semi_join_string_vs_int_keys_stays_exact(spark):
     from airbnb_cdc_spark.operators.bloomjoin import bloom_semi_join
 
-    # non-integral mismatch falls back to the md5 string path (both
-    # sides cast to string before hashing — normalized by construction)
+    # non-integral mismatch runs the plain semi-join (Spark's join
+    # coercion decides the match, no bloom probe can prune it)
     fact = spark.range(0, 500).select(F.col("id").cast("string").alias("k"))
     dim = spark.range(0, 500).filter("id % 7 = 2").select(
         F.col("id").alias("dk")
@@ -60,6 +62,28 @@ def test_bloom_semi_join_string_vs_int_keys_stays_exact(spark):
     }
     want = {str(r.dk) for r in dim.collect()}
     assert got == want
+
+
+@pytest.mark.parametrize(
+    "fact_type,dim_type",
+    [("decimal(18,2)", "bigint"), ("double", "int")],
+    ids=["decimal_vs_bigint", "double_vs_int"],
+)
+def test_bloom_semi_join_non_integral_mismatch_equals_left_semi(
+    spark, fact_type, dim_type
+):
+    from airbnb_cdc_spark.operators.bloomjoin import bloom_semi_join
+
+    # decimal 7.00, double 7.0 and bigint 7 stringify differently, so a
+    # string-hash probe would prune every true match before the verify
+    fact = spark.range(0, 500).select(F.col("id").cast(fact_type).alias("k"))
+    keys = spark.range(0, 500).filter("id % 7 = 2").select(
+        F.col("id").cast(dim_type).alias("k")
+    )
+    got = bloom_semi_join(fact, keys, "k", num_bits=512, num_hashes=3)
+    want = fact.join(keys, "k", "left_semi")
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert got.count() == 72
 
 
 def test_store_part_sig_catches_same_tick_rewrite(spark, tmp_path):
