@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from airbnb_cdc_spark.session import sql_ident, sql_lit
+
 AGG_COLUMNS: tuple[str, ...] = (
     "country",
     "total_bookings",
@@ -91,51 +93,62 @@ def booking_measures(
     maintained — operators/matview.py) fact×dim frame. Split out so the
     aggregation refresh can consume the materialized join view without
     re-running the join it exists to avoid."""
-    amt = F.coalesce(F.col(amount_col), F.lit(0)).cast("decimal(18,2)")
-    is_conf = F.col(status_col) == F.lit(confirmed)
-    is_canc = F.col(status_col) == F.lit(cancelled)
+    # The measures are SQL text, one F.expr each: the same Catalyst
+    # expressions as Column trees, but a Column tree costs several py4j
+    # round trips per node. Names are quoted and the status values are
+    # escaped literals, so no argument can change the statement.
+    amt = f"CAST(coalesce({sql_ident(amount_col)}, 0) AS DECIMAL(18,2))"
+    status = sql_ident(status_col)
+    is_conf = f"{status} = {sql_lit(confirmed)}"
+    is_canc = f"{status} = {sql_lit(cancelled)}"
+    n = "CAST(count(1) AS DOUBLE)"
 
-    def dsum(c: Column) -> Column:
-        return F.coalesce(F.sum(c), F.lit(0).cast("decimal(28,2)"))
+    def dsum(x: str) -> str:
+        return f"coalesce(sum({x}), CAST(0 AS DECIMAL(28,2)))"
 
-    total_n = F.count(F.lit(1))
-    conf_n = F.sum(F.when(is_conf, 1).otherwise(0))
-    canc_n = F.sum(F.when(is_canc, 1).otherwise(0))
-    conf_amt_sum = dsum(F.when(is_conf, amt).otherwise(F.lit(0).cast("decimal(18,2)")))
-    canc_amt_sum = dsum(F.when(is_canc, amt).otherwise(F.lit(0).cast("decimal(18,2)")))
+    def flag_sum(cond: str) -> str:
+        return f"sum(CASE WHEN {cond} THEN 1 ELSE 0 END)"
 
+    def amt_if(cond: str) -> str:
+        return f"CASE WHEN {cond} THEN {amt} ELSE CAST(0 AS DECIMAL(18,2)) END"
+
+    def avg_if(cond: str) -> str:
+        # ELSE-less CASE: the average over the matching rows only
+        return (
+            f"CAST({dsum(f'CASE WHEN {cond} THEN {amt} END')} AS DOUBLE)"
+            f" / CAST(nullif(sum(CASE WHEN {cond} THEN 1 END), 0) AS DOUBLE)"
+        )
+
+    measures = {
+        "total_bookings": "count(1)",
+        "confirmed_bookings": flag_sum(is_conf),
+        "cancelled_bookings": flag_sum(is_canc),
+        "total_amount": f"CAST({dsum(amt)} AS DOUBLE)",
+        "confirmed_amount": f"CAST({dsum(amt_if(is_conf))} AS DOUBLE)",
+        "cancelled_amount": f"CAST({dsum(amt_if(is_canc))} AS DOUBLE)",
+        "cancellation_rate": (
+            f"CASE WHEN count(1) = 0 THEN 0.0D"
+            f" ELSE CAST({flag_sum(is_canc)} AS DOUBLE) / {n} END"
+        ),
+        "last_booking_date": f"max({sql_ident(created_col)})",
+        "first_booking_date": f"min({sql_ident(created_col)})",
+        "avg_amount": f"CAST({dsum(amt)} AS DOUBLE) / {n}",
+        "confirmed_avg_amount": avg_if(is_conf),
+        "cancelled_avg_amount": avg_if(is_canc),
+        "min_amount": f"CAST(min({amt}) AS DOUBLE)",
+        "max_amount": f"CAST(max({amt}) AS DOUBLE)",
+        "distinct_customers": f"count(DISTINCT {sql_ident(customer_key)})",
+        "avg_stay_duration": (
+            f"CAST(sum(CAST(coalesce({sql_ident(nights_col)}, 0) AS BIGINT))"
+            f" AS DOUBLE) / {n}"
+        ),
+    }
     # output keeps the caller's group column name (a custom group_col
-    # used to come back silently labeled "country")
-    out = joined.groupBy(F.col(group_col)).agg(
-        total_n.alias("total_bookings"),
-        conf_n.alias("confirmed_bookings"),
-        canc_n.alias("cancelled_bookings"),
-        dsum(amt).cast("double").alias("total_amount"),
-        conf_amt_sum.cast("double").alias("confirmed_amount"),
-        canc_amt_sum.cast("double").alias("cancelled_amount"),
-        F.when(total_n == 0, F.lit(0.0))
-        .otherwise(canc_n.cast("double") / total_n.cast("double"))
-        .alias("cancellation_rate"),
-        F.max(created_col).alias("last_booking_date"),
-        F.min(created_col).alias("first_booking_date"),
-        (dsum(amt).cast("double") / total_n.cast("double")).alias("avg_amount"),
-        (
-            dsum(F.when(is_conf, amt)).cast("double")
-            / F.nullif(F.sum(F.when(is_conf, 1)), F.lit(0)).cast("double")
-        ).alias("confirmed_avg_amount"),
-        (
-            dsum(F.when(is_canc, amt)).cast("double")
-            / F.nullif(F.sum(F.when(is_canc, 1)), F.lit(0)).cast("double")
-        ).alias("cancelled_avg_amount"),
-        F.min(amt).cast("double").alias("min_amount"),
-        F.max(amt).cast("double").alias("max_amount"),
-        F.count_distinct(F.col(customer_key)).alias("distinct_customers"),
-        (
-            F.sum(F.coalesce(F.col(nights_col), F.lit(0)).cast("long")).cast("double")
-            / total_n.cast("double")
-        ).alias("avg_stay_duration"),
+    # used to come back silently labeled "country"); agg() emits the
+    # group column first, then the measures in AGG_COLUMNS order
+    return joined.groupBy(F.col(group_col)).agg(
+        *[F.expr(f"{e} AS {name}") for name, e in measures.items()]
     )
-    return out.select(group_col, *[c for c in AGG_COLUMNS if c != "country"])
 
 
 def rank_bounded(

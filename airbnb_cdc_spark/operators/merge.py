@@ -16,8 +16,12 @@ Design for 100 TB:
   rewrites ONLY the buckets those keys hash to — partition pruning makes
   merge cost proportional to the update set, not the table size, which is
   the same file-skipping idea Delta's MERGE uses.
-- The anti-join inside a bucket joins two sides that are both already
-  bucket-local; with AQE the small update side broadcasts.
+- A merge shuffles once. The stored rows of the touched buckets and the
+  update rows are unioned and repartitioned on ``_bucket``; one
+  ``row_number`` window per key then picks each key's survivor, and the
+  same partitioning feeds the bucket-partitioned write, so each touched
+  bucket is written as one file. The only other job is the probe: a
+  distinct over the update keys' bucket ids.
 - Writes go to a temp directory first and are swapped in per-bucket
   (write-temp-then-rename), so a reader never sees a half-written bucket
   and the merge never reads its own output (SURVEY.md §7 "what's hard"
@@ -43,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from airbnb_cdc_spark.operators.lookup import latest_per_key
+from airbnb_cdc_spark.session import sql_ident
 
 BUCKET_COL = "_bucket"
 
@@ -134,9 +139,12 @@ class ParquetMergeTable:
 
     # -- storage helpers ---------------------------------------------------
 
+    def _bucket_sql(self) -> str:
+        keys = ", ".join(map(sql_ident, self.keys))
+        return f"CAST(pmod(xxhash64({keys}), {self.num_buckets}) AS INT)"
+
     def _bucket_expr(self):
-        key_cols = [F.col(k) for k in self.keys]
-        return F.pmod(F.xxhash64(*key_cols), F.lit(self.num_buckets)).cast("int")
+        return F.expr(self._bucket_sql())
 
     def exists(self) -> bool:
         fs, jpath = _fs(self.spark, self.path)
@@ -333,60 +341,101 @@ class ParquetMergeTable:
         columns fails fast (S5 contract) unless
         ``allow_schema_evolution=True``, which fills them with NULL."""
         self._check_meta()
-        if self.version_col is not None:
-            updates = latest_per_key(updates, self.keys, self.version_col)
-        else:
-            updates = dedup_keys_deterministic(updates, self.keys)
-
         if not self._has_buckets():
             # Missing table, or one whose every row was deleted (only the
             # _schema.json sidecar remains) — either way a fresh load.
+            if self.version_col is not None:
+                updates = latest_per_key(updates, self.keys, self.version_col)
+            else:
+                updates = dedup_keys_deterministic(updates, self.keys)
             self.overwrite(updates)
             return
 
-        updates = updates.withColumn(BUCKET_COL, self._bucket_expr())
-        # Tiny collect: at most num_buckets ints — drives partition pruning.
+        # Tiny collect: at most num_buckets ints — drives partition
+        # pruning. A key's bucket depends only on the key, so the raw
+        # (not yet deduplicated) keys touch the same buckets.
         touched = sorted(
-            r[0] for r in updates.select(BUCKET_COL).distinct().collect()
+            r[0]
+            for r in updates.selectExpr(f"{self._bucket_sql()} AS {BUCKET_COL}")
+            .distinct()
+            .collect()
         )
         if not touched:
             return
 
+        merged = self._rewrite(updates, touched, allow_schema_evolution)
+        tmp = f"{self.path}__tmp_{uuid.uuid4().hex[:8]}"
+        merged.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(tmp)
+        self._swap_buckets(tmp, touched)
+        if allow_schema_evolution:
+            # Only once the rewritten buckets are in place: a sidecar
+            # written before a failed rewrite would claim columns no
+            # file has, and every later plain merge would fail S5.
+            self._save_schema(merged.drop(BUCKET_COL))
+
+    def _rewrite(
+        self, updates: DataFrame, touched: list[int], allow_schema_evolution: bool
+    ) -> DataFrame:
+        """The rewritten contents of the ``touched`` buckets, with
+        ``_bucket``: stored rows and ALL update rows (in-batch duplicates
+        included) in one ``repartition(_bucket)``, then ONE ``row_number``
+        window per (bucket, key) — the single shuffle of the merge, since
+        hash partitioning on ``_bucket`` already clusters the window.
+
+        The window order is whole-row MERGE with last-writer-wins:
+        version desc nulls last (when configured), then source priority
+        so an update beats the stored row on a tie; without a version,
+        the max whole-row struct of the update's non-key columns picks
+        among in-batch duplicates — ``dedup_keys_deterministic``'s
+        partitioning-independent survivor."""
         # _read_raw: the sidecar schema (or mergeSchema fallback) keeps
         # evolved buckets readable — plain inference would pick an
         # arbitrary file and could silently drop the evolved column
         # from whichever bucket this merge rewrites.
-        current_touched = self._read_raw(touched)
-
-        # Union + single window pass implements whole-row MERGE with
-        # last-writer-wins: order by version desc (when configured), then
-        # source priority so an update beats the stored row on a tie.
-        # One shuffle on the keys — same cost as the anti-join + union it
-        # replaces, but honoring version order ACROSS batches too.
-        cur_marked = current_touched.withColumn("__src", F.lit(0))
-        upd_marked = updates.withColumn("__src", F.lit(1))
-        if allow_schema_evolution:
-            combined = cur_marked.unionByName(upd_marked, allowMissingColumns=True)
-            self._save_schema(combined.drop(BUCKET_COL, "__src"))
-        else:
-            combined = cur_marked.unionByName(upd_marked.select(cur_marked.columns))
-
-        if self.version_col is not None:
-            merged = latest_per_key(
-                combined, self.keys, self.version_col, tie_breaks=["__src"]
-            ).drop("__src")
-        else:
-            merged = latest_per_key(combined, self.keys, "__src").drop("__src")
-
-        tmp = f"{self.path}__tmp_{uuid.uuid4().hex[:8]}"
-        (
-            merged.repartition(BUCKET_COL)
-            .write.partitionBy(BUCKET_COL)
-            .mode("overwrite")
-            .parquet(tmp)
+        current = self._read_raw(touched)
+        table_cols = current.columns
+        upd_cols = updates.columns
+        if not allow_schema_evolution:
+            have = {c.lower() for c in upd_cols}
+            missing = [
+                c for c in table_cols if c != BUCKET_COL and c.lower() not in have
+            ]
+            if missing:
+                raise ValueError(
+                    f"updates lack table columns {missing}; pass "
+                    "allow_schema_evolution=True to fill them with NULL"
+                )
+        marked = updates.selectExpr(
+            "*", f"{self._bucket_sql()} AS {BUCKET_COL}", "1 AS __src"
         )
+        combined = current.selectExpr("*", "0 AS __src").unionByName(
+            marked, allowMissingColumns=True
+        )
+        if allow_schema_evolution:
+            out_cols = [c for c in combined.columns if c != "__src"]
+        else:
+            # update columns the table lacks still rank in-batch
+            # duplicates (in the row struct below), then are dropped
+            out_cols = table_cols
 
-        self._swap_buckets(tmp, touched)
+        order = ["__src DESC"]
+        if self.version_col is not None:
+            order.insert(0, f"{sql_ident(self.version_col)} DESC NULLS LAST")
+        else:
+            others = [c for c in upd_cols if c not in self.keys]
+            if others:
+                fields = ", ".join(map(sql_ident, others))
+                order.append(f"struct({fields}) DESC")
+        window = (
+            f"row_number() OVER (PARTITION BY {BUCKET_COL}, "
+            f"{', '.join(map(sql_ident, self.keys))} ORDER BY {', '.join(order)})"
+        )
+        return (
+            combined.repartition(BUCKET_COL)
+            .selectExpr("*", f"{window} AS __rn")
+            .filter("__rn = 1")
+            .selectExpr(*map(sql_ident, out_cols))
+        )
 
     def _swap_buckets(self, tmp: str, touched: list[int]) -> None:
         fs, _ = _fs(self.spark, self.path)

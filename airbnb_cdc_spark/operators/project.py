@@ -23,6 +23,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from airbnb_cdc_spark.session import sql_ident
+
 
 def select_columns(df: DataFrame, mapping: Mapping[str, str] | Sequence[str]) -> DataFrame:
     """Project + rename. ``mapping`` is either an ordered ``{src: dst}``
@@ -41,18 +43,19 @@ def cast_to_contract(df: DataFrame, contract: Mapping[str, str]) -> DataFrame:
     (NULL on failure), leaving other columns untouched. Every contract
     column must exist on the frame — a typo'd or upstream-dropped column
     fails HERE, not as a sink schema mismatch three stages later."""
-    missing = set(contract) - {f.name for f in df.schema.fields}
+    missing = set(contract) - set(df.columns)
     if missing:
         raise ValueError(f"contract columns absent from frame: {sorted(missing)}")
+    # SQL text, not Column trees: a Column costs several py4j round trips
+    # to build, while selectExpr parses every expression in the JVM.
     exprs = []
-    for field in df.schema.fields:
-        if field.name in contract:
-            exprs.append(
-                F.col(field.name).try_cast(contract[field.name]).alias(field.name)
-            )
+    for name in df.columns:
+        q = sql_ident(name)
+        if name in contract:
+            exprs.append(f"try_cast({q} AS {contract[name]}) AS {q}")
         else:
-            exprs.append(F.col(field.name))
-    return df.select(exprs)
+            exprs.append(q)
+    return df.selectExpr(*exprs)
 
 
 # The booking fact sink contract (dataflow/New_BookingTransformation.json:144-168).

@@ -203,8 +203,15 @@ def _estimated_scan_partitions(df: DataFrame) -> int | None:
         return len(files)
 
 
-def _sql_lit(v) -> str:
-    """One scalar as Spark-SQL literal text (for local_rows_df)."""
+def sql_ident(name: str) -> str:
+    """A column name as Spark-SQL identifier text: backtick-quoted, with
+    embedded backticks doubled, so any name parses as exactly itself."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_lit(v) -> str:
+    """One scalar as Spark-SQL literal text; strings are escaped, so a
+    value can never close its own quote."""
     if v is None:
         return "NULL"
     if isinstance(v, bool):
@@ -258,11 +265,11 @@ def local_rows_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     if not simple:
         return spark.createDataFrame([tuple(r) for r in rows], st)
     cols = ", ".join(
-        f"CAST(col{i + 1} AS {f.dataType.simpleString()}) AS `{f.name}`"
+        f"CAST(col{i + 1} AS {f.dataType.simpleString()}) AS {sql_ident(f.name)}"
         for i, f in enumerate(st.fields)
     )
     vals = ", ".join(
-        "(" + ", ".join(_sql_lit(v) for v in r) + ")" for r in rows
+        "(" + ", ".join(sql_lit(v) for v in r) + ")" for r in rows
     )
     return empty.union(spark.sql(f"SELECT {cols} FROM (VALUES {vals})"))
 

@@ -49,6 +49,7 @@ from airbnb_cdc_spark.operators.lookup import lookup_latest
 from airbnb_cdc_spark.operators.merge import ParquetMergeTable
 from airbnb_cdc_spark.operators.project import BOOKING_SINK_CONTRACT, cast_to_contract
 from airbnb_cdc_spark.operators.split import quality_split
+from airbnb_cdc_spark.session import sql_ident
 
 # Raw change-feed document schema (FIXTURES.md F2): everything stringly
 # except the generator's native ints/doubles — matching the Cosmos source
@@ -158,7 +159,7 @@ def run_booking_fact_stream(
             quarantine_batch(bad.select(*FINAL_COLUMNS), quarantine_dir, batch_id)
         # merge() is the upsert: LWW on version_col absorbs in-batch and
         # cross-batch disorder; no per-batch fact-table lookup needed.
-        fact_table.merge(accepted.select(*FINAL_COLUMNS))
+        fact_table.merge(accepted.selectExpr(*map(sql_ident, FINAL_COLUMNS)))
 
     stream = read_booking_stream(spark, feed_dir, max_files_per_trigger)
     query = (

@@ -1,6 +1,9 @@
 from __future__ import annotations
 
+import gc
 import sys
+import threading
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -17,6 +20,42 @@ def spark():
     s = get_spark("tests", cpus=4)
     s.sparkContext.setLogLevel("WARN")
     yield s
+
+
+@contextmanager
+def _counting_py4j_calls():
+    from py4j.clientserver import ClientServerConnection
+
+    counter = {"calls": 0}
+    send = ClientServerConnection.send_command
+    # only this thread's calls: JVM callbacks (foreachBatch, listeners)
+    # run on other threads and are not the block's work
+    me = threading.get_ident()
+
+    def counted(self, *args, **kwargs):
+        if threading.get_ident() == me:
+            counter["calls"] += 1
+        return send(self, *args, **kwargs)
+
+    gc.collect()  # earlier garbage must not release JVM objects in here
+    ClientServerConnection.send_command = counted
+    try:
+        yield counter
+    finally:
+        ClientServerConnection.send_command = send
+
+
+@pytest.fixture
+def py4j_calls():
+    """Counts the py4j round trips (Python→JVM commands) the calling
+    thread makes inside a block — a plan-construction cost guard that is
+    counted, not timed::
+
+        with py4j_calls() as c:
+            build_plan()
+        assert c["calls"] <= budget
+    """
+    return _counting_py4j_calls
 
 
 # The slow tier (see pytest.ini): the Hypothesis oracle sweep, scale

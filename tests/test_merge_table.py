@@ -18,6 +18,7 @@ from airbnb_cdc_spark.operators.merge import (
     ParquetMergeTable,
     create_merge_table,
     delta_available,
+    merge_dataframes,
 )
 
 BACKENDS = [
@@ -174,6 +175,145 @@ def test_merge_schema_evolution(spark, tmp_path):
     assert out["b"].extra == "x" and out["c"].extra == "y"
     assert out["a"].extra is None  # old rows widened with NULL
     assert out["a"].v == 1 and out["b"].v == 20
+
+
+def test_failed_evolving_merge_leaves_the_contract_unchanged(
+    spark, tmp_path, monkeypatch
+):
+    """The schema sidecar is the table's contract: an evolving merge
+    whose write fails must not widen it, or every later plain merge
+    would fail the S5 check for a column no file holds."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    t = _table(spark, tmp_path)
+    t.merge(spark.createDataFrame([Row(k="a", v=1)]))
+    before = t._load_schema()
+
+    def failing_write(self, *args, **kwargs):
+        raise IOError("injected parquet write failure")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_write)
+    with pytest.raises(IOError, match="injected"):
+        t.merge(
+            spark.createDataFrame([Row(k="b", v=2, extra="x")]),
+            allow_schema_evolution=True,
+        )
+    monkeypatch.undo()
+
+    assert t._load_schema() == before
+    t.merge(spark.createDataFrame([Row(k="a", v=10)]))
+    assert [(r.k, r.v) for r in t.read().collect()] == [("a", 10)]
+
+
+# -- one-shuffle rewrite -----------------------------------------------------
+#
+# A bucketed merge ranks the stored rows and ALL update rows (in-batch
+# duplicates included) in one row_number window. Each case must equal
+# merge_dataframes, the anti-join + union reference, on the same inputs.
+
+
+def _rowset(df):
+    return sorted(repr(sorted(r.asDict().items())) for r in df.collect())
+
+
+def _merged(spark, tmp_path, existing, updates, version_col=None, evolve=False):
+    """``existing`` loaded into a fresh table, then ``updates`` merged
+    (the bucketed path, not the fresh load). Every bucket directory
+    must then hold exactly one parquet file."""
+    t = ParquetMergeTable(
+        spark, str(tmp_path / "t"), keys=["k"], version_col=version_col, num_buckets=4
+    )
+    t.merge(existing)
+    t.merge(updates, allow_schema_evolution=evolve)
+    buckets = list(Path(t.path).glob(f"{BUCKET_COL}=*"))
+    assert buckets
+    for b in buckets:
+        assert len(list(b.glob("*.parquet"))) == 1, b
+    return t.read()
+
+
+@pytest.mark.parametrize("parts", [1, 8])
+def test_in_batch_duplicates_keep_the_max_struct_row(spark, tmp_path, parts):
+    """No version column: among in-batch duplicates the row with the
+    max (v, s) struct survives, however the updates are partitioned."""
+    ddl = "k string, v int, s string"
+    existing = spark.createDataFrame([("a", 1, "x"), ("b", 2, "y"), ("c", 3, "z")], ddl)
+    updates = spark.createDataFrame(
+        [
+            ("a", 9, "a"), ("a", 5, "p"), ("a", 9, "b"), ("a", -1, None),
+            ("b", 0, None), ("b", 0, "q"),
+            ("d", 1, "m"), ("d", 1, "n"), ("d", None, "z"),
+        ],
+        ddl,
+    ).repartition(parts)
+    got = _merged(spark, tmp_path, existing, updates)
+    assert _rowset(got) == _rowset(merge_dataframes(existing, updates, ["k"]))
+    assert {r.k: (r.v, r.s) for r in got.collect()} == {
+        "a": (9, "b"), "b": (0, "q"), "c": (3, "z"), "d": (1, "n")
+    }
+
+
+def test_version_tie_and_null_stored_version_take_the_update(spark, tmp_path):
+    ddl = "k string, ver int, v int"
+    existing = spark.createDataFrame([("a", 5, 1), ("b", None, 2), ("c", 3, 3)], ddl)
+    updates = spark.createDataFrame(
+        [("a", 5, 7), ("b", 1, 8), ("b", 0, 6), ("d", 2, 4)], ddl
+    )
+    got = _merged(spark, tmp_path, existing, updates, version_col="ver")
+    want = merge_dataframes(existing, updates, ["k"], version_col="ver")
+    assert _rowset(got) == _rowset(want)
+    assert {r.k: r.v for r in got.collect()} == {"a": 7, "b": 8, "c": 3, "d": 4}
+
+
+def test_stale_updates_are_discarded(spark, tmp_path):
+    """An update older than the stored row, or with a NULL version
+    against a real one, loses: the result is the merge of the other
+    updates alone."""
+    ddl = "k string, ver int, v int"
+    existing = spark.createDataFrame([("a", 5, 1), ("c", 3, 3)], ddl)
+    updates = spark.createDataFrame(
+        [("a", 3, 99), ("c", None, 98), ("d", 1, 4)], ddl
+    )
+    got = _merged(spark, tmp_path, existing, updates, version_col="ver")
+    want = merge_dataframes(
+        existing, updates.filter("k = 'd'"), ["k"], version_col="ver"
+    )
+    assert _rowset(got) == _rowset(want)
+
+
+def test_evolving_merge_matches_reference(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    existing = spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int")
+    updates = spark.createDataFrame(
+        [("b", 20, "x"), ("b", 20, "w"), ("c", 3, None), ("c", 3, "y")],
+        "k string, v int, extra string",
+    )
+    got = _merged(spark, tmp_path, existing, updates, evolve=True)
+    widened = existing.withColumn("extra", F.lit(None).cast("string"))
+    assert got.columns == ["k", "v", "extra"]
+    assert _rowset(got) == _rowset(merge_dataframes(widened, updates, ["k"]))
+
+
+@pytest.mark.parametrize("version_col", [None, "ver"])
+def test_merge_rewrite_plan_has_one_exchange(spark, tmp_path, version_col):
+    """The frame merge() writes shuffles once: the repartition on
+    _bucket also clusters the window, so no second exchange."""
+    import io
+    import re
+    from contextlib import redirect_stdout
+
+    t = _table(spark, tmp_path, version_col=version_col)
+    t.merge(spark.createDataFrame([Row(k=f"k{i}", v=i, ver=1) for i in range(20)]))
+    updates = spark.createDataFrame(
+        [Row(k="k1", v=-1, ver=2), Row(k="k1", v=-2, ver=3), Row(k="new", v=0, ver=1)]
+    )
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        t._rewrite(updates, list(range(8)), allow_schema_evolution=False).explain()
+    plan = buf.getvalue()
+    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
+    assert "Window" in plan, plan
 
 
 # -- SCD2 ------------------------------------------------------------------
