@@ -890,25 +890,24 @@ def _check_chunk_params(
     chunks: DataFrame, id_col: str, window: int, stride: int
 ) -> None:
     """Guard for precomputed-``chunks=`` callers (r17 ADVICE): a chunk
-    table built with different (window, stride, id_col) than the call
-    names would yield plausible-but-wrong keeper marks with no error.
-    ``chunk_documents`` stamps its parameters on the returned frame
-    (``_chunk_params``); store readers re-attach it. A frame without
-    the stamp is only checked for the id column (hand-built test
-    frames stay accepted — the stamp covers the store-reuse path the
-    guard exists for)."""
+    table built with different (window, stride) than the call names
+    would yield plausible-but-wrong keeper marks with no error.
+    ``chunk_documents`` stamps its parameters as ``chunk_hash`` field
+    metadata, which projections and the parquet round trip keep. A
+    frame without the stamp is only checked for the id column
+    (hand-built test frames stay accepted)."""
     if id_col not in chunks.columns:
         raise ValueError(
             f"precomputed chunks frame lacks id column {id_col!r} "
             f"(has {chunks.columns})"
         )
-    got = getattr(chunks, "_chunk_params", None)
-    if got is None:
+    if "chunk_hash" not in chunks.columns:
         return
-    want = {"id_col": id_col, "window": window, "stride": stride}
-    if dict(got) != want:
+    got = chunks.schema["chunk_hash"].metadata.get("chunk_params")
+    want = {"window": window, "stride": stride}
+    if got is not None and got != want:
         raise ValueError(
-            f"precomputed chunks frame was built with {dict(got)} but the "
+            f"precomputed chunks frame was built with {got} but the "
             f"call names {want}; pass a matching chunk table"
         )
 

@@ -16,6 +16,17 @@ Scale notes:
   it down for real media).
 - The featurizer is a narrow map — no shuffle; repartition upstream by
   size if payload skew is expected.
+- Fan-out is sized by input bytes, not core count
+  (``ensure_parallelism(..., python_workers=True)``): the input widens
+  to ``min(defaultParallelism, ceil(bytes / openCostInBytes))``
+  partitions, so a small input runs as ONE Python task with no
+  exchange, and a large payload still spreads across the cores. Each
+  Python task costs ~0.25 CPU s before the UDF sees a row, whatever
+  its row count: PySpark's per-task ``worker_util.setup_spark_files``
+  calls ``importlib.invalidate_caches()``, which makes each of the
+  worker's zipimporters re-read the 1,328-entry ``pyspark.zip``
+  directory (cProfile of a warm, reused worker; an identity
+  ``mapInPandas`` over 500 rows pays it too).
 """
 
 from __future__ import annotations
@@ -77,9 +88,9 @@ def extract_features(
                 }
             )
 
-    return ensure_parallelism(df.select(id_col, payload_col)).mapInPandas(
-        featurize, FEATURE_SCHEMA
-    )
+    return ensure_parallelism(
+        df.select(id_col, payload_col), python_workers=True
+    ).mapInPandas(featurize, FEATURE_SCHEMA)
 
 
 RESIZE_SCHEMA = T.StructType(
@@ -130,9 +141,9 @@ def resize_images(
                 )
             yield pd.DataFrame(out)
 
-    return ensure_parallelism(df.select(id_col, payload_col)).mapInPandas(
-        run, RESIZE_SCHEMA
-    )
+    return ensure_parallelism(
+        df.select(id_col, payload_col), python_workers=True
+    ).mapInPandas(run, RESIZE_SCHEMA)
 
 
 FRAME_SCHEMA = T.StructType(
@@ -178,9 +189,9 @@ def sample_frames(
                     )
             yield pd.DataFrame(out)
 
-    return ensure_parallelism(df.select(id_col, payload_col)).mapInPandas(
-        run, FRAME_SCHEMA
-    )
+    return ensure_parallelism(
+        df.select(id_col, payload_col), python_workers=True
+    ).mapInPandas(run, FRAME_SCHEMA)
 
 
 def documents_as_binary(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -474,7 +474,7 @@ def _collected_probes(probes_sel: DataFrame):
     return rows, local
 
 
-def _check_collected_dims(pairs, size_col: str, dim: int, vec_col: str) -> None:
+def _check_collected_dims(pairs, size_col: str, dim: int | None, vec_col: str) -> None:
     """The ``_check_dim(full=True)`` guard evaluated from the probe
     collect instead of a separate 2-job aggregate action (r18): every
     query row contributes its top-nprobe probe rows, so the collected
@@ -490,6 +490,17 @@ def _check_collected_dims(pairs, size_col: str, dim: int, vec_col: str) -> None:
         raise ValueError(
             f"hyperplane dim={dim} but {vec_col!r} vectors have "
             f"{min(sizes)}..{max(sizes)} components"
+        )
+
+
+def _check_store_not_empty(width: int | None, queries: DataFrame, path: str) -> None:
+    """A store with no rows has no stored width (``width`` is None), so
+    no width guard can run and every query would silently get an empty
+    top-k. Fail loud for a non-empty query frame instead; an empty one
+    still gets its empty answer. Runs a job only on an empty store."""
+    if width is None and not queries.isEmpty():
+        raise ValueError(
+            f"ANN store {path!r} is empty; cannot answer a non-empty query frame"
         )
 
 
@@ -917,6 +928,7 @@ def query_sq8_index(
     # (the _stored_pq_geometry class of drift). Stored side memoized
     # (r17); the query-frame check stays per-call.
     d = _stored_width_cached(spark, os.path.join(path, "codes"), "c8")
+    _check_store_not_empty(d, queries, path)
     if d is not None:
         _check_dim(queries, vec_col, d, full=True)
     c = stored_codes.select(
@@ -1381,6 +1393,7 @@ def query_ivf_index(
     # zip_with silently truncates a wider query frame. Evaluated from
     # the probe collect below (r18) — two fewer driver jobs per run.
     d = _stored_width_cached(spark, os.path.join(path, "centroids"), "__qc")
+    _check_store_not_empty(d, queries, path)
     cents = F.broadcast(stored_cents)
     # widen=False (r18): the probe scoring (|queries| x |centroids|
     # cosines) is collected as bounded metadata below — fanning the tiny
@@ -1405,8 +1418,7 @@ def query_ivf_index(
     # chain; the query vectors are re-attached from a fresh projection
     # of the (tiny) query frame instead of riding the collected rows
     pairs, pairs_local = _collected_probes(probe_sel)
-    if d is not None:
-        _check_collected_dims(pairs, "__d", d, vec_col)
+    _check_collected_dims(pairs, "__d", d, vec_col)
     pairs_local = pairs_local.drop("__d")
     probe_cids = sorted({r.cid for r in pairs})
     qvec = _with_quant(queries, id_col, vec_col, widen=False).select(
@@ -1564,6 +1576,7 @@ def query_ivf_sq8_index(
     stored_cents = _read_store_part(spark, os.path.join(path, "centroids"))
     # width guard evaluated from the probe collect below (r18)
     d = _stored_width_cached(spark, os.path.join(path, "centroids"), "__qc")
+    _check_store_not_empty(d, queries, path)
     scale = _read_store_part(spark, os.path.join(path, "scale"))
     cents = F.broadcast(stored_cents)
     qs = _with_quant(queries, id_col, vec_col, widen=False)
@@ -1586,8 +1599,7 @@ def query_ivf_sq8_index(
     # one bounded collect replaces the r17 persist + distinct-collect
     # chain; the query codes re-attach from a fresh projection
     pairs, pairs_local = _collected_probes(probe_sel)
-    if d is not None:
-        _check_collected_dims(pairs, "__d", d, vec_col)
+    _check_collected_dims(pairs, "__d", d, vec_col)
     pairs_local = pairs_local.drop("__d")
     probe_cids = sorted({r.cid for r in pairs})
     qcodes = sq8_codes(queries, scale, id_col, vec_col, widen=False).select(
@@ -2754,6 +2766,11 @@ def query_ivf_pq_index(
         )
     )
     pairs, probes = _collected_probes(probe_sel)
+    if not pairs:  # an empty query frame, or no centroids to probe
+        cents_path = os.path.join(path, "centroids")
+        _check_store_not_empty(
+            _stored_width_cached(spark, cents_path, "__qc"), queries, path
+        )
     _check_collected_dims(pairs, "__d", dim, vec_col)
     probes = probes.drop("__d")
     probe_cids = sorted({r.cid for r in pairs})

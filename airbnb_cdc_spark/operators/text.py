@@ -594,7 +594,7 @@ def chunk_documents(
     # empty docs surface as a single 0-token chunk; drop them at the END
     # (an early filter on the tokenized column would push the tokenize
     # below the widening repartition — see _hashed_base).
-    out = (
+    return (
         base.select(
             id_col,
             "__toks",
@@ -604,17 +604,18 @@ def chunk_documents(
             id_col,
             F.col("ci").cast("int").alias("chunk_idx"),
             F.size(chunk).cast("long").alias("chunk_tokens"),
-            F.md5(F.concat_ws(" ", chunk)).alias("chunk_hash"),
+            # Provenance stamp for precomputed-``chunks=`` consumers
+            # (r17 ADVICE): chunk_dedup* assert a passed chunk table was
+            # built with the parameters the call names. Field metadata,
+            # so it survives projections, filters, caching and the
+            # parquet round trip of a chunk store.
+            F.md5(F.concat_ws(" ", chunk)).alias(
+                "chunk_hash",
+                metadata={"chunk_params": {"window": window, "stride": stride}},
+            ),
         )
         .filter(F.col("chunk_tokens") > 0)
     )
-    # Provenance stamp for precomputed-``chunks=`` consumers (r17
-    # ADVICE): chunk_dedup* assert a passed chunk table was built with
-    # the parameters the call names. An attribute, not schema metadata —
-    # it must never alter the declared output schema. Store readers
-    # re-attach it (chunk stores are per-process).
-    out._chunk_params = {"id_col": id_col, "window": window, "stride": stride}
-    return out
 
 
 def content_chunk_documents(

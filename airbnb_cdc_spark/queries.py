@@ -1733,12 +1733,7 @@ def chunk_table_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             stride=_CHUNK_S,
         ).write.mode("overwrite").parquet(p),
     )
-    df = _store_df(spark, path)
-    # re-attach the chunker's provenance stamp (lost in the parquet
-    # roundtrip) so chunk_dedup*'s chunks= parameter guard can verify
-    # the store matches the call's (window, stride, id_col)
-    df._chunk_params = {"id_col": "doc_id", "window": _CHUNK_W, "stride": _CHUNK_S}
-    return df
+    return _store_df(spark, path)
 
 
 @query("chunk_dedup_spans", _CHUNK_DEDUP_ORACLE)

@@ -112,9 +112,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
-    """Fan a narrow input out to the cluster's parallelism before
-    compute-heavy per-row work (shingling, hashing, Python batches).
+def ensure_parallelism(df: DataFrame, python_workers: bool = False) -> DataFrame:
+    """Fan a narrow input out before compute-heavy per-row work
+    (shingling, hashing, Python batches).
 
     A small/single-file parquet scan yields 1-2 partitions; that's right
     for scan-bound plans but serializes expression-heavy operators onto
@@ -122,19 +122,41 @@ def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame
     buys full-width execution of everything downstream. At 100 TB inputs
     arrive in thousands of files and this is a no-op.
 
-    Scan width is estimated from the source file listing + sizes
+    Catalyst stages widen to ``defaultParallelism``: their tasks cost
+    milliseconds, so a wide fan-out of few bytes is cheap. A stage that
+    runs in Python workers (``python_workers=True``) widens only to
+    ``min(defaultParallelism, ceil(bytes / openCostInBytes))``: every
+    Python task pays ~0.25 CPU s before its UDF runs, whatever its row
+    count (PySpark's per-task ``importlib.invalidate_caches()`` makes
+    each of the worker's zipimporters re-read ``pyspark.zip``'s
+    directory). ``openCostInBytes`` is the floor Spark's own file-split
+    sizing uses, so a small input stays one task while a large payload
+    still spreads out. Either way the input widens only when the scan's
+    own estimate, ``ceil(bytes / maxPartitionBytes)``, is narrower.
+
+    Scan bytes come from the source file listing + sizes
     (``inputFiles`` — metadata only), NOT ``df.rdd.getNumPartitions()``:
     the RDD probe forces a plan-to-RDD conversion on every call, a fixed
     driver-side cost paid by every operator that fans out (round-2
     verdict). Non-file inputs (in-memory test frames, streams) are left
     untouched — they carry whatever parallelism their source gave them.
     """
-    if min_parts is None:
-        min_parts = df.sparkSession.sparkContext.defaultParallelism
-    est = _estimated_scan_partitions(df)
-    if est is None or est >= min_parts:
+    total = _scan_bytes(df)
+    if total is None:
         return df
-    return df.repartition(min_parts)
+    spark = df.sparkSession
+    want = spark.sparkContext.defaultParallelism
+    if python_workers:
+        open_cost = _byte_conf(spark, "spark.sql.files.openCostInBytes", 4 * 1024**2)
+        want = min(want, max(1, -(-total // open_cost)))
+    # Spark BIN-PACKS many small files into one partition, so total
+    # bytes over maxPartitionBytes (not a per-file count) matches the
+    # scan's width in the many-tiny-files case (round-3 ADVICE)
+    max_split = _byte_conf(spark, "spark.sql.files.maxPartitionBytes", 128 * 1024**2)
+    est = max(1, -(-total // max_split))
+    if est >= want:
+        return df
+    return df.repartition(want)
 
 
 _SIZE_SUFFIXES = {
@@ -162,45 +184,38 @@ def _parse_byte_conf(value: str, default: int) -> int:
     return int(s) if s.isdigit() else default
 
 
-def _estimated_scan_partitions(df: DataFrame) -> int | None:
-    """Estimated scan-partition count: ceil(total_bytes /
-    maxPartitionBytes) over the file listing. Spark BIN-PACKS many
-    small files into one partition (openCostInBytes), so a per-file
-    ``max(1, ...)`` overshoots exactly in the many-tiny-files case this
-    estimate guards (round-3 ADVICE) — total-bytes division matches the
-    packing behavior closely enough to decide widen-or-not. Returns
-    None when the input isn't file-based (nothing to widen) or listing
-    fails."""
+def _byte_conf(spark: SparkSession, key: str, default: int) -> int:
+    """A byte-valued session conf, in bytes."""
+    return _parse_byte_conf(spark.conf.get(key, str(default)), default)
+
+
+def _scan_bytes(df: DataFrame) -> int | None:
+    """Total bytes of the files ``df`` scans, from the file listing.
+    None when the input isn't file-based (nothing to widen) or a file
+    can't be sized."""
+    from urllib.parse import unquote
+
     try:
         files = df.inputFiles()
     except Exception:
         return None
     if not files:
         return None
-    try:
-        mpb = _parse_byte_conf(
-            df.sparkSession.conf.get(
-                "spark.sql.files.maxPartitionBytes", "134217728"
-            ),
-            134217728,
-        )
-        from urllib.parse import unquote
-
-        total = 0
-        for uri in files:
+    total = 0
+    for uri in files:
+        # Remote / unstattable file (hdfs://, s3a://): its size is
+        # unknown, so any estimate would be a guess — and guessing
+        # NARROW adds a full-data shuffle to a possibly-huge scan.
+        # Skip widening entirely: real deployments at that scale
+        # arrive in many files and don't need this helper.
+        if not uri.startswith("file:"):
+            return None
+        try:
             # inputFiles returns percent-encoded URIs; decode before stat
-            path = unquote(uri[len("file:") :]) if uri.startswith("file:") else None
-            if path is None or not os.path.exists(path):
-                # Remote / unstattable file (hdfs://, s3a://): its size is
-                # unknown, so the estimate would be a guess — and guessing
-                # NARROW adds a full-data shuffle to a possibly-huge scan.
-                # Skip widening entirely: real deployments at that scale
-                # arrive in many files and don't need this helper.
-                return None
-            total += os.path.getsize(path)
-        return max(1, -(-total // mpb))
-    except Exception:
-        return len(files)
+            total += os.path.getsize(unquote(uri[len("file:") :]))
+        except OSError:
+            return None
+    return total
 
 
 def sql_ident(name: str) -> str:

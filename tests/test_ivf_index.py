@@ -59,6 +59,26 @@ def test_null_query_vector_fails_loud(spark, tmp_path):
         query_ivf_index(spark, path, queries, k=3)
 
 
+def test_query_against_empty_store_fails_loud(spark, tmp_path):
+    """A store with no centroids yields an empty probe collect, so the
+    width guard has nothing to check: a wrong-width query frame used to
+    get an empty top-k without an error. (``build_ivf_index`` refuses an
+    empty corpus, so the test empties a built store's centroid table.)"""
+    path = str(tmp_path / "ivf")
+    build_ivf_index(
+        _vecs(spark, range(60)), path, centroid_mod=11, centroid_rem=3
+    )
+    cents = spark.read.parquet(path + "/centroids").schema
+    spark.createDataFrame([], cents).write.mode("overwrite").parquet(
+        path + "/centroids"
+    )
+    wide = spark.createDataFrame([(0, [0.5] * 128)], _SCHEMA)
+    with pytest.raises(ValueError, match="is empty"):
+        query_ivf_index(spark, path, wide, k=3)
+    # an empty query frame still gets an empty answer
+    assert query_ivf_index(spark, path, wide.limit(0), k=3).count() == 0
+
+
 def test_mixed_width_append_batch_fails_loud(spark, tmp_path):
     """A mixed-width append batch whose FIRST row matches the stored
     centroid width slipped past the limit-1 probe (r14 ADVICE); the

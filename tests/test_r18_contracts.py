@@ -158,6 +158,35 @@ def test_chunk_params_guard_rejects_mismatch(spark):
     assert chunk_dedup(docs, window=64, stride=48, chunks=chunks).columns[0] == "doc_id"
 
 
+def test_chunk_params_guard_survives_projection_and_store_roundtrip(
+    spark, tmp_path
+):
+    """The stamp rides on ``chunk_hash``'s field metadata, so a filtered,
+    projected or stored-and-reread chunk table built with another
+    window is still rejected instead of being checked for nothing."""
+    from pyspark.sql import functions as F
+
+    from airbnb_cdc_spark.operators.dedup import (
+        chunk_dedup,
+        chunk_dedup_summary,
+    )
+    from airbnb_cdc_spark.operators.text import chunk_documents
+
+    docs = load_table(spark, SF, "documents")
+    chunks = chunk_documents(docs, window=32, stride=48)
+    filtered = chunks.filter(F.col("chunk_tokens") > 1).select(
+        "doc_id", "chunk_idx", "chunk_tokens", "chunk_hash"
+    )
+    with pytest.raises(ValueError, match="window"):
+        chunk_dedup(docs, window=64, stride=48, chunks=filtered)
+    store = str(tmp_path / "chunks")
+    chunks.write.parquet(store)
+    with pytest.raises(ValueError, match="window"):
+        chunk_dedup_summary(
+            docs, window=64, stride=48, chunks=spark.read.parquet(store).cache()
+        )
+
+
 def test_chunk_params_guard_checks_id_col_presence(spark):
     from airbnb_cdc_spark.operators.dedup import chunk_dedup
     from airbnb_cdc_spark.operators.text import chunk_documents

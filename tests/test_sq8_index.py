@@ -219,3 +219,22 @@ def test_mixed_width_append_batch_fails_loud(spark, tmp_path):
     with pytest.raises(ValueError, match="mixed|components"):
         append_sq8_index(spark, path, mixed)
     assert spark.read.parquet(path + "/codes").count() == n_before
+
+
+def test_query_against_empty_store_fails_loud(spark, tmp_path):
+    """A code table with no rows has no stored width, so the width
+    guard cannot run: a non-empty query frame must fail loud rather
+    than get an empty top-k. (The build refuses an empty corpus, so the
+    test empties a built store's code table.)"""
+    import pytest
+
+    path = str(tmp_path / "sq8")
+    write_sq8_index(_vecs(spark, range(40)), path)
+    codes = spark.read.parquet(path + "/codes").schema
+    spark.createDataFrame([], codes).write.mode("overwrite").parquet(
+        path + "/codes"
+    )
+    queries = _vecs(spark, range(3))
+    with pytest.raises(ValueError, match="is empty"):
+        query_sq8_index(spark, path, queries, k=3)
+    assert query_sq8_index(spark, path, queries.limit(0), k=3).count() == 0
