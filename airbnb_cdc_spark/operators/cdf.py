@@ -20,10 +20,10 @@ Both diff reads are bucket-pruned to the operation's touched buckets
 extra bucket-wave scans — proportional to the wave, not the table.
 
 The feed lives at ``<table>__changes/_cdf_seq=K/`` — a SIBLING of the
-table dir, not inside it: ``ParquetMergeTable`` recovers a
-fully-deleted table by routing the next merge through ``overwrite``,
-which recursively replaces the table path — a feed stored inside the
-table would be wiped (and its sequence reset) by exactly that path.
+table dir, not inside it: the table dir is the merge table's commit-log
+namespace (``_log`` and the bucket directories its GC deletes once no
+entry names them), and the feed keeps a lifecycle of its own —
+``checkpoint_feed`` swaps the feed's whole directory.
 ``_cdf_seq`` is a per-operation commit sequence (monotone, driver-side
 listing of ≤ #commits dirs; single-writer, like the table itself).
 Rows carry the full image plus ``_change_type``; replaying the feed in
@@ -36,7 +36,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from airbnb_cdc_spark.operators.merge import BUCKET_COL, ParquetMergeTable, _fs
+from airbnb_cdc_spark.operators.merge import (
+    BUCKET_COL,
+    ParquetMergeTable,
+    _fs,
+    _schema_of,
+)
 
 SEQ_COL = "_cdf_seq"
 TYPE_COL = "_change_type"
@@ -110,28 +115,29 @@ class ChangeCapturingMergeTable:
         finally:
             out.close()
 
-    def _affected(self, keys_df: DataFrame) -> DataFrame:
-        """Current rows for the given keys, bucket-pruned like merge."""
-        if not self.table._has_buckets():
-            schema = self.table._load_schema()
-            if schema is not None:
-                return self.spark.createDataFrame([], schema)
+    def _affected(self, keys_df: DataFrame) -> DataFrame | None:
+        """Current rows for the given keys, bucket-pruned like merge;
+        None for a table never committed."""
+        table = self.table
+        entry = table._snapshot()
+        if entry is None:
             return None
-        keyed = keys_df.select(*self.table.keys).dropDuplicates(self.table.keys)
-        touched = sorted(
+        # _conform: keys of another integral width would hash to other
+        # buckets than the ones the merge rewrites
+        keyed = table._conform(keys_df.select(*table.keys), entry).dropDuplicates(
+            table.keys
+        )
+        touched = {
             r[0]
-            for r in keyed.withColumn(BUCKET_COL, self.table._bucket_expr())
+            for r in keyed.withColumn(BUCKET_COL, table._bucket_expr())
             .select(BUCKET_COL)
             .distinct()
             .collect()
-        )
-        # _read_raw(touched): sidecar schema when present (skips the
-        # per-file footer read mergeSchema inference pays) and lists
-        # only the touched bucket directories
+        }
         return (
-            self.table._read_raw(touched)
+            table._scan(entry, touched)
             .drop(BUCKET_COL)
-            .join(F.broadcast(keyed), self.table.keys, "leftsemi")
+            .join(F.broadcast(keyed), table.keys, "leftsemi")
         )
 
     def _emit(self, changes: DataFrame) -> None:
@@ -295,10 +301,10 @@ class ChangeCapturingMergeTable:
         # A zero-row _emit (idempotent retry, delete of absent keys)
         # leaves the feed dir with no seq partitions — same as no feed.
         if not self._seq_dirs():
-            schema = self.table._load_schema()
-            empty = self.spark.createDataFrame([], schema) if schema else None
-            if empty is None:
-                raise ValueError("no change feed and no schema sidecar")
+            entry = self.table._snapshot()
+            if entry is None:
+                raise ValueError("no change feed and no committed table")
+            empty = self.spark.createDataFrame([], _schema_of(entry))
             return empty.withColumn(TYPE_COL, F.lit("")).withColumn(
                 SEQ_COL, F.lit(0)
             ).limit(0)

@@ -17,9 +17,10 @@ standard bilinear identity Δ(A ⋈ B) = ΔA ⋈ B ∪ A ⋈ ΔB:
   view itself stays bucket-pruned either way).
 
 The view is a ``ParquetMergeTable`` keyed by the fact key, so refresh
-is idempotent (last-writer-wins under ``version_col``) and both delta
-paths commute with retries — the same guarantees the CDC sink relies
-on (operators/merge.py).
+is idempotent (last-writer-wins under ``version_col``), both delta
+paths commute with retries, and each refresh is one commit of the
+table's log — the same guarantees the CDC sink relies on
+(operators/merge.py).
 
 ``dim`` inputs must be one-row-per-join-key (pre-dedup with
 ``lookup.latest_per_key`` when the dim itself is a change feed). Dim
@@ -40,16 +41,12 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from airbnb_cdc_spark.operators.merge import create_merge_table
+from airbnb_cdc_spark.operators.merge import ParquetMergeTable
 
 
 class MaterializedJoinView:
     """FACT ⋈ DIM (left join on ``join_key``), stored keyed by
-    ``fact_keys`` and maintained by delta.
-
-    The view table comes from ``create_merge_table`` — Delta (atomic
-    commits) where the jar exists, the bucketed parquet shim otherwise;
-    ``backend`` forces a choice."""
+    ``fact_keys`` and maintained by delta."""
 
     def __init__(
         self,
@@ -59,17 +56,11 @@ class MaterializedJoinView:
         join_key: str,
         version_col: str | None = None,
         num_buckets: int = 16,
-        backend: str = "auto",
     ) -> None:
         self.spark = spark
         self.join_key = join_key
-        self.table = create_merge_table(
-            spark,
-            path,
-            fact_keys,
-            version_col=version_col,
-            num_buckets=num_buckets,
-            backend=backend,
+        self.table = ParquetMergeTable(
+            spark, path, fact_keys, version_col=version_col, num_buckets=num_buckets
         )
 
     def _enrich(self, fact: DataFrame, dim: DataFrame) -> DataFrame:

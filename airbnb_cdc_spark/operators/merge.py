@@ -22,12 +22,24 @@ Design for 100 TB:
   same partitioning feeds the bucket-partitioned write, so each touched
   bucket is written as one file. The only other job is the probe: a
   distinct over the update keys' bucket ids.
-- Writes go to a temp directory first and are swapped in per-bucket
-  (write-temp-then-rename), so a reader never sees a half-written bucket
-  and the merge never reads its own output (SURVEY.md §7 "what's hard"
-  (a)). Renames use the Hadoop FileSystem API so the same code runs on
-  HDFS; on S3 you'd back this with Delta/Iceberg instead (rename is not
-  atomic there).
+- Every change commits through one log, the metadata log Structured
+  Streaming uses for exactly-once file sinks and the shape of Delta's
+  ``_delta_log``. Data only ever lands in new directories
+  ``<table>/_bucket=b/_c=<commit id>/``, which no reader sees until a
+  log entry names them. The commit is the creation of
+  ``<table>/_log/<N>.json``, holding ``num_buckets``, the schema and
+  each bucket's live directory; readers take the largest ``N``. After
+  the commit, GC deletes the directories and log entries the new entry
+  no longer names. A crash at any step leaves the table reading as
+  exactly the state before or after the operation (the merge never
+  reads its own output, SURVEY.md §7 "what's hard" (a)), and the next
+  commit's GC removes whatever the crash left behind.
+- The entry is written under a temp name inside ``_log`` and renamed,
+  and a writer that finds ``N`` taken raises (one writer per table), so
+  the protocol rests on one small file's create-if-absent. The Hadoop
+  FileSystem API gives that on HDFS and local disks. On S3, where rename
+  is a copy, the entry needs the store's conditional put (Delta's S3
+  log store does the same); the data path never renames.
 
 Semantics: MERGE ... WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN
 INSERT * — whole-row replace on key equality. With ``version_col`` set,
@@ -36,20 +48,43 @@ and *across* batches (an update older than the stored row is discarded;
 ties go to the update) — so out-of-order CDC arrivals are absorbed
 without watermarks, exactly the reference's ``desc(updated_at)`` stance.
 Without ``version_col``, updates unconditionally replace matched rows.
+
+Types: the log entry's schema decides. Incoming keys and columns are
+cast to the stored type when every value survives the cast
+(``int``→``bigint``); any other mismatch raises before a job runs. A key
+of another type would hash to another bucket and insert a duplicate; a
+column of another type would leave files the table cannot read.
 """
 
 from __future__ import annotations
 
+import json
+import re
 import uuid
 from collections.abc import Sequence
+from types import SimpleNamespace
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from airbnb_cdc_spark.operators.lookup import latest_per_key
 from airbnb_cdc_spark.session import sql_ident
 
 BUCKET_COL = "_bucket"
+COMMIT_COL = "_c"
+LOG_DIR = "_log"
+
+# Matches in a Hadoop path array printed by commons-lang3's
+# ArrayUtils.toString: "{file:/t/_bucket=3/_c=v2-9f1c,file:/t/_log/2.json}".
+_DATA_DIR = re.compile(rf"/({BUCKET_COL}=(\d+)/{COMMIT_COL}=([^/,}}]+))(?=[,}}])")
+_LOG_FILE = re.compile(rf"/{LOG_DIR}/([^/,}}]+)(?=[,}}])")
+_ENTRY = re.compile(r"(\d+)\.json")
+_GLOB_CHARS = re.compile(r"([{}\[\]*?\\])")
+
+# Decimal digits each integral type needs (Spark's DecimalType.forType).
+_DIGITS = {T.ByteType: 3, T.ShortType: 5, T.IntegerType: 10, T.LongType: 20}
 
 
 def suggest_num_buckets(
@@ -120,6 +155,32 @@ def _rename_or_raise(fs, src, dst) -> None:
         raise IOError(f"filesystem rename failed: {src} -> {dst}")
 
 
+def _schema_of(entry: dict) -> T.StructType:
+    return T.StructType.fromJson(entry["schema"])
+
+
+def _widens(src: T.DataType, dst: T.DataType) -> bool:
+    """True when every ``src`` value has an exact ``dst`` value."""
+    if isinstance(src, T.NullType):
+        return True
+    digits = _DIGITS.get(type(src))
+    if digits is not None:
+        if type(dst) in _DIGITS:
+            return digits <= _DIGITS[type(dst)]
+        if isinstance(dst, T.DecimalType):
+            return dst.precision - dst.scale >= digits
+        # 53-bit and 24-bit mantissas: int fits a double, short a float
+        return digits <= {T.DoubleType: 10, T.FloatType: 5}.get(type(dst), 0)
+    if isinstance(src, T.FloatType):
+        return isinstance(dst, T.DoubleType)
+    if isinstance(src, T.DecimalType) and isinstance(dst, T.DecimalType):
+        return (
+            dst.scale >= src.scale
+            and dst.precision - dst.scale >= src.precision - src.scale
+        )
+    return False
+
+
 class ParquetMergeTable:
     """A keyed, hash-bucketed parquet table supporting MERGE-style upsert."""
 
@@ -136,6 +197,7 @@ class ParquetMergeTable:
         self.keys = list(keys)
         self.version_col = version_col
         self.num_buckets = num_buckets
+        self._hadoop_io = None
 
     # -- storage helpers ---------------------------------------------------
 
@@ -146,185 +208,210 @@ class ParquetMergeTable:
     def _bucket_expr(self):
         return F.expr(self._bucket_sql())
 
-    def exists(self) -> bool:
-        fs, jpath = _fs(self.spark, self.path)
-        return bool(fs.exists(jpath))
-
-    # Schema sidecar: lets read() return a typed empty frame when every
-    # row (hence every bucket dir) has been deleted. Spark ignores
-    # underscore-prefixed files in the table dir.
-    def _schema_path(self) -> str:
-        return f"{self.path}/_schema.json"
-
-    # num_buckets sidecar: the bucket expression is pmod(hash, N) — a
-    # reattach with a DIFFERENT N would route an existing key to a
-    # bucket the merge never reads, silently inserting duplicates
-    # instead of upserting. The table remembers its N and refuses a
-    # mismatched handle.
-    def _meta_path(self) -> str:
-        return f"{self.path}/_table_meta.json"
-
-    def _save_meta(self) -> None:
-        fs, _ = _fs(self.spark, self.path)
-        Path = self.spark._jvm.org.apache.hadoop.fs.Path
-        out = fs.create(Path(self._meta_path()), True)
-        out.write(
-            bytearray(
-                __import__("json").dumps({"num_buckets": self.num_buckets}),
-                "utf-8",
+    def _hadoop(self) -> SimpleNamespace:
+        """The table's FileSystem and the JVM classes the log uses,
+        resolved once per handle: through py4j every segment of a class
+        lookup (``jvm.org.apache...``) is a round trip."""
+        if self._hadoop_io is None:
+            client = self.spark._jvm._gateway_client
+            self._hadoop_io = SimpleNamespace(
+                fs=_fs(self.spark, self.path)[0],
+                Path=JavaClass("org.apache.hadoop.fs.Path", client),
+                FileUtil=JavaClass("org.apache.hadoop.fs.FileUtil", client),
+                ArrayUtils=JavaClass("org.apache.commons.lang3.ArrayUtils", client),
+                IOUtils=JavaClass("org.apache.hadoop.io.IOUtils", client),
             )
+        return self._hadoop_io
+
+    def _glob(self, pattern: str) -> str:
+        """The paths matching ``pattern`` under the table root, printed
+        as one Java array: a fixed number of py4j round trips however
+        many paths match."""
+        j = self._hadoop()
+        root = _GLOB_CHARS.sub(r"\\\1", self.path)
+        return j.ArrayUtils.toString(
+            j.FileUtil.stat2Paths(j.fs.globStatus(j.Path(f"{root}/{pattern}")))
         )
-        out.close()
 
-    def _check_meta(self) -> None:
-        fs, _ = _fs(self.spark, self.path)
-        Path = self.spark._jvm.org.apache.hadoop.fs.Path
-        p = Path(self._meta_path())
-        if not fs.exists(p):
-            # pre-meta table: adopt the current handle's N and record it
-            if self.exists():
-                self._save_meta()
-            return
-        stream = fs.open(p)
-        try:
-            data = bytes(
-                self.spark._jvm.org.apache.hadoop.io.IOUtils.readFullyToByteArray(
-                    stream
+    def _log_files(self) -> list[str]:
+        return _LOG_FILE.findall(self._glob(f"{LOG_DIR}/*"))
+
+    def _snapshot(self) -> dict | None:
+        """The newest log entry; None for a table never committed."""
+        versions = [
+            int(m[1]) for m in map(_ENTRY.fullmatch, self._log_files()) if m
+        ]
+        if not versions:
+            if self._glob(f"{BUCKET_COL}=*/*.parquet") != "{}":
+                raise ValueError(
+                    f"{self.path} holds bucket files but no {LOG_DIR}/ commit "
+                    "log; it is not a merge table this code can read or write"
                 )
-            )
+            return None
+        j = self._hadoop()
+        stream = j.fs.open(j.Path(f"{self.path}/{LOG_DIR}/{max(versions)}.json"))
+        try:
+            data = bytes(j.IOUtils.readFullyToByteArray(stream))
         finally:
             stream.close()
-        stored = __import__("json").loads(data.decode("utf-8"))["num_buckets"]
-        if stored != self.num_buckets:
+        return json.loads(data.decode("utf-8"))
+
+    def exists(self) -> bool:
+        return self._snapshot() is not None
+
+    def _conform(self, df: DataFrame, entry: dict) -> DataFrame:
+        """``df`` checked against the committed table before any job
+        runs: the handle's bucket count must be the table's, and each
+        column the table stores is cast to the stored type when no value
+        changes; any other type mismatch raises, naming the column."""
+        if entry["num_buckets"] != self.num_buckets:
             raise ValueError(
                 f"table at {self.path} was created with num_buckets="
-                f"{stored}; this handle has {self.num_buckets} — a merge "
-                "would route existing keys to unread buckets and insert "
-                "duplicates (run compact() via a correctly-configured "
+                f"{entry['num_buckets']}; this handle has {self.num_buckets} "
+                "— a merge would route existing keys to unread buckets and "
+                "insert duplicates (run compact() via a correctly-configured "
                 "handle to change the bucket count)"
             )
-
-    def _save_schema(self, df: DataFrame) -> None:
-        fs, _ = _fs(self.spark, self.path)
-        Path = self.spark._jvm.org.apache.hadoop.fs.Path
-        out = fs.create(Path(self._schema_path()), True)
-        out.write(bytearray(df.schema.json(), "utf-8"))
-        out.close()
-
-    def _load_schema(self):
-        from pyspark.sql import types as T
-
-        fs, _ = _fs(self.spark, self.path)
-        Path = self.spark._jvm.org.apache.hadoop.fs.Path
-        p = Path(self._schema_path())
-        if not fs.exists(p):
-            return None
-        stream = fs.open(p)
-        try:
-            data = bytes(
-                self.spark._jvm.org.apache.hadoop.io.IOUtils.readFullyToByteArray(stream)
-            )
-        finally:
-            stream.close()
-        return T.StructType.fromJson(__import__("json").loads(data.decode("utf-8")))
-
-    def _has_buckets(self) -> bool:
-        fs, jpath = _fs(self.spark, self.path)
-        if not fs.exists(jpath):
-            return False
-        for status in fs.listStatus(jpath):
-            if status.getPath().getName().startswith(f"{BUCKET_COL}="):
-                return True
-        return False
-
-    def _existing_buckets(self) -> set[int]:
-        """Bucket ids present on disk — ONE listing of the table root
-        (driver-side metadata, <= num_buckets entries)."""
-        fs, jpath = _fs(self.spark, self.path)
-        if not fs.exists(jpath):
-            return set()
-        out = set()
-        for status in fs.listStatus(jpath):
-            name = status.getPath().getName()
-            if name.startswith(f"{BUCKET_COL}="):
-                out.add(int(name.split("=", 1)[1]))
-        return out
-
-    def _read_raw(self, touched: list[int] | None = None) -> DataFrame:
-        """Table scan WITH the bucket partition column; with ``touched``
-        set, ONLY those bucket directories are even LISTED.
-
-        Two fixed costs that would otherwise scale with num_buckets
-        rather than with the delta a merge touches (both measured to
-        dominate small-delta merges at 1024 buckets):
-        - schema: the sidecar (authoritative — rewritten on every
-          overwrite and every evolving merge) is passed explicitly when
-          present, skipping mergeSchema's every-file footer read;
-          pre-sidecar tables fall back to mergeSchema inference.
-        - file listing: a basePath read + isin filter still runs
-          partition DISCOVERY over every bucket directory before
-          pruning (on an object store, one LIST per bucket); passing
-          the touched directories as explicit paths lists only those.
-        """
-        from pyspark.sql import types as T
-
-        reader = self.spark.read.option("basePath", self.path)
-        schema = self._load_schema()
-        if schema is not None:
-            reader = reader.schema(
-                T.StructType(
-                    list(schema.fields)
-                    + [T.StructField(BUCKET_COL, T.IntegerType())]
+        stored = {f.name.lower(): f.dataType for f in _schema_of(entry).fields}
+        cols, cast = [], False
+        for f in df.schema.fields:
+            want = stored.get(f.name.lower())
+            name = sql_ident(f.name)
+            if want is None or want.simpleString() == f.dataType.simpleString():
+                cols.append(name)
+            elif _widens(f.dataType, want):
+                cols.append(f"CAST({name} AS {want.simpleString()}) AS {name}")
+                cast = True
+            else:
+                raise ValueError(
+                    f"column {f.name!r} is {f.dataType.simpleString()} but the "
+                    f"table at {self.path} stores {want.simpleString()}; cast "
+                    "it first (only casts that lose no value are applied)"
                 )
+        return df.selectExpr(*cols) if cast else df
+
+    def _scan(self, entry: dict, buckets: set[int] | None = None) -> DataFrame:
+        """The committed rows of ``buckets`` (all when None), with
+        ``_bucket``. Only the live directories the entry names are
+        listed, and the entry's schema is passed, so no file footer is
+        read for inference; files written before a widening merge read
+        NULL in the columns they lack."""
+        schema = _schema_of(entry)
+        dirs = [
+            d
+            for b, d in sorted(entry["buckets"].items())
+            if buckets is None or int(b) in buckets
+        ]
+        if not dirs:
+            return self.spark.createDataFrame([], schema).withColumn(
+                BUCKET_COL, F.lit(None).cast("int")
             )
-        else:
-            reader = reader.option("mergeSchema", "true")
-        if touched is None:
-            return reader.parquet(self.path)
-        # An insert-only delta hashes keys to buckets with no directory
-        # yet; reading a missing path raises, so intersect first.
-        present = sorted(set(touched) & self._existing_buckets())
-        if not present:
-            if schema is not None:
-                return self.spark.createDataFrame([], schema).withColumn(
-                    BUCKET_COL, F.lit(None).cast("int")
-                )
-            return reader.parquet(self.path).filter(F.lit(False))
-        return reader.parquet(
-            *[f"{self.path}/{BUCKET_COL}={b}" for b in present]
+        full = T.StructType(
+            schema.fields
+            + [
+                T.StructField(BUCKET_COL, T.IntegerType()),
+                T.StructField(COMMIT_COL, T.StringType()),
+            ]
+        )
+        return (
+            self.spark.read.schema(full)
+            .option("basePath", self.path)
+            .parquet(*[f"{self.path}/{d}" for d in dirs])
+            .drop(COMMIT_COL)
         )
 
     def read(self) -> DataFrame:
         """Current table contents (bucket column stripped)."""
-        if not self._has_buckets():
-            schema = self._load_schema()
-            if schema is not None:
-                return self.spark.createDataFrame([], schema)
-        return self._read_raw().drop(BUCKET_COL)
+        entry = self._snapshot()
+        if entry is None:
+            raise ValueError(f"no merge table at {self.path}")
+        return self._scan(entry).drop(BUCKET_COL)
 
-    def _write_bucketed(self, df: DataFrame, dest: str) -> None:
+    # -- commit ------------------------------------------------------------
+
+    def _write_commit(
+        self,
+        entry: dict | None,
+        df: DataFrame,
+        schema: T.StructType,
+        replaced: set[int] | None,
+    ) -> None:
+        """Land ``df`` (with ``_bucket``, one partition per bucket) as
+        new directories, commit the log entry after ``entry``, then GC.
+        The new entry keeps the live directories of the buckets outside
+        ``replaced`` (None: none are kept) and names the new ones."""
+        version = 0 if entry is None else entry["version"] + 1
+        cid = f"v{version}-{uuid.uuid4().hex[:8]}"
         (
-            df.withColumn(BUCKET_COL, self._bucket_expr())
-            .repartition(BUCKET_COL)
-            .write.partitionBy(BUCKET_COL)
-            .mode("overwrite")
-            .parquet(dest)
+            df.withColumn(COMMIT_COL, F.lit(cid))
+            .write.partitionBy(BUCKET_COL, COMMIT_COL)
+            .mode("append")
+            .parquet(self.path)
         )
+        on_disk = _DATA_DIR.findall(self._glob(f"{BUCKET_COL}=*/{COMMIT_COL}=*"))
+        live = (
+            {}
+            if entry is None or replaced is None
+            else {b: d for b, d in entry["buckets"].items() if int(b) not in replaced}
+        )
+        live.update({b: d for d, b, c in on_disk if c == cid})
+        new = {
+            "version": version,
+            "num_buckets": self.num_buckets,
+            "schema": schema.jsonValue(),
+            "buckets": live,
+        }
+        self._commit(new)
+        self._gc(new, on_disk)
+
+    def _commit(self, entry: dict) -> None:
+        """Publish ``entry`` as ``_log/<version>.json``. It is written
+        under a temp name in ``_log`` and renamed, so no reader sees half
+        an entry; a version already taken raises rather than overwrite
+        another writer's commit."""
+        j = self._hadoop()
+        final = f"{self.path}/{LOG_DIR}/{entry['version']}.json"
+        tmp = j.Path(f"{final}.{uuid.uuid4().hex[:8]}.tmp")
+        out = j.fs.create(tmp, False)
+        try:
+            out.write(bytearray(json.dumps(entry), "utf-8"))
+        finally:
+            out.close()
+        if j.fs.exists(j.Path(final)):
+            raise FileExistsError(
+                f"log version {entry['version']} of {self.path} is already "
+                "committed: a merge table takes one writer at a time"
+            )
+        _rename_or_raise(j.fs, tmp, j.Path(final))
+
+    def _gc(self, entry: dict, on_disk: list[tuple]) -> None:
+        """Delete what ``entry`` no longer names: superseded or stranded
+        data directories (a bucket the entry lacks goes whole) and every
+        other file in ``_log``."""
+        j = self._hadoop()
+        live = entry["buckets"]
+        doomed = {
+            d if b in live else f"{BUCKET_COL}={b}"
+            for d, b, _ in on_disk
+            if live.get(b) != d
+        }
+        doomed.update(
+            f"{LOG_DIR}/{name}"
+            for name in self._log_files()
+            if name != f"{entry['version']}.json"
+        )
+        for rel in sorted(doomed):
+            j.fs.delete(j.Path(f"{self.path}/{rel}"), True)
 
     def overwrite(self, df: DataFrame) -> None:
-        """Full truncate-and-reload (O8) via temp-dir + swap."""
-        tmp = f"{self.path}__tmp_{uuid.uuid4().hex[:8]}"
-        self._write_bucketed(df, tmp)
-        fs, jpath = _fs(self.spark, self.path)
-        _, jtmp = _fs(self.spark, tmp)
-        if fs.exists(jpath):
-            fs.delete(jpath, True)
-        # raise on a false-returning rename: the old table is already
-        # gone, and proceeding to _save_schema would leave a path that
-        # READS as a valid empty table with the data stranded in tmp
-        _rename_or_raise(fs, jtmp, jpath)
-        self._save_schema(df)
-        self._save_meta()
+        """Full truncate-and-reload (O8): the new files land beside the
+        old ones and one commit replaces the whole table."""
+        self._write_commit(
+            self._snapshot(),
+            df.withColumn(BUCKET_COL, self._bucket_expr()).repartition(BUCKET_COL),
+            df.schema,
+            None,
+        )
 
     # -- merge -------------------------------------------------------------
 
@@ -335,15 +422,14 @@ class ParquetMergeTable:
         ``allow_schema_evolution`` is the reference's ``allowSchemaDrift``
         / Delta ``mergeSchema``: new columns in ``updates`` widen the
         table schema (existing rows get NULL); untouched buckets keep the
-        old files — parquet's per-file schema plus ``mergeSchema`` on
-        read reconciles them, exactly how Delta evolves in place. After a
-        table has evolved, a merge whose updates *lack* the evolved
+        old files, which the widened schema in the log entry reads with
+        NULL in the new columns, exactly how Delta evolves in place. After
+        a table has evolved, a merge whose updates *lack* the evolved
         columns fails fast (S5 contract) unless
         ``allow_schema_evolution=True``, which fills them with NULL."""
-        self._check_meta()
-        if not self._has_buckets():
-            # Missing table, or one whose every row was deleted (only the
-            # _schema.json sidecar remains) — either way a fresh load.
+        entry = self._snapshot()
+        if entry is None:
+            # A table never committed: a fresh load.
             if self.version_col is not None:
                 updates = latest_per_key(updates, self.keys, self.version_col)
             else:
@@ -351,6 +437,7 @@ class ParquetMergeTable:
             self.overwrite(updates)
             return
 
+        updates = self._conform(updates, entry)
         # Tiny collect: at most num_buckets ints — drives partition
         # pruning. A key's bucket depends only on the key, so the raw
         # (not yet deduplicated) keys touch the same buckets.
@@ -363,18 +450,20 @@ class ParquetMergeTable:
         if not touched:
             return
 
-        merged = self._rewrite(updates, touched, allow_schema_evolution)
-        tmp = f"{self.path}__tmp_{uuid.uuid4().hex[:8]}"
-        merged.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(tmp)
-        self._swap_buckets(tmp, touched)
-        if allow_schema_evolution:
-            # Only once the rewritten buckets are in place: a sidecar
-            # written before a failed rewrite would claim columns no
-            # file has, and every later plain merge would fail S5.
-            self._save_schema(merged.drop(BUCKET_COL))
+        merged = self._rewrite(entry, updates, touched, allow_schema_evolution)
+        schema = (
+            merged.drop(BUCKET_COL).schema
+            if allow_schema_evolution
+            else _schema_of(entry)
+        )
+        self._write_commit(entry, merged, schema, set(touched))
 
     def _rewrite(
-        self, updates: DataFrame, touched: list[int], allow_schema_evolution: bool
+        self,
+        entry: dict,
+        updates: DataFrame,
+        touched: list[int],
+        allow_schema_evolution: bool,
     ) -> DataFrame:
         """The rewritten contents of the ``touched`` buckets, with
         ``_bucket``: stored rows and ALL update rows (in-batch duplicates
@@ -388,11 +477,7 @@ class ParquetMergeTable:
         the max whole-row struct of the update's non-key columns picks
         among in-batch duplicates — ``dedup_keys_deterministic``'s
         partitioning-independent survivor."""
-        # _read_raw: the sidecar schema (or mergeSchema fallback) keeps
-        # evolved buckets readable — plain inference would pick an
-        # arbitrary file and could silently drop the evolved column
-        # from whichever bucket this merge rewrites.
-        current = self._read_raw(touched)
+        current = self._scan(entry, set(touched))
         table_cols = current.columns
         upd_cols = updates.columns
         if not allow_schema_evolution:
@@ -437,54 +522,41 @@ class ParquetMergeTable:
             .selectExpr(*map(sql_ident, out_cols))
         )
 
-    def _swap_buckets(self, tmp: str, touched: list[int]) -> None:
-        fs, _ = _fs(self.spark, self.path)
-        Path = self.spark._jvm.org.apache.hadoop.fs.Path
-        for b in touched:
-            src = Path(f"{tmp}/{BUCKET_COL}={b}")
-            dst = Path(f"{self.path}/{BUCKET_COL}={b}")
-            if fs.exists(dst):
-                fs.delete(dst, True)
-            if fs.exists(src):
-                # a false-returning rename here would lose bucket b
-                # entirely once the tmp delete below runs
-                _rename_or_raise(fs, src, dst)
-        fs.delete(Path(tmp), True)
-
     def delete(self, keys_df: DataFrame) -> None:
         """CDC delete: remove rows whose key appears in ``keys_df``.
         (Beyond the reference — its sink declares ``deletable: false`` —
         but a complete CDC engine needs the tombstone path.) Same
         bucket-pruned rewrite as merge."""
-        if not self._has_buckets():
+        entry = self._snapshot()
+        if entry is None:
             return
-        self._check_meta()
-        keyed = keys_df.select(*self.keys).dropDuplicates(self.keys)
-        keyed = keyed.withColumn(BUCKET_COL, self._bucket_expr())
-        touched = sorted(r[0] for r in keyed.select(BUCKET_COL).distinct().collect())
+        keyed = self._conform(keys_df.select(*self.keys), entry)
+        keyed = keyed.dropDuplicates(self.keys).withColumn(
+            BUCKET_COL, self._bucket_expr()
+        )
+        # only buckets holding rows can lose any
+        touched = {
+            r[0] for r in keyed.select(BUCKET_COL).distinct().collect()
+        } & {int(b) for b in entry["buckets"]}
         if not touched:
             return
-        kept = self._read_raw(touched).join(
+        kept = self._scan(entry, touched).join(
             keyed.select(*self.keys), on=self.keys, how="left_anti"
         )
-        tmp = f"{self.path}__tmp_{uuid.uuid4().hex[:8]}"
-        (
-            kept.repartition(BUCKET_COL)
-            .write.partitionBy(BUCKET_COL)
-            .mode("overwrite")
-            .parquet(tmp)
+        # A bucket whose every row was deleted writes no directory, so
+        # the new entry drops it.
+        self._write_commit(
+            entry, kept.repartition(BUCKET_COL), _schema_of(entry), touched
         )
-        # A bucket whose every row was deleted produces no tmp dir; swap
-        # still removes the old dir so the deletion takes effect.
-        self._swap_buckets(tmp, touched)
 
     def compact(self) -> None:
         """Full rewrite into fresh single-file buckets (Delta OPTIMIZE
         analog). Merges already replace whole bucket dirs, so files don't
         accumulate per merge; compact matters after changing
         ``num_buckets`` or to re-sort/re-encode cold data."""
-        if self.exists():
-            self.overwrite(self.read())
+        entry = self._snapshot()
+        if entry is not None:
+            self.overwrite(self._scan(entry).drop(BUCKET_COL))
 
 
 class Scd2MergeTable(ParquetMergeTable):
@@ -551,28 +623,27 @@ class Scd2MergeTable(ParquetMergeTable):
         """Historizing merge. ``updates``: key + attribute columns +
         ``ts_col``. Schema evolution is not supported for SCD2 (closed
         history would need backfilling) — the flag is accepted for
-        interface parity and must be False."""
-        assert not allow_schema_evolution, "SCD2 merge does not evolve schemas"
-        # Same bucket-count guard as ParquetMergeTable.merge: a handle
-        # with a mismatched num_buckets would route existing keys to
-        # unread buckets and duplicate open SCD2 rows (delete() inherits
-        # the check; this override must apply it itself).
-        self._check_meta()
+        interface parity and raises ``ValueError`` when set."""
+        if allow_schema_evolution:
+            raise ValueError(
+                "SCD2 merge does not evolve schemas: closed history would "
+                "need backfilling"
+            )
+        entry = self._snapshot()
         attrs = self._attr_cols(updates)
         fresh = updates.select(
             *self.keys, F.col(self.ts_col).alias("valid_from"), *attrs
         )
-        if not self._has_buckets():
+        if entry is None:
             self.overwrite(self._build_history(fresh, attrs))
             return
 
+        fresh = self._conform(fresh, entry)
         fresh_b = fresh.withColumn(BUCKET_COL, self._bucket_expr())
-        touched = sorted(
-            r[0] for r in fresh_b.select(BUCKET_COL).distinct().collect()
-        )
+        touched = {r[0] for r in fresh_b.select(BUCKET_COL).distinct().collect()}
         if not touched:
             return
-        current = self._read_raw(touched)
+        current = self._scan(entry, touched)
         closed = current.filter(F.col("is_current") == 0).drop(BUCKET_COL)
         open_rows = current.filter(F.col("is_current") == 1).select(
             *self.keys, "valid_from", *attrs
@@ -596,163 +667,6 @@ class Scd2MergeTable(ParquetMergeTable):
         merged = closed.unionByName(hist.select(closed.columns)).withColumn(
             BUCKET_COL, self._bucket_expr()
         )
-        tmp = f"{self.path}__tmp_{uuid.uuid4().hex[:8]}"
-        (
-            merged.repartition(BUCKET_COL)
-            .write.partitionBy(BUCKET_COL)
-            .mode("overwrite")
-            .parquet(tmp)
+        self._write_commit(
+            entry, merged.repartition(BUCKET_COL), _schema_of(entry), touched
         )
-        self._swap_buckets(tmp, touched)
-
-
-# ---------------------------------------------------------------------------
-# Delta Lake backend (feature-detected).
-#
-# The parquet shim above is correct on HDFS/local but its bucket-dir
-# rename swap is NOT atomic on object stores (S3 rename = copy+delete) —
-# the one acknowledged design gap vs the reference's transactional
-# Synapse upsert (pipeline/New_LoadCustomerDim.json:82-92). When
-# delta-spark is on the classpath, `create_merge_table` returns a
-# DeltaMergeTable instead: Delta's commit protocol gives atomic,
-# S3-safe MERGE with the same file-skipping economics the bucket shim
-# hand-rolls. The container this repo is developed in has no Delta jar,
-# so the class is exercised through the same test suite with Delta legs
-# skipped when the import fails — the parquet shim remains the default
-# and fully-tested path.
-# ---------------------------------------------------------------------------
-
-
-def delta_available(spark: SparkSession | None = None) -> bool:
-    """True when the delta-spark Python package AND its jar are usable.
-    The package can be pip-installed without the jar being on the Spark
-    classpath, so probe the JVM class too when a session is given."""
-    try:
-        import delta  # noqa: F401
-    except ImportError:
-        return False
-    if spark is None:
-        return True
-    try:
-        # Class.forName, not bare attribute access: py4j answers any
-        # unknown FQN with a JavaPackage instead of raising, so the old
-        # probe returned True with no jar on the classpath and auto
-        # backend selection then crashed on first use.
-        spark._jvm.java.lang.Class.forName("org.apache.spark.sql.delta.DeltaLog")
-        return True
-    except Exception:
-        return False
-
-
-class DeltaMergeTable:
-    """`ParquetMergeTable`-compatible surface over a Delta table:
-    MERGE INTO / DELETE / OPTIMIZE through Delta's transaction log, so
-    commits are atomic on any store. Bucketing is unnecessary — Delta's
-    data skipping (file stats + optional Z-order) plays the role of the
-    shim's bucket pruning; ``num_buckets`` is accepted and ignored for
-    interface parity."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        keys: Sequence[str],
-        version_col: str | None = None,
-        num_buckets: int = 16,  # noqa: ARG002 — parity with the shim
-    ) -> None:
-        from delta.tables import DeltaTable  # noqa: F401 — import guard
-
-        self.spark = spark
-        self.path = path.rstrip("/")
-        self.keys = list(keys)
-        self.version_col = version_col
-
-    def _delta(self):
-        from delta.tables import DeltaTable
-
-        return DeltaTable.forPath(self.spark, self.path)
-
-    def exists(self) -> bool:
-        from delta.tables import DeltaTable
-
-        return bool(DeltaTable.isDeltaTable(self.spark, self.path))
-
-    def read(self) -> DataFrame:
-        return self.spark.read.format("delta").load(self.path)
-
-    def overwrite(self, df: DataFrame) -> None:
-        (
-            df.write.format("delta")
-            .mode("overwrite")
-            .option("overwriteSchema", "true")
-            .save(self.path)
-        )
-
-    def merge(self, updates: DataFrame, allow_schema_evolution: bool = False) -> None:
-        """MERGE INTO with the shim's exact semantics: whole-row replace
-        on key equality, last-writer-wins on ``version_col`` within the
-        batch (pre-dedup) and across batches (conditional UPDATE —
-        stale updates are discarded, ties go to the update)."""
-        if self.version_col is not None:
-            updates = latest_per_key(updates, self.keys, self.version_col)
-        else:
-            updates = dedup_keys_deterministic(updates, self.keys)
-        if not self.exists():
-            self.overwrite(updates)
-            return
-        cond = " AND ".join(f"t.`{k}` = s.`{k}`" for k in self.keys)
-        builder = self._delta().alias("t").merge(updates.alias("s"), cond)
-        if allow_schema_evolution:
-            builder = builder.withSchemaEvolution()
-        if self.version_col is not None:
-            builder = builder.whenMatchedUpdateAll(
-                # OR t.version IS NULL: the shim's desc_nulls_last
-                # ordering lets a real version displace a NULL-version
-                # stored row (malformed-timestamp ingests); a bare >=
-                # evaluates NULL there and would keep the stale row
-                # forever — same table, different backend, different
-                # contents.
-                condition=(
-                    f"s.`{self.version_col}` >= t.`{self.version_col}` "
-                    f"OR t.`{self.version_col}` IS NULL"
-                )
-            )
-        else:
-            builder = builder.whenMatchedUpdateAll()
-        builder.whenNotMatchedInsertAll().execute()
-
-    def delete(self, keys_df: DataFrame) -> None:
-        if not self.exists():
-            return
-        keyed = keys_df.select(*self.keys).dropDuplicates(self.keys)
-        cond = " AND ".join(f"t.`{k}` = s.`{k}`" for k in self.keys)
-        (
-            self._delta()
-            .alias("t")
-            .merge(keyed.alias("s"), cond)
-            .whenMatchedDelete()
-            .execute()
-        )
-
-    def compact(self) -> None:
-        self._delta().optimize().executeCompaction()
-
-
-def create_merge_table(
-    spark: SparkSession,
-    path: str,
-    keys: Sequence[str],
-    version_col: str | None = None,
-    num_buckets: int = 16,
-    backend: str = "auto",
-):
-    """Factory: ``backend='auto'`` picks Delta when available (atomic
-    commits — the right choice on object stores), else the bucketed
-    parquet shim; ``'delta'``/``'parquet'`` force a backend."""
-    if backend == "auto":
-        backend = "delta" if delta_available(spark) else "parquet"
-    if backend == "delta":
-        return DeltaMergeTable(spark, path, keys, version_col, num_buckets)
-    if backend == "parquet":
-        return ParquetMergeTable(spark, path, keys, version_col, num_buckets)
-    raise ValueError(f"unknown backend {backend!r}; use 'auto', 'delta' or 'parquet'")

@@ -156,9 +156,7 @@ def run_all_incremental(
             version_col="updated_at",
         )
     )
-    # The view carries the full fact row + the dim's group column; the
-    # ParquetMergeTable backend keeps the test runnable without the
-    # Delta jar (create_merge_table picks Delta when present).
+    # The view carries the full fact row + the dim's group column.
     view = MaterializedJoinView(
         spark,
         f"{warehouse_dir}/enriched_booking",
@@ -190,7 +188,7 @@ def run_all_incremental(
         # re-enrich the affected fact rows. Cursor advance is bounded
         # metadata (one max per feed).
         # _seq_dirs guard: before a table's first merge there is no
-        # change feed AND no schema sidecar — read_changes would raise.
+        # change feed AND no log entry — read_changes would raise.
         mx = None
         if fact._seq_dirs():
             fch = fact.read_changes(cursors["fact"])

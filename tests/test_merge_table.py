@@ -1,9 +1,5 @@
-"""ParquetMergeTable: keyed upsert semantics + bucket-pruned rewrites.
-
-Behavior tests run through `create_merge_table`, parameterized over
-backends: the parquet shim always, the Delta backend when delta-spark
-is importable (skipped otherwise — this container ships no Delta jar).
-Bucket-layout-specific tests stay pinned to the parquet shim.
+"""ParquetMergeTable: keyed upsert semantics, bucket-pruned rewrites and
+the commit log (``_log/<N>.json`` names each bucket's live directory).
 """
 
 from __future__ import annotations
@@ -14,37 +10,25 @@ import pytest
 from pyspark.sql import Row
 
 from airbnb_cdc_spark.operators.merge import (
-    BUCKET_COL,
     ParquetMergeTable,
-    create_merge_table,
-    delta_available,
+    _schema_of,
     merge_dataframes,
 )
 
-BACKENDS = [
-    "parquet",
-    pytest.param(
-        "delta",
-        marks=pytest.mark.skipif(
-            not delta_available(), reason="delta-spark not installed"
-        ),
-    ),
-]
 
-
-@pytest.fixture(params=BACKENDS)
-def backend(request):
-    return request.param
-
-
-def _table(spark, tmp_path, backend="parquet", **kw):
-    return create_merge_table(
-        spark, str(tmp_path / "t"), keys=["k"], num_buckets=8, backend=backend, **kw
+def _table(spark, tmp_path, **kw):
+    return ParquetMergeTable(
+        spark, str(tmp_path / "t"), keys=["k"], num_buckets=8, **kw
     )
 
 
-def test_merge_insert_then_update(spark, tmp_path, backend):
-    t = _table(spark, tmp_path, backend, version_col="ver")
+def _live_dirs(t):
+    """bucket id -> the live directory the newest log entry names."""
+    return {int(b): Path(t.path) / d for b, d in t._snapshot()["buckets"].items()}
+
+
+def test_merge_insert_then_update(spark, tmp_path):
+    t = _table(spark, tmp_path, version_col="ver")
     t.merge(spark.createDataFrame([Row(k="a", v=1, ver=1), Row(k="b", v=2, ver=1)]))
     assert {r.k: r.v for r in t.read().collect()} == {"a": 1, "b": 2}
 
@@ -52,8 +36,8 @@ def test_merge_insert_then_update(spark, tmp_path, backend):
     assert {r.k: r.v for r in t.read().collect()} == {"a": 1, "b": 20, "c": 3}
 
 
-def test_merge_within_batch_last_writer_wins(spark, tmp_path, backend):
-    t = _table(spark, tmp_path, backend, version_col="ver")
+def test_merge_within_batch_last_writer_wins(spark, tmp_path):
+    t = _table(spark, tmp_path, version_col="ver")
     t.merge(
         spark.createDataFrame(
             [Row(k="a", v=1, ver=1), Row(k="a", v=9, ver=5), Row(k="a", v=2, ver=3)]
@@ -65,38 +49,36 @@ def test_merge_within_batch_last_writer_wins(spark, tmp_path, backend):
 def test_merge_rewrites_only_touched_buckets(spark, tmp_path):
     t = _table(spark, tmp_path)
     t.merge(spark.createDataFrame([Row(k=f"k{i}", v=i) for i in range(100)]))
-    before = {
-        p.name: max(f.stat().st_mtime_ns for f in p.glob("*.parquet"))
-        for p in Path(t.path).glob(f"{BUCKET_COL}=*")
-    }
+    before = _live_dirs(t)
     t.merge(spark.createDataFrame([Row(k="k0", v=-1)]))
-    after = {
-        p.name: max(f.stat().st_mtime_ns for f in p.glob("*.parquet"))
-        for p in Path(t.path).glob(f"{BUCKET_COL}=*")
-    }
+    after = _live_dirs(t)
+    assert after.keys() == before.keys()
     changed = [b for b in before if after[b] != before[b]]
     assert len(changed) == 1  # only k0's bucket rewritten
+    # the untouched buckets are the same files; the replaced one is gone
+    assert all(after[b].is_dir() for b in after)
+    assert not before[changed[0]].exists()
     assert {r.v for r in t.read().filter("k = 'k0'").collect()} == {-1}
     assert t.read().count() == 100
 
 
-def test_overwrite_replaces_all(spark, tmp_path, backend):
-    t = _table(spark, tmp_path, backend)
+def test_overwrite_replaces_all(spark, tmp_path):
+    t = _table(spark, tmp_path)
     t.merge(spark.createDataFrame([Row(k="a", v=1)]))
     t.overwrite(spark.createDataFrame([Row(k="z", v=9)]))
     assert [(r.k, r.v) for r in t.read().collect()] == [("z", 9)]
 
 
-def test_merge_idempotent(spark, tmp_path, backend):
-    t = _table(spark, tmp_path, backend, version_col="ver")
+def test_merge_idempotent(spark, tmp_path):
+    t = _table(spark, tmp_path, version_col="ver")
     batch = spark.createDataFrame([Row(k="a", v=1, ver=1), Row(k="b", v=2, ver=1)])
     t.merge(batch)
     t.merge(batch)  # replay = no change (exactly-once-by-key)
     assert sorted((r.k, r.v) for r in t.read().collect()) == [("a", 1), ("b", 2)]
 
 
-def test_delete_keys(spark, tmp_path, backend):
-    t = _table(spark, tmp_path, backend)
+def test_delete_keys(spark, tmp_path):
+    t = _table(spark, tmp_path)
     t.merge(spark.createDataFrame([Row(k=f"k{i}", v=i) for i in range(20)]))
     t.delete(spark.createDataFrame([Row(k="k3"), Row(k="k7"), Row(k="nope")]))
     remaining = sorted(r.k for r in t.read().collect())
@@ -120,10 +102,10 @@ def test_compact_preserves_rows(spark, tmp_path):
     assert sorted(map(tuple, t.read().collect())) == before
 
 
-def test_merge_lww_across_batches(spark, tmp_path, backend):
+def test_merge_lww_across_batches(spark, tmp_path):
     """An update older than the stored row is discarded; a tie goes to
     the update (whole-row replace)."""
-    t = _table(spark, tmp_path, backend, version_col="ver")
+    t = _table(spark, tmp_path, version_col="ver")
     t.merge(spark.createDataFrame([Row(k="a", v=1, ver=5)]))
     t.merge(spark.createDataFrame([Row(k="a", v=99, ver=3)]))  # stale: ignored
     assert [(r.v, r.ver) for r in t.read().collect()] == [(1, 5)]
@@ -134,8 +116,8 @@ def test_merge_lww_across_batches(spark, tmp_path, backend):
 
 
 def test_merge_after_delete_all(spark, tmp_path):
-    """Emptying every bucket leaves only the schema sidecar; the next
-    merge/delete must behave like a fresh load, not throw."""
+    """Emptying every bucket leaves a log entry with no bucket; the next
+    merge/delete must read it as an empty table, not throw."""
     t = ParquetMergeTable(spark, str(tmp_path / "t2"), keys=["k"], num_buckets=2)
     t.merge(spark.createDataFrame([Row(k="a", v=1), Row(k="b", v=2)]))
     t.delete(spark.createDataFrame([Row(k="a"), Row(k="b")]))
@@ -180,14 +162,14 @@ def test_merge_schema_evolution(spark, tmp_path):
 def test_failed_evolving_merge_leaves_the_contract_unchanged(
     spark, tmp_path, monkeypatch
 ):
-    """The schema sidecar is the table's contract: an evolving merge
+    """The log entry's schema is the table's contract: an evolving merge
     whose write fails must not widen it, or every later plain merge
     would fail the S5 check for a column no file holds."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     t = _table(spark, tmp_path)
     t.merge(spark.createDataFrame([Row(k="a", v=1)]))
-    before = t._load_schema()
+    before = _schema_of(t._snapshot())
 
     def failing_write(self, *args, **kwargs):
         raise IOError("injected parquet write failure")
@@ -200,7 +182,7 @@ def test_failed_evolving_merge_leaves_the_contract_unchanged(
         )
     monkeypatch.undo()
 
-    assert t._load_schema() == before
+    assert _schema_of(t._snapshot()) == before
     t.merge(spark.createDataFrame([Row(k="a", v=10)]))
     assert [(r.k, r.v) for r in t.read().collect()] == [("a", 10)]
 
@@ -225,7 +207,7 @@ def _merged(spark, tmp_path, existing, updates, version_col=None, evolve=False):
     )
     t.merge(existing)
     t.merge(updates, allow_schema_evolution=evolve)
-    buckets = list(Path(t.path).glob(f"{BUCKET_COL}=*"))
+    buckets = _live_dirs(t).values()
     assert buckets
     for b in buckets:
         assert len(list(b.glob("*.parquet"))) == 1, b
@@ -310,7 +292,9 @@ def test_merge_rewrite_plan_has_one_exchange(spark, tmp_path, version_col):
     )
     buf = io.StringIO()
     with redirect_stdout(buf):
-        t._rewrite(updates, list(range(8)), allow_schema_evolution=False).explain()
+        t._rewrite(
+            t._snapshot(), updates, list(range(8)), allow_schema_evolution=False
+        ).explain()
     plan = buf.getvalue()
     assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
     assert "Window" in plan, plan
@@ -418,3 +402,68 @@ def test_reattach_with_wrong_num_buckets_refused(spark, tmp_path):
     # the correctly-configured handle still works
     t.merge(spark.createDataFrame([(1, "b")], "id long, v string"))
     assert {(r.id, r.v) for r in t.read().collect()} == {(1, "b")}
+
+
+def test_scd2_rejects_schema_evolution_with_value_error(spark, tmp_path):
+    """A ValueError, not an assert that ``python -O`` strips."""
+    rows = spark.createDataFrame(
+        [(1, "2025-01-01", "gold")], "cid long, ts string, status string"
+    )
+    with pytest.raises(ValueError, match="SCD2"):
+        _scd2(spark, tmp_path).merge(rows, allow_schema_evolution=True)
+
+
+# -- types: the log entry's schema decides -----------------------------------
+
+
+def _bigint_table(spark, tmp_path):
+    t = ParquetMergeTable(spark, str(tmp_path / "t"), ["id"], num_buckets=16)
+    t.merge(spark.range(200).selectExpr("id", "'old' AS v"))
+    return t
+
+
+def test_int_keys_update_a_bigint_table(spark, tmp_path):
+    """int keys hash to other buckets than the stored bigint keys; cast
+    first, they update the 200 rows instead of inserting 191 more."""
+    t = _bigint_table(spark, tmp_path)
+    t.merge(spark.range(200).selectExpr("CAST(id AS INT) AS id", "'new' AS v"))
+    out = t.read()
+    assert dict(out.dtypes)["id"] == "bigint"
+    assert out.count() == 200
+    assert {r.v for r in out.collect()} == {"new"}
+
+
+def test_int_keys_delete_from_a_bigint_table(spark, tmp_path):
+    t = _bigint_table(spark, tmp_path)
+    t.delete(spark.createDataFrame([(3,), (50,), (199,)], "id int"))
+    out = t.read()
+    assert out.count() == 197
+    assert not {3, 50, 199} & {r.id for r in out.collect()}
+
+
+@pytest.mark.parametrize(
+    "stored, stored_row, incoming, incoming_row, column",
+    [
+        ("id string, v int", ("1", 1), "id bigint, v int", (1, 2), "id"),
+        ("id bigint, v int", (1, 1), "id bigint, v string", (1, "2"), "v"),
+    ],
+)
+def test_type_mismatch_raises_and_writes_nothing(
+    spark, tmp_path, stored, stored_row, incoming, incoming_row, column
+):
+    """No lossless cast exists (bigint into a string key, string into
+    an int column): merge and delete raise naming the column, and the
+    table and its files are as before."""
+    t = ParquetMergeTable(spark, str(tmp_path / "t"), ["id"], num_buckets=16)
+    t.merge(spark.createDataFrame([stored_row], stored))
+    files = sorted(p for p in Path(t.path).rglob("*") if p.is_file())
+    bad = spark.createDataFrame([incoming_row], incoming)
+    with pytest.raises(ValueError, match=f"'{column}'"):
+        t.merge(bad)
+    with pytest.raises(ValueError, match=f"'{column}'"):
+        t.merge(bad, allow_schema_evolution=True)
+    if column == "id":
+        with pytest.raises(ValueError, match="'id'"):
+            t.delete(bad)
+    assert sorted(p for p in Path(t.path).rglob("*") if p.is_file()) == files
+    assert [tuple(r) for r in t.read().collect()] == [stored_row]
