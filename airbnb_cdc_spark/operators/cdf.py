@@ -40,6 +40,7 @@ from airbnb_cdc_spark.operators.merge import (
     BUCKET_COL,
     ParquetMergeTable,
     _fs,
+    _listing,
     _schema_of,
 )
 
@@ -58,14 +59,10 @@ class ChangeCapturingMergeTable:
     # -- feed bookkeeping --------------------------------------------------
 
     def _seq_dirs(self) -> list[int]:
-        fs, jpath = _fs(self.spark, self.changes_path)
-        if not fs.exists(jpath):
-            return []
-        return [
-            int(f.getPath().getName().split("=", 1)[1])
-            for f in fs.listStatus(jpath)
-            if f.getPath().getName().startswith(f"{SEQ_COL}=")
-        ]
+        """The feed's commit sequence numbers, from one printed listing."""
+        listing = _listing(self.spark, self.changes_path)
+        names = (path.rsplit("/", 1)[1] for path, _, _ in listing)
+        return [int(n.split("=", 1)[1]) for n in names if n.startswith(f"{SEQ_COL}=")]
 
     def _next_seq(self) -> int:
         seqs = self._seq_dirs()
@@ -127,10 +124,12 @@ class ChangeCapturingMergeTable:
         keyed = table._conform(keys_df.select(*table.keys), entry).dropDuplicates(
             table.keys
         )
+        # routed by the entry's bucket count: a merge that re-buckets the
+        # table is read back with the count it committed
+        bucket = table._bucket_sql(entry["num_buckets"])
         touched = {
             r[0]
-            for r in keyed.withColumn(BUCKET_COL, table._bucket_expr())
-            .select(BUCKET_COL)
+            for r in keyed.selectExpr(f"{bucket} AS {BUCKET_COL}")
             .distinct()
             .collect()
         }

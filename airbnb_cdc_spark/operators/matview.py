@@ -20,7 +20,10 @@ The view is a ``ParquetMergeTable`` keyed by the fact key, so refresh
 is idempotent (last-writer-wins under ``version_col``), both delta
 paths commute with retries, and each refresh is one commit of the
 table's log — the same guarantees the CDC sink relies on
-(operators/merge.py).
+(operators/merge.py). Like any merge table it sizes its bucket count
+to its bytes unless ``num_buckets`` pins it: it starts at 16 buckets,
+and a refresh whose delta touches every bucket re-sizes it to one
+``spark.sql.files.maxPartitionBytes`` of parquet per bucket.
 
 ``dim`` inputs must be one-row-per-join-key (pre-dedup with
 ``lookup.latest_per_key`` when the dim itself is a change feed). Dim
@@ -46,7 +49,8 @@ from airbnb_cdc_spark.operators.merge import ParquetMergeTable
 
 class MaterializedJoinView:
     """FACT ⋈ DIM (left join on ``join_key``), stored keyed by
-    ``fact_keys`` and maintained by delta."""
+    ``fact_keys`` and maintained by delta. ``num_buckets=None`` lets the
+    view size its bucket count to its bytes; an int pins it."""
 
     def __init__(
         self,
@@ -55,7 +59,7 @@ class MaterializedJoinView:
         fact_keys: Sequence[str],
         join_key: str,
         version_col: str | None = None,
-        num_buckets: int = 16,
+        num_buckets: int | None = None,
     ) -> None:
         self.spark = spark
         self.join_key = join_key

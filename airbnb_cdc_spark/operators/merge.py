@@ -14,8 +14,19 @@ Design for 100 TB:
   (``_bucket = pmod(xxhash64(key), n)``) and stored as one partition
   directory per bucket. A merge touching K distinct keys reads and
   rewrites ONLY the buckets those keys hash to — partition pruning makes
-  merge cost proportional to the update set, not the table size, which is
-  the same file-skipping idea Delta's MERGE uses.
+  merge cost proportional to the touched buckets' bytes, not the table
+  size, which is the same file-skipping idea Delta's MERGE uses. A wave
+  whose keys spread over every bucket rewrites the whole table.
+- The table sizes its bucket count ``n`` to its bytes and records it in
+  the log entry, which is where every write's routing reads it. A first
+  commit uses 16 buckets, so a large first load never funnels into one
+  task. A write that replaces every live bucket (``overwrite``,
+  ``compact``, a merge, delete or SCD2 merge whose wave touches them
+  all) rewrites the whole table anyway, so it re-picks ``n`` from the
+  bytes the current entry records: ``suggest_num_buckets``, one
+  ``spark.sql.files.maxPartitionBytes`` of parquet per bucket. Any other
+  write keeps the entry's ``n``. A handle built with ``num_buckets``
+  pins the count and never re-buckets.
 - A merge shuffles once. The stored rows of the touched buckets and the
   update rows are unioned and repartitioned on ``_bucket``; one
   ``row_number`` window per key then picks each key's survivor, and the
@@ -70,16 +81,24 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from airbnb_cdc_spark.operators.lookup import latest_per_key
-from airbnb_cdc_spark.session import sql_ident
+from airbnb_cdc_spark.session import _byte_conf, sql_ident
 
 BUCKET_COL = "_bucket"
 COMMIT_COL = "_c"
 LOG_DIR = "_log"
 
-# Matches in a Hadoop path array printed by commons-lang3's
-# ArrayUtils.toString: "{file:/t/_bucket=3/_c=v2-9f1c,file:/t/_log/2.json}".
-_DATA_DIR = re.compile(rf"/({BUCKET_COL}=(\d+)/{COMMIT_COL}=([^/,}}]+))(?=[,}}])")
-_LOG_FILE = re.compile(rf"/{LOG_DIR}/([^/,}}]+)(?=[,}}])")
+FIRST_BUCKETS = 16
+MAX_BUCKETS = 65536
+
+# One status of a Hadoop FileStatus array printed by commons-lang3's
+# ArrayUtils.toString: "{...Status{path=file:/t/_log/2.json;
+# isDirectory=false; length=517; ...},...}". The path runs up to the
+# "; isDirectory=" that follows it, so no match runs into the next status.
+_STATUS = re.compile(
+    r"path=((?:[^;]|;(?! isDirectory=))*); isDirectory=(true|false)"
+    r"(?:; length=(\d+))?"
+)
+_DATA_DIR = re.compile(rf"/({BUCKET_COL}=(\d+)/{COMMIT_COL}=([^/]+))$")
 _ENTRY = re.compile(r"(\d+)\.json")
 _GLOB_CHARS = re.compile(r"([{}\[\]*?\\])")
 
@@ -87,17 +106,15 @@ _GLOB_CHARS = re.compile(r"([{}\[\]*?\\])")
 _DIGITS = {T.ByteType: 3, T.ShortType: 5, T.IntegerType: 10, T.LongType: 20}
 
 
-def suggest_num_buckets(
-    expected_rows: int, target_rows_per_bucket: int = 2_000_000
-) -> int:
-    """Scale-proportional bucket count (power of two, 16..65536): keeps
-    per-bucket rewrites ~target-sized as the table grows, so merge cost
-    stays proportional to the update set at any table size. Choose once
-    at table creation (changing it later requires a compact())."""
-    import math
-
-    n = max(1, expected_rows // target_rows_per_bucket)
-    return max(16, min(65536, 2 ** math.ceil(math.log2(n))))
+def suggest_num_buckets(table_bytes: int, target_bytes: int = 128 * 1024**2) -> int:
+    """The bucket count for ``table_bytes`` of parquet: ``ceil(bytes /
+    target)`` rounded up to a power of two, clamped to 1..65,536. Each
+    bucket then holds about one ``target_bytes`` (the table passes
+    ``spark.sql.files.maxPartitionBytes``, one scan split), so a merge
+    touching few keys rewrites few such buckets at any table size, and a
+    small table is one file per commit instead of sixteen."""
+    want = max(1, -(-table_bytes // target_bytes))
+    return min(MAX_BUCKETS, 1 << (want - 1).bit_length())
 
 
 def merge_dataframes(
@@ -146,6 +163,27 @@ def _fs(spark: SparkSession, path: str):
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
+def _statuses(printed: str) -> list[tuple[str, bool, int]]:
+    """(path, is a directory, length) of each status in a printed
+    FileStatus array. ``FileStatus.toString`` prints its fields, so no
+    file's permissions are loaded (on a local file system without
+    Hadoop's native library, that load forks)."""
+    return [(p, d == "true", int(n or 0)) for p, d, n in _STATUS.findall(printed)]
+
+
+def _listing(spark: SparkSession, path: str) -> list[tuple[str, bool, int]]:
+    """``_statuses`` of ``path``'s children (none when ``path`` does not
+    exist), printed as one Java array: a fixed number of py4j round trips
+    however many children it has, where walking the array costs several
+    per child."""
+    fs, jpath = _fs(spark, path)
+    if not fs.exists(jpath):
+        return []
+    return _statuses(
+        spark._jvm.org.apache.commons.lang3.ArrayUtils.toString(fs.listStatus(jpath))
+    )
+
+
 def _rename_or_raise(fs, src, dst) -> None:
     """Hadoop FileSystem.rename reports most failures by returning
     FALSE, not raising — an unchecked call turns a failed swap into
@@ -182,7 +220,11 @@ def _widens(src: T.DataType, dst: T.DataType) -> bool:
 
 
 class ParquetMergeTable:
-    """A keyed, hash-bucketed parquet table supporting MERGE-style upsert."""
+    """A keyed, hash-bucketed parquet table supporting MERGE-style upsert.
+
+    ``num_buckets=None`` (the default) lets the table size its bucket
+    count to its bytes; an int pins it, and a pinned handle refuses a
+    table committed with another count."""
 
     def __init__(
         self,
@@ -190,7 +232,7 @@ class ParquetMergeTable:
         path: str,
         keys: Sequence[str],
         version_col: str | None = None,
-        num_buckets: int = 16,
+        num_buckets: int | None = None,
     ) -> None:
         self.spark = spark
         self.path = path.rstrip("/")
@@ -201,12 +243,43 @@ class ParquetMergeTable:
 
     # -- storage helpers ---------------------------------------------------
 
-    def _bucket_sql(self) -> str:
+    def _bucket_sql(self, num_buckets: int) -> str:
         keys = ", ".join(map(sql_ident, self.keys))
-        return f"CAST(pmod(xxhash64({keys}), {self.num_buckets}) AS INT)"
+        return f"CAST(pmod(xxhash64({keys}), {num_buckets}) AS INT)"
 
-    def _bucket_expr(self):
-        return F.expr(self._bucket_sql())
+    def _bucketed(self, df: DataFrame, num_buckets: int) -> DataFrame:
+        """``df`` with ``_bucket`` computed from the key, one partition
+        per bucket."""
+        return df.selectExpr(
+            *(sql_ident(c) for c in df.columns if c != BUCKET_COL),
+            f"{self._bucket_sql(num_buckets)} AS {BUCKET_COL}",
+        ).repartition(BUCKET_COL)
+
+    def _resized(self, entry: dict | None) -> int:
+        """The bucket count of a write that replaces the whole table
+        after ``entry``: the pinned count; else 16 for a first commit;
+        else sized to the bytes ``entry`` records (an entry written
+        before the log recorded bytes keeps its count)."""
+        if self.num_buckets is not None:
+            return self.num_buckets
+        if entry is None:
+            return FIRST_BUCKETS
+        if "bytes" not in entry:
+            return entry["num_buckets"]
+        target = _byte_conf(
+            self.spark, "spark.sql.files.maxPartitionBytes", 128 * 1024**2
+        )
+        return suggest_num_buckets(sum(entry["bytes"].values()), target)
+
+    def _plan_write(
+        self, entry: dict, touched: set[int]
+    ) -> tuple[set[int] | None, int]:
+        """(the buckets a write over ``touched`` replaces, the count it
+        writes). A write touching every live bucket replaces the table
+        (None) and may re-size it; any other keeps the entry's count."""
+        if touched >= {int(b) for b in entry["buckets"]}:
+            return None, self._resized(entry)
+        return touched, entry["num_buckets"]
 
     def _hadoop(self) -> SimpleNamespace:
         """The table's FileSystem and the JVM classes the log uses,
@@ -217,24 +290,23 @@ class ParquetMergeTable:
             self._hadoop_io = SimpleNamespace(
                 fs=_fs(self.spark, self.path)[0],
                 Path=JavaClass("org.apache.hadoop.fs.Path", client),
-                FileUtil=JavaClass("org.apache.hadoop.fs.FileUtil", client),
                 ArrayUtils=JavaClass("org.apache.commons.lang3.ArrayUtils", client),
                 IOUtils=JavaClass("org.apache.hadoop.io.IOUtils", client),
             )
         return self._hadoop_io
 
-    def _glob(self, pattern: str) -> str:
-        """The paths matching ``pattern`` under the table root, printed
-        as one Java array: a fixed number of py4j round trips however
-        many paths match."""
+    def _glob(self, pattern: str) -> list[tuple[str, bool, int]]:
+        """``_statuses`` of the paths matching ``pattern`` under the
+        table root, printed as one Java array: a fixed number of py4j
+        round trips however many paths match."""
         j = self._hadoop()
         root = _GLOB_CHARS.sub(r"\\\1", self.path)
-        return j.ArrayUtils.toString(
-            j.FileUtil.stat2Paths(j.fs.globStatus(j.Path(f"{root}/{pattern}")))
+        return _statuses(
+            j.ArrayUtils.toString(j.fs.globStatus(j.Path(f"{root}/{pattern}")))
         )
 
     def _log_files(self) -> list[str]:
-        return _LOG_FILE.findall(self._glob(f"{LOG_DIR}/*"))
+        return [p.rsplit("/", 1)[1] for p, _, _ in self._glob(f"{LOG_DIR}/*")]
 
     def _snapshot(self) -> dict | None:
         """The newest log entry; None for a table never committed."""
@@ -242,7 +314,7 @@ class ParquetMergeTable:
             int(m[1]) for m in map(_ENTRY.fullmatch, self._log_files()) if m
         ]
         if not versions:
-            if self._glob(f"{BUCKET_COL}=*/*.parquet") != "{}":
+            if self._glob(f"{BUCKET_COL}=*/*.parquet"):
                 raise ValueError(
                     f"{self.path} holds bucket files but no {LOG_DIR}/ commit "
                     "log; it is not a merge table this code can read or write"
@@ -261,10 +333,10 @@ class ParquetMergeTable:
 
     def _conform(self, df: DataFrame, entry: dict) -> DataFrame:
         """``df`` checked against the committed table before any job
-        runs: the handle's bucket count must be the table's, and each
+        runs: a pinned bucket count must be the table's, and each
         column the table stores is cast to the stored type when no value
         changes; any other type mismatch raises, naming the column."""
-        if entry["num_buckets"] != self.num_buckets:
+        if self.num_buckets not in (None, entry["num_buckets"]):
             raise ValueError(
                 f"table at {self.path} was created with num_buckets="
                 f"{entry['num_buckets']}; this handle has {self.num_buckets} "
@@ -335,11 +407,14 @@ class ParquetMergeTable:
         df: DataFrame,
         schema: T.StructType,
         replaced: set[int] | None,
+        num_buckets: int,
     ) -> None:
-        """Land ``df`` (with ``_bucket``, one partition per bucket) as
-        new directories, commit the log entry after ``entry``, then GC.
-        The new entry keeps the live directories of the buckets outside
-        ``replaced`` (None: none are kept) and names the new ones."""
+        """Land ``df`` (with ``_bucket`` of ``num_buckets``, one partition
+        per bucket) as new directories, commit the log entry after
+        ``entry``, then GC. The new entry keeps the live directories of
+        the buckets outside ``replaced`` (None: none are kept), names the
+        new ones and records each live bucket's bytes, all from one
+        listing of the data directories and their files."""
         version = 0 if entry is None else entry["version"] + 1
         cid = f"v{version}-{uuid.uuid4().hex[:8]}"
         (
@@ -348,7 +423,15 @@ class ParquetMergeTable:
             .mode("append")
             .parquet(self.path)
         )
-        on_disk = _DATA_DIR.findall(self._glob(f"{BUCKET_COL}=*/{COMMIT_COL}=*"))
+        on_disk, sizes = [], {}
+        for path, is_dir, length in self._glob(
+            f"{BUCKET_COL}=*/{COMMIT_COL}=*{{,/*.parquet}}"
+        ):
+            if is_dir:
+                on_disk.append(_DATA_DIR.search(path).groups())
+            else:
+                d = _DATA_DIR.search(path.rsplit("/", 1)[0])[1]
+                sizes[d] = sizes.get(d, 0) + length
         live = (
             {}
             if entry is None or replaced is None
@@ -357,9 +440,10 @@ class ParquetMergeTable:
         live.update({b: d for d, b, c in on_disk if c == cid})
         new = {
             "version": version,
-            "num_buckets": self.num_buckets,
+            "num_buckets": num_buckets,
             "schema": schema.jsonValue(),
             "buckets": live,
+            "bytes": {b: sizes.get(d, 0) for b, d in live.items()},
         }
         self._commit(new)
         self._gc(new, on_disk)
@@ -405,19 +489,21 @@ class ParquetMergeTable:
 
     def overwrite(self, df: DataFrame) -> None:
         """Full truncate-and-reload (O8): the new files land beside the
-        old ones and one commit replaces the whole table."""
-        self._write_commit(
-            self._snapshot(),
-            df.withColumn(BUCKET_COL, self._bucket_expr()).repartition(BUCKET_COL),
-            df.schema,
-            None,
-        )
+        old ones and one commit replaces the whole table. The bucket
+        count is sized from the stored bytes, never from ``df``: the
+        optimizer's estimate of a join's output is the product of its
+        inputs, not the rows it writes."""
+        entry = self._snapshot()
+        n = self._resized(entry)
+        self._write_commit(entry, self._bucketed(df, n), df.schema, None, n)
 
     # -- merge -------------------------------------------------------------
 
     def merge(self, updates: DataFrame, allow_schema_evolution: bool = False) -> None:
         """Upsert ``updates`` by key: matched rows replaced, new rows
-        inserted. Only buckets containing update keys are rewritten.
+        inserted. Only buckets containing update keys are rewritten; a
+        wave touching every live bucket rewrites the table, re-sized to
+        its bytes.
 
         ``allow_schema_evolution`` is the reference's ``allowSchemaDrift``
         / Delta ``mergeSchema``: new columns in ``updates`` widen the
@@ -441,22 +527,24 @@ class ParquetMergeTable:
         # Tiny collect: at most num_buckets ints — drives partition
         # pruning. A key's bucket depends only on the key, so the raw
         # (not yet deduplicated) keys touch the same buckets.
+        bucket = self._bucket_sql(entry["num_buckets"])
         touched = sorted(
             r[0]
-            for r in updates.selectExpr(f"{self._bucket_sql()} AS {BUCKET_COL}")
+            for r in updates.selectExpr(f"{bucket} AS {BUCKET_COL}")
             .distinct()
             .collect()
         )
         if not touched:
             return
 
-        merged = self._rewrite(entry, updates, touched, allow_schema_evolution)
+        replaced, n = self._plan_write(entry, set(touched))
+        merged = self._rewrite(entry, updates, touched, allow_schema_evolution, n)
         schema = (
             merged.drop(BUCKET_COL).schema
             if allow_schema_evolution
             else _schema_of(entry)
         )
-        self._write_commit(entry, merged, schema, set(touched))
+        self._write_commit(entry, merged, schema, replaced, n)
 
     def _rewrite(
         self,
@@ -464,12 +552,16 @@ class ParquetMergeTable:
         updates: DataFrame,
         touched: list[int],
         allow_schema_evolution: bool,
+        num_buckets: int,
     ) -> DataFrame:
         """The rewritten contents of the ``touched`` buckets, with
-        ``_bucket``: stored rows and ALL update rows (in-batch duplicates
-        included) in one ``repartition(_bucket)``, then ONE ``row_number``
-        window per (bucket, key) — the single shuffle of the merge, since
-        hash partitioning on ``_bucket`` already clusters the window.
+        ``_bucket`` of ``num_buckets`` computed from the key for stored
+        and update rows alike, so a
+        write that replaces every bucket re-buckets in the same pass:
+        stored rows and ALL update rows (in-batch duplicates included) in
+        one ``repartition(_bucket)``, then ONE ``row_number`` window per
+        (bucket, key) — the single shuffle of the merge, since hash
+        partitioning on ``_bucket`` already clusters the window.
 
         The window order is whole-row MERGE with last-writer-wins:
         version desc nulls last (when configured), then source priority
@@ -490,12 +582,14 @@ class ParquetMergeTable:
                     f"updates lack table columns {missing}; pass "
                     "allow_schema_evolution=True to fill them with NULL"
                 )
-        marked = updates.selectExpr(
-            "*", f"{self._bucket_sql()} AS {BUCKET_COL}", "1 AS __src"
+        bucket = self._bucket_sql(num_buckets)
+        marked = updates.selectExpr("*", f"{bucket} AS {BUCKET_COL}", "1 AS __src")
+        stored = current.selectExpr(
+            *(sql_ident(c) for c in table_cols if c != BUCKET_COL),
+            f"{bucket} AS {BUCKET_COL}",
+            "0 AS __src",
         )
-        combined = current.selectExpr("*", "0 AS __src").unionByName(
-            marked, allowMissingColumns=True
-        )
+        combined = stored.unionByName(marked, allowMissingColumns=True)
         if allow_schema_evolution:
             out_cols = [c for c in combined.columns if c != "__src"]
         else:
@@ -532,7 +626,7 @@ class ParquetMergeTable:
             return
         keyed = self._conform(keys_df.select(*self.keys), entry)
         keyed = keyed.dropDuplicates(self.keys).withColumn(
-            BUCKET_COL, self._bucket_expr()
+            BUCKET_COL, F.expr(self._bucket_sql(entry["num_buckets"]))
         )
         # only buckets holding rows can lose any
         touched = {
@@ -540,20 +634,24 @@ class ParquetMergeTable:
         } & {int(b) for b in entry["buckets"]}
         if not touched:
             return
+        replaced, n = self._plan_write(entry, touched)
         kept = self._scan(entry, touched).join(
             keyed.select(*self.keys), on=self.keys, how="left_anti"
         )
         # A bucket whose every row was deleted writes no directory, so
         # the new entry drops it.
         self._write_commit(
-            entry, kept.repartition(BUCKET_COL), _schema_of(entry), touched
+            entry, self._bucketed(kept, n), _schema_of(entry), replaced, n
         )
 
     def compact(self) -> None:
         """Full rewrite into fresh single-file buckets (Delta OPTIMIZE
-        analog). Merges already replace whole bucket dirs, so files don't
-        accumulate per merge; compact matters after changing
-        ``num_buckets`` or to re-sort/re-encode cold data."""
+        analog), re-sized to the stored bytes like any write that
+        replaces the whole table (a pinned handle writes its own count).
+        Merges already replace whole bucket dirs, so files don't
+        accumulate per merge; compact matters after a table grew by
+        partial merges, to change a pinned count, or to re-sort/re-encode
+        cold data."""
         entry = self._snapshot()
         if entry is not None:
             self.overwrite(self._scan(entry).drop(BUCKET_COL))
@@ -588,7 +686,7 @@ class Scd2MergeTable(ParquetMergeTable):
         path: str,
         keys: Sequence[str],
         ts_col: str,
-        num_buckets: int = 16,
+        num_buckets: int | None = None,
     ) -> None:
         super().__init__(spark, path, keys, version_col=None, num_buckets=num_buckets)
         self.ts_col = ts_col
@@ -639,10 +737,14 @@ class Scd2MergeTable(ParquetMergeTable):
             return
 
         fresh = self._conform(fresh, entry)
-        fresh_b = fresh.withColumn(BUCKET_COL, self._bucket_expr())
-        touched = {r[0] for r in fresh_b.select(BUCKET_COL).distinct().collect()}
+        bucket = self._bucket_sql(entry["num_buckets"])
+        touched = {
+            r[0]
+            for r in fresh.selectExpr(f"{bucket} AS {BUCKET_COL}").distinct().collect()
+        }
         if not touched:
             return
+        replaced, n = self._plan_write(entry, touched)
         current = self._scan(entry, touched)
         closed = current.filter(F.col("is_current") == 0).drop(BUCKET_COL)
         open_rows = current.filter(F.col("is_current") == 1).select(
@@ -664,9 +766,7 @@ class Scd2MergeTable(ParquetMergeTable):
         hist = self._build_history(
             open_rows.unionByName(fresh_gated), attrs
         )
-        merged = closed.unionByName(hist.select(closed.columns)).withColumn(
-            BUCKET_COL, self._bucket_expr()
-        )
+        merged = closed.unionByName(hist.select(closed.columns))
         self._write_commit(
-            entry, merged.repartition(BUCKET_COL), _schema_of(entry), touched
+            entry, self._bucketed(merged, n), _schema_of(entry), replaced, n
         )

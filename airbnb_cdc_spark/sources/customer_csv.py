@@ -55,22 +55,21 @@ def read_customer_csv(spark: SparkSession, path: str) -> DataFrame:
 
 
 # shared Hadoop filesystem helpers — one definition (operators/merge.py)
-from airbnb_cdc_spark.operators.merge import _fs, _rename_or_raise  # noqa: E402
+from airbnb_cdc_spark.operators.merge import (  # noqa: E402
+    _fs,
+    _listing,
+    _rename_or_raise,
+)
 
 
 def list_files(spark: SparkSession, folder: str, suffix: str = ".csv") -> list[str]:
     """S8 (GetMetadata childItems): enumerate feed files, sorted for a
     deterministic replay order. Driver-side control flow — the listing is
-    metadata-sized, never data-sized."""
-    fs, jpath = _fs(spark, folder)
-    if not fs.exists(jpath):
-        return []
-    out = []
-    for status in fs.listStatus(jpath):
-        name = status.getPath().getName()
-        if status.isFile() and name.endswith(suffix):
-            out.append(name)
-    return sorted(out)
+    metadata-sized, never data-sized, and one printed array: a fixed
+    number of py4j round trips however many files the folder holds."""
+    files = (path for path, is_dir, _ in _listing(spark, folder) if not is_dir)
+    names = (path.rsplit("/", 1)[1] for path in files)
+    return sorted(name for name in names if name.endswith(suffix))
 
 
 def archive_file(

@@ -1,6 +1,6 @@
 """r17 optimization measurement harness (guide §1).
 
-Two modes over registered queries:
+Two modes over registered queries, and one over the E1 pipeline:
 
     # Capture .explain("formatted") snapshots (plans/r17/<q>_<tag>.txt):
     python scripts/opt_profile.py plans --tag before q1 q2 ...
@@ -22,17 +22,42 @@ ones included) and the other children the JVM forked and reaped
 tasks the query's jobs ran. A bench's tree total hides which process
 pays; a fixed cost per Python task shows as `cpu_workers` growing with
 `tasks`, not with rows.
+
+`arrival` dissects ``cdc_trickle``'s operation, an E1 ``run_all`` over a
+small arrival. It backfills a warehouse with perfbench's generator and
+sizes (``perfbench/cdcgen.py``, ``perfbench/workloads.py``, imported
+and left unchanged), runs ``--warm-arrivals`` arrivals untimed, then K timed
+ones, and prints one JSON line per arrival and phase::
+
+    python scripts/opt_profile.py arrival --arrivals 4 --seed 7
+
+The phases are the whole arrival (``arrival``), the customer dim load
+(``dim``), the fact stream (``fact_stream``), every merge-table
+``merge`` and ``overwrite``, and the aggregate refresh (``aggregate``);
+they nest, so each line is inclusive. Each line holds the driver
+Python's CPU (`cpu_driver_py`), the JVM's less its C1/C2 compiler
+threads (`cpu_jvm`), the CPU of the JVM's reaped children
+(`cpu_jvm_children`: Hadoop's chmod and readlink forks on a local file
+system without the native library), Spark jobs, the parquet files that
+appeared under the warehouse (`files`) and the delta of the
+``processes`` counter in ``/proc/stat``. That counter counts every fork
+and every thread created on the whole machine, not only this run's, so
+read it on an otherwise idle machine. The probes' own cost (a few ms of
+driver CPU each) lands in the enclosing phase.
 """
 
 from __future__ import annotations
 
 import argparse
+import functools
 import io
 import json
 import os
 import sys
+import tempfile
 import time
-from contextlib import redirect_stdout
+from collections import Counter
+from contextlib import contextmanager, redirect_stdout
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -104,9 +129,139 @@ def tasks_run(sc, group: str) -> int:
     return sum(tracker.getStageInfo(s).numCompletedTasks for s in stages)
 
 
+def _machine_processes() -> int:
+    """Forks and threads created on the whole machine since boot."""
+    with open("/proc/stat") as f:
+        return next(int(line.split()[1]) for line in f if line.startswith("processes "))
+
+
+def _child_jvm() -> int:
+    """The pid of the JVM this process started."""
+    for name in os.listdir("/proc"):
+        if name.isdigit():
+            try:
+                command, fields = _stat(f"/proc/{name}/stat")
+            except OSError:
+                continue
+            if command == "java" and int(fields[1]) == os.getpid():
+                return int(name)
+    raise RuntimeError("no JVM under this process")
+
+
+class _Probe:
+    """Per-phase counters of one E1 run; see the module docstring."""
+
+    def __init__(self, spark, warehouse: str) -> None:
+        self.warehouse = warehouse
+        self.dag = spark.sparkContext._jsc.sc().dagScheduler()
+        # _cpu_split walks every process and JVM thread: at a dozen
+        # samples per arrival that cost more driver CPU than the arrival
+        # itself spent, so the JVM and its compiler threads (which live
+        # as long as the JVM under -XX:-UseDynamicNumberOfCompilerThreads)
+        # are found once
+        self.jvm = _child_jvm()
+        self.jit = [
+            tid
+            for tid in os.listdir(f"/proc/{self.jvm}/task")
+            if _stat(f"/proc/{self.jvm}/task/{tid}/stat")[0].startswith(
+                ("C1 CompilerThre", "C2 CompilerThre")
+            )
+        ]
+        self.totals: dict[str, Counter] = {}
+
+    def _files(self) -> set[str]:
+        return {
+            os.path.join(d, f)
+            for d, _, fs in os.walk(self.warehouse)
+            for f in fs
+            if f.endswith(".parquet")
+        }
+
+    def _sample(self) -> dict:
+        ticks = os.sysconf("SC_CLK_TCK")
+        me = _stat("/proc/self/stat")[1]
+        jvm = _stat(f"/proc/{self.jvm}/stat")[1]
+        jit = sum(
+            int(tf[11]) + int(tf[12])
+            for tf in (_stat(f"/proc/{self.jvm}/task/{t}/stat")[1] for t in self.jit)
+        )
+        return {
+            "cpu_driver_py": (int(me[11]) + int(me[12])) / ticks,
+            "cpu_jvm": (int(jvm[11]) + int(jvm[12]) - jit) / ticks,
+            "cpu_jvm_children": (int(jvm[13]) + int(jvm[14])) / ticks,
+            "jobs": int(self.dag.nextJobId()),  # py4j hands the AtomicInteger over as an int
+            "processes": _machine_processes(),
+            "files": self._files(),
+            "wall_s": time.perf_counter(),
+        }
+
+    @contextmanager
+    def phase(self, name: str):
+        s0 = self._sample()
+        try:
+            yield
+        finally:
+            s1 = self._sample()
+            acc = self.totals.setdefault(name, Counter())
+            acc["calls"] += 1
+            acc["files"] += len(s1.pop("files") - s0.pop("files"))
+            for k, v in s1.items():
+                acc[k] += v - s0[k]
+
+    def wrap(self, owner, attr: str, name: str) -> None:
+        fn = getattr(owner, attr)
+
+        @functools.wraps(fn)
+        def probed(*args, **kwargs):
+            with self.phase(name):
+                return fn(*args, **kwargs)
+
+        setattr(owner, attr, probed)
+
+
+def arrivals(args) -> None:
+    """The ``arrival`` mode: see the module docstring."""
+    sys.path.insert(0, str(REPO / "perfbench"))
+    import workloads  # noqa: E402  (perfbench's sizes and JIT settle)
+    from cdcgen import CdcFeed  # noqa: E402
+
+    from airbnb_cdc_spark.operators.merge import ParquetMergeTable
+    from airbnb_cdc_spark.plans import pipelines
+
+    root = args.workdir or tempfile.mkdtemp(prefix="opt_profile_arrival_")
+    dirs = [os.path.join(root, x) for x in ("raw", "archive", "feed", "checkpoint", "warehouse")]
+    feed = CdcFeed(args.seed, dirs[0], dirs[2])
+    feed.backfill(**workloads.BACKFILL)
+    spark = get_spark("opt_profile")
+    spark.sparkContext.setLogLevel("ERROR")
+    try:
+        pipelines.run_all(spark, *dirs)  # the backfill, untimed
+        probe = _Probe(spark, dirs[4])
+        probe.wrap(pipelines, "run_customer_dim", "dim")
+        probe.wrap(pipelines, "run_booking_fact_stream", "fact_stream")
+        probe.wrap(pipelines, "refresh_booking_aggregation", "aggregate")
+        probe.wrap(ParquetMergeTable, "merge", "merge")
+        probe.wrap(ParquetMergeTable, "overwrite", "overwrite")
+        for i in range(args.warm_arrivals + args.arrivals):
+            with_csv = feed.arrival(**workloads.ARRIVAL)
+            workloads.settle_jit()
+            probe.totals.clear()
+            with probe.phase("arrival"):
+                pipelines.run_all(spark, *dirs)
+            if i < args.warm_arrivals:
+                continue
+            for name in ("arrival", "dim", "fact_stream", "merge", "overwrite", "aggregate"):
+                acc = probe.totals.get(name, Counter())
+                record = {"arrival": i - args.warm_arrivals, "csv": with_csv, "phase": name}
+                record.update({k: round(v, 3) for k, v in sorted(acc.items())})
+                print(json.dumps(record), flush=True)
+    finally:
+        spark.stop()
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("mode", choices=["plans", "time"])
+    ap.add_argument("mode", choices=["plans", "time", "arrival"])
     ap.add_argument("names", nargs="*", help="query names; empty = all")
     ap.add_argument("--tag", default="before")
     ap.add_argument("--round", default="r18", help="plans/<round>/ output dir")
@@ -114,14 +269,14 @@ def main() -> None:
     ap.add_argument("--sink", choices=["noop", "count"], default="noop")
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--warm", action="store_true", help="run each query once untimed first")
+    ap.add_argument("--arrivals", type=int, default=4, help="arrival: timed arrivals")
+    ap.add_argument("--warm-arrivals", dest="warm_arrivals", type=int, default=2,
+                    help="arrival: untimed arrivals after the backfill")
+    ap.add_argument("--seed", type=int, default=7, help="arrival: generator seed")
+    ap.add_argument("--workdir", help="arrival: warehouse root (default: a new temp dir)")
     args = ap.parse_args()
 
-    names = args.names or list(q.QUERIES)
-    unknown = [n for n in names if n not in q.QUERIES]
-    if unknown:
-        sys.exit(f"unknown queries: {unknown}")
-
-    if args.mode == "time":
+    if args.mode != "plans":
         # compiler threads that live as long as the JVM, so the CPU they
         # spend is told apart exactly (_cpu_split); the repo root lets
         # Spark's Python workers import the program from any directory
@@ -132,6 +287,15 @@ def main() -> None:
         os.environ["PYTHONPATH"] = os.pathsep.join(
             p for p in (str(REPO), os.environ.get("PYTHONPATH")) if p
         )
+    if args.mode == "arrival":
+        arrivals(args)
+        return
+
+    names = args.names or list(q.QUERIES)
+    unknown = [n for n in names if n not in q.QUERIES]
+    if unknown:
+        sys.exit(f"unknown queries: {unknown}")
+
     spark = get_spark("opt_profile")
     spark.sparkContext.setLogLevel("ERROR")
 

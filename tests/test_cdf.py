@@ -414,3 +414,67 @@ def test_cdf_checkpoint_crash_mid_swap_is_recoverable(spark, tmp_path, monkeypat
     assert _changes(cdf, since=1) == pre_deltas_1
     # __old still holds the pre-boundary history for inspection
     assert os.path.isdir(olds[0])
+
+
+def test_cdf_on_a_table_that_rebuckets_mid_feed(spark, tmp_path):
+    """A default (self-sizing) table under capture: a wave touching all
+    16 buckets re-sizes it (to 4 here, maxPartitionBytes lowered to a
+    third of its bytes), and the after-image is read back by the count
+    the merge committed. Replaying the feed rebuilds the table exactly,
+    and a stale re-emit against the re-bucketed table emits nothing."""
+    cdf = ChangeCapturingMergeTable(
+        ParquetMergeTable(spark, str(tmp_path / "t"), ["id"], version_col="ver")
+    )
+    schema = "id long, v string, ver long"
+    cdf.merge(spark.range(400).selectExpr("id", "CAST(id AS STRING) AS v", "1L AS ver"))
+    entry = cdf.table._snapshot()
+    assert entry["num_buckets"] == 16
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(sum(entry["bytes"].values()) // 3))
+    try:
+        cdf.merge(spark.range(0, 400, 2).selectExpr("id", "'w' AS v", "2L AS ver"))
+    finally:
+        spark.conf.set(key, old)
+    assert cdf.table._snapshot()["num_buckets"] == 4
+    assert len(cdf.read_changes(0).collect()) == 200  # all updates
+
+    cdf.merge(spark.createDataFrame([(2, "stale", 1), (4, "stale", 1)], schema))
+    assert cdf.read_changes(1).count() == 0
+    cdf.delete(spark.createDataFrame([(1,), (2,), (999,)], "id long"))
+    cdf.merge(spark.createDataFrame([(1, "back", 3), (500, "new", 1)], schema))
+
+    replayed = ParquetMergeTable(
+        spark, str(tmp_path / "replay"), ["id"], version_col="ver", num_buckets=4
+    )
+    feed = cdf.read_changes().collect()
+    for seq in sorted({r._cdf_seq for r in feed}):
+        batch = [r for r in feed if r._cdf_seq == seq]
+        ups = [(r.id, r.v, r.ver) for r in batch if r._change_type != "delete"]
+        dels = [(r.id,) for r in batch if r._change_type == "delete"]
+        if ups:
+            replayed.merge(spark.createDataFrame(ups, schema))
+        if dels:
+            replayed.delete(spark.createDataFrame(dels, "id long"))
+    got = {tuple(r) for r in replayed.read().select("id", "v", "ver").collect()}
+    want = {tuple(r) for r in cdf.read().select("id", "v", "ver").collect()}
+    assert got == want
+    assert len(want) == 400 and (1, "back", 3) in want and (2, "w", 2) not in want
+
+
+def test_seq_dirs_py4j_calls_do_not_grow_with_feed_commits(spark, tmp_path, py4j_calls):
+    """The feed's listing is printed once, not walked an element at a
+    time through py4j (45 calls for 5 commits and 141 for 21 that way)."""
+    counts = []
+    for n in (5, 21):
+        cdf = _mk(spark, tmp_path / f"t{n}")
+        for k in range(n):
+            part = tmp_path / f"t{n}" / "t__changes" / f"_cdf_seq={k}"
+            part.mkdir(parents=True)
+            (part / "part-0.parquet").write_bytes(b"")
+        with py4j_calls() as c:
+            seqs = cdf._seq_dirs()
+        assert sorted(seqs) == list(range(n))
+        counts.append(c["calls"])
+    assert counts[1] <= counts[0], counts

@@ -23,6 +23,11 @@ def _plain(spark, path):
     return ParquetMergeTable(spark, path, ["k"], num_buckets=4)
 
 
+def _sized(spark, path):
+    """Sizes its bucket count to its bytes: 16 at the first commit."""
+    return ParquetMergeTable(spark, path, ["k"])
+
+
 def _scd2(spark, path):
     return Scd2MergeTable(spark, path, ["k"], ts_col="ts", num_buckets=4)
 
@@ -54,6 +59,12 @@ def _cases(spark):
     return {
         "merge": (
             _plain, two_merges, lambda t: t.merge(ups.selectExpr("k", "v * 10 AS v"))
+        ),
+        # every live bucket touched: 16 buckets become 1
+        "resizing_merge": (
+            _sized,
+            lambda t: t.merge(base),
+            lambda t: t.merge(base.selectExpr("k", "v * 10 AS v")),
         ),
         "evolving_merge": (
             _plain, two_merges, lambda t: t.merge(wide, allow_schema_evolution=True)
@@ -117,7 +128,10 @@ def _assert_clean(t):
 
 @pytest.mark.parametrize(
     "op",
-    ["merge", "evolving_merge", "delete", "overwrite", "compact", "scd2_merge"],
+    [
+        "merge", "resizing_merge", "evolving_merge", "delete", "overwrite",
+        "compact", "scd2_merge",
+    ],
 )
 def test_crash_at_every_step_reads_before_or_after(spark, tmp_path, monkeypatch, op):
     make, setup, run = _cases(spark)[op]
@@ -132,6 +146,9 @@ def test_crash_at_every_step_reads_before_or_after(spark, tmp_path, monkeypatch,
     _assert_clean(make(spark, reference))
     if op != "compact":
         assert after != before
+    if op == "resizing_merge":
+        assert make(spark, base)._snapshot()["num_buckets"] == 16
+        assert make(spark, reference)._snapshot()["num_buckets"] == 1
 
     for point, want in (
         ("after_write", before),
@@ -195,7 +212,7 @@ def test_merge_py4j_calls_grow_slowly_with_touched_buckets(
     one = spark.range(1).selectExpr("id", "2 AS ver", "'b' AS v")
     fifty = spark.range(0, 2000, 40).selectExpr("id", "2 AS ver", "'b' AS v")
     t = handle()
-    assert fifty.selectExpr(f"{t._bucket_sql()} AS b").distinct().count() == 16
+    assert fifty.selectExpr(f"{t._bucket_sql(16)} AS b").distinct().count() == 16
 
     counts = []
     for updates in (one, fifty):

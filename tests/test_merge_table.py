@@ -4,15 +4,18 @@ the commit log (``_log/<N>.json`` names each bucket's live directory).
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
 from pyspark.sql import Row
 
 from airbnb_cdc_spark.operators.merge import (
+    BUCKET_COL,
     ParquetMergeTable,
     _schema_of,
     merge_dataframes,
+    suggest_num_buckets,
 )
 
 
@@ -280,7 +283,9 @@ def test_evolving_merge_matches_reference(spark, tmp_path):
 @pytest.mark.parametrize("version_col", [None, "ver"])
 def test_merge_rewrite_plan_has_one_exchange(spark, tmp_path, version_col):
     """The frame merge() writes shuffles once: the repartition on
-    _bucket also clusters the window, so no second exchange."""
+    _bucket also clusters the window, so no second exchange. That holds
+    when the write keeps the table's 8 buckets and when it re-buckets
+    the stored rows into 2."""
     import io
     import re
     from contextlib import redirect_stdout
@@ -290,14 +295,15 @@ def test_merge_rewrite_plan_has_one_exchange(spark, tmp_path, version_col):
     updates = spark.createDataFrame(
         [Row(k="k1", v=-1, ver=2), Row(k="k1", v=-2, ver=3), Row(k="new", v=0, ver=1)]
     )
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        t._rewrite(
-            t._snapshot(), updates, list(range(8)), allow_schema_evolution=False
-        ).explain()
-    plan = buf.getvalue()
-    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
-    assert "Window" in plan, plan
+    for num_buckets in (8, 2):
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            t._rewrite(
+                t._snapshot(), updates, list(range(8)), False, num_buckets
+            ).explain()
+        plan = buf.getvalue()
+        assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
+        assert "Window" in plan, plan
 
 
 # -- SCD2 ------------------------------------------------------------------
@@ -467,3 +473,98 @@ def test_type_mismatch_raises_and_writes_nothing(
             t.delete(bad)
     assert sorted(p for p in Path(t.path).rglob("*") if p.is_file()) == files
     assert [tuple(r) for r in t.read().collect()] == [stored_row]
+
+
+# -- the bucket count, sized to the table's bytes ----------------------------
+
+
+def _data_files(t):
+    return sorted(Path(t.path).glob("_bucket=*/_c=*/*.parquet"))
+
+
+@contextmanager
+def _max_partition_bytes(spark, n):
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_default_table_sizes_itself_after_a_full_touch_merge(spark, tmp_path):
+    """A first commit writes 16 buckets; a merge whose wave touches all
+    of them rewrites the table anyway, so it re-sizes a 2,000-row table
+    (tens of kB, one maxPartitionBytes holds it) to one bucket, one data
+    file. A fresh default handle adopts the entry's count: it reads the
+    same rows and its merges route by that count (a handle hashing into
+    16 buckets would insert a duplicate instead of updating)."""
+    path = str(tmp_path / "t")
+    t = ParquetMergeTable(spark, path, ["id"], version_col="ver")
+    base = spark.range(2000).selectExpr("id", "1 AS ver", "CAST(id AS STRING) AS v")
+    t.merge(base)
+    assert t._snapshot()["num_buckets"] == 16
+    assert len(_data_files(t)) == 16
+
+    wave = spark.range(0, 2000, 40).selectExpr("id", "2 AS ver", "'b' AS v")
+    t.merge(wave)
+    entry = t._snapshot()
+    assert entry["num_buckets"] == 1
+    assert len(_data_files(t)) == 1
+    assert entry["bytes"]["0"] == _data_files(t)[0].stat().st_size
+    want = merge_dataframes(base, wave, ["id"], "ver")
+
+    other = ParquetMergeTable(spark, path, ["id"], version_col="ver")
+    assert _rowset(other.read()) == _rowset(want)
+    late = spark.createDataFrame([(7, 3, "c")], "id long, ver int, v string")
+    other.merge(late)
+    assert _rowset(t.read()) == _rowset(merge_dataframes(want, late, ["id"], "ver"))
+
+
+def test_compact_sizes_the_count_to_bytes_over_max_partition_bytes(spark, tmp_path):
+    """compact() re-picks the count from the bytes the entry records:
+    ceil(bytes / maxPartitionBytes) rounded up to a power of two. Rows
+    are unchanged and every key sits in the bucket its hash names."""
+    t = ParquetMergeTable(spark, str(tmp_path / "t"), ["id"])
+    base = spark.range(2000).selectExpr("id", "sha2(CAST(id AS STRING), 256) AS v")
+    t.merge(base)
+    t.compact()  # a few kB: one bucket
+    entry = t._snapshot()
+    assert entry["num_buckets"] == 1
+    stored = entry["bytes"]["0"]
+
+    with _max_partition_bytes(spark, stored // 5):  # 5 or 6 splits
+        t.compact()
+    entry = t._snapshot()
+    assert entry["num_buckets"] == 8
+    assert len(entry["buckets"]) == len(_data_files(t)) == 8
+    assert _rowset(t.read()) == _rowset(base)
+    misplaced = t._scan(entry).filter(f"{BUCKET_COL} != {t._bucket_sql(8)}")
+    assert misplaced.count() == 0
+
+
+def test_pinned_table_keeps_its_count(spark, tmp_path):
+    """An explicit num_buckets pins the count through full-touch merges
+    and compact(), whatever the bytes."""
+    t = ParquetMergeTable(spark, str(tmp_path / "t"), ["id"], num_buckets=8)
+    base = spark.range(2000).selectExpr("id", "'a' AS v")
+    t.merge(base)
+    wave = spark.range(0, 2000, 10).selectExpr("id", "'b' AS v")
+    t.merge(wave)
+    assert t._snapshot()["num_buckets"] == 8
+    with _max_partition_bytes(spark, 1024 * 1024):
+        t.compact()
+    entry = t._snapshot()
+    assert entry["num_buckets"] == 8 and len(entry["buckets"]) == 8
+    assert _rowset(t.read()) == _rowset(merge_dataframes(base, wave, ["id"]))
+
+
+def test_suggest_num_buckets_targets_one_split_per_bucket():
+    mib = 1024**2
+    assert suggest_num_buckets(0) == 1
+    assert suggest_num_buckets(128 * mib) == 1
+    assert suggest_num_buckets(128 * mib + 1) == 2
+    assert suggest_num_buckets(5 * 128 * mib) == 8
+    assert suggest_num_buckets(100 * 1024**4) == 65536  # 100 TB: clamped
+    assert suggest_num_buckets(10_000, target_bytes=1_000) == 16

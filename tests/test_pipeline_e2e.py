@@ -402,3 +402,23 @@ def test_run_all_incremental_matches_from_scratch(spark, tmp_path):
     )
     assert rows(tables3["enriched_booking"].read()) == before_view
     assert rows(tables3["booking_customer_aggregation"].read()) == before_agg
+
+
+def test_list_files_py4j_calls_do_not_grow_with_files(spark, tmp_path, py4j_calls):
+    """The folder's listing is printed once, not walked an element at a
+    time through py4j; directories and other suffixes are left out."""
+    from airbnb_cdc_spark.sources.customer_csv import list_files
+
+    counts = []
+    for n in (1, 20):
+        folder = tmp_path / f"raw{n}"
+        (folder / "sub.csv").mkdir(parents=True)
+        (folder / "notes.txt").write_text("x")
+        for i in range(n):
+            (folder / f"customer_{i:02d} a,b.csv").write_text("customer_id\n1\n")
+        with py4j_calls() as c:
+            names = list_files(spark, str(folder))
+        assert names == [f"customer_{i:02d} a,b.csv" for i in range(n)]
+        counts.append(c["calls"])
+    assert counts[1] <= counts[0], counts
+    assert list_files(spark, str(tmp_path / "missing")) == []
