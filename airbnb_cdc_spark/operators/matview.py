@@ -22,8 +22,9 @@ paths commute with retries, and each refresh is one commit of the
 table's log — the same guarantees the CDC sink relies on
 (operators/merge.py). Like any merge table it sizes its bucket count
 to its bytes unless ``num_buckets`` pins it: it starts at 16 buckets,
-and a refresh whose delta touches every bucket re-sizes it to one
-``spark.sql.files.maxPartitionBytes`` of parquet per bucket.
+and a refresh whose delta touches every bucket re-sizes it with
+``merge.suggest_num_buckets`` (one bucket below one
+``spark.sql.files.openCostInBytes``, else at least 16).
 
 ``dim`` inputs must be one-row-per-join-key (pre-dedup with
 ``lookup.latest_per_key`` when the dim itself is a change feed). Dim

@@ -22,11 +22,14 @@ Design for 100 TB:
   commit uses 16 buckets, so a large first load never funnels into one
   task. A write that replaces every live bucket (``overwrite``,
   ``compact``, a merge, delete or SCD2 merge whose wave touches them
-  all) rewrites the whole table anyway, so it re-picks ``n`` from the
-  bytes the current entry records: ``suggest_num_buckets``, one
-  ``spark.sql.files.maxPartitionBytes`` of parquet per bucket. Any other
-  write keeps the entry's ``n``. A handle built with ``num_buckets``
-  pins the count and never re-buckets.
+  all) rewrites the whole table anyway, so it re-picks ``n`` with
+  ``suggest_num_buckets`` from the larger of the bytes the current entry
+  records and the bytes of the files its input scans: one bucket for a
+  table smaller than one ``spark.sql.files.openCostInBytes``, else at
+  least 16, and one ``spark.sql.files.maxPartitionBytes`` of parquet per
+  bucket once that asks for more. Any other write keeps the entry's
+  ``n``. A handle built with ``num_buckets`` pins the count and never
+  re-buckets.
 - A merge shuffles once. The stored rows of the touched buckets and the
   update rows are unioned and repartitioned on ``_bucket``; one
   ``row_number`` window per key then picks each key's survivor, and the
@@ -81,7 +84,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from airbnb_cdc_spark.operators.lookup import latest_per_key
-from airbnb_cdc_spark.session import _byte_conf, sql_ident
+from airbnb_cdc_spark.session import _byte_conf, _scan_bytes, sql_ident
 
 BUCKET_COL = "_bucket"
 COMMIT_COL = "_c"
@@ -106,15 +109,21 @@ _GLOB_CHARS = re.compile(r"([{}\[\]*?\\])")
 _DIGITS = {T.ByteType: 3, T.ShortType: 5, T.IntegerType: 10, T.LongType: 20}
 
 
-def suggest_num_buckets(table_bytes: int, target_bytes: int = 128 * 1024**2) -> int:
-    """The bucket count for ``table_bytes`` of parquet: ``ceil(bytes /
-    target)`` rounded up to a power of two, clamped to 1..65,536. Each
-    bucket then holds about one ``target_bytes`` (the table passes
-    ``spark.sql.files.maxPartitionBytes``, one scan split), so a merge
-    touching few keys rewrites few such buckets at any table size, and a
-    small table is one file per commit instead of sixteen."""
-    want = max(1, -(-table_bytes // target_bytes))
-    return min(MAX_BUCKETS, 1 << (want - 1).bit_length())
+def suggest_num_buckets(table_bytes: int, split_bytes: int, small_bytes: int) -> int:
+    """The bucket count for ``table_bytes`` of parquet. A table smaller
+    than ``small_bytes`` is one bucket: the table passes
+    ``spark.sql.files.openCostInBytes``, the bytes Spark reckons a file
+    open costs, so rewriting all of it costs about one file open more
+    than rewriting a sixteenth, and each commit writes one file instead
+    of up to sixteen. A larger table keeps at least 16 buckets, so a wave
+    touching few keys rewrites no more of it than a fixed 16 would; past
+    16 splits it takes ``ceil(bytes / split_bytes)`` (the table passes
+    ``spark.sql.files.maxPartitionBytes``, one scan split per bucket)
+    rounded up to a power of two, clamped to 65,536."""
+    if table_bytes < small_bytes:
+        return 1
+    want = -(-table_bytes // split_bytes)
+    return min(MAX_BUCKETS, max(FIRST_BUCKETS, 1 << (want - 1).bit_length()))
 
 
 def merge_dataframes(
@@ -255,30 +264,33 @@ class ParquetMergeTable:
             f"{self._bucket_sql(num_buckets)} AS {BUCKET_COL}",
         ).repartition(BUCKET_COL)
 
-    def _resized(self, entry: dict | None) -> int:
+    def _resized(self, entry: dict | None, df: DataFrame | None = None) -> int:
         """The bucket count of a write that replaces the whole table
-        after ``entry``: the pinned count; else 16 for a first commit;
-        else sized to the bytes ``entry`` records (an entry written
-        before the log recorded bytes keeps its count)."""
+        after ``entry`` with rows drawn from ``df``: the pinned count;
+        else 16 for a first commit; else sized to the larger of the bytes
+        ``entry`` records and the bytes of the files ``df`` scans, so an
+        input far larger than the table never funnels into its count."""
         if self.num_buckets is not None:
             return self.num_buckets
         if entry is None:
             return FIRST_BUCKETS
-        if "bytes" not in entry:
-            return entry["num_buckets"]
-        target = _byte_conf(
-            self.spark, "spark.sql.files.maxPartitionBytes", 128 * 1024**2
+        stored = sum(entry["bytes"].values())
+        incoming = (_scan_bytes(df) or 0) if df is not None else 0
+        return suggest_num_buckets(
+            max(stored, incoming),
+            _byte_conf(self.spark, "spark.sql.files.maxPartitionBytes", 128 * 1024**2),
+            _byte_conf(self.spark, "spark.sql.files.openCostInBytes", 4 * 1024**2),
         )
-        return suggest_num_buckets(sum(entry["bytes"].values()), target)
 
     def _plan_write(
-        self, entry: dict, touched: set[int]
+        self, entry: dict, touched: set[int], df: DataFrame | None = None
     ) -> tuple[set[int] | None, int]:
         """(the buckets a write over ``touched`` replaces, the count it
         writes). A write touching every live bucket replaces the table
-        (None) and may re-size it; any other keeps the entry's count."""
+        (None) and may re-size it, ``df`` being its input; any other
+        keeps the entry's count."""
         if touched >= {int(b) for b in entry["buckets"]}:
-            return None, self._resized(entry)
+            return None, self._resized(entry, df)
         return touched, entry["num_buckets"]
 
     def _hadoop(self) -> SimpleNamespace:
@@ -412,9 +424,10 @@ class ParquetMergeTable:
         """Land ``df`` (with ``_bucket`` of ``num_buckets``, one partition
         per bucket) as new directories, commit the log entry after
         ``entry``, then GC. The new entry keeps the live directories of
-        the buckets outside ``replaced`` (None: none are kept), names the
-        new ones and records each live bucket's bytes, all from one
-        listing of the data directories and their files."""
+        the buckets outside ``replaced`` (None: none are kept) with the
+        bytes ``entry`` records for them, and names the new ones with
+        their bytes, from one listing of every data directory and of this
+        commit's files."""
         version = 0 if entry is None else entry["version"] + 1
         cid = f"v{version}-{uuid.uuid4().hex[:8]}"
         (
@@ -423,27 +436,28 @@ class ParquetMergeTable:
             .mode("append")
             .parquet(self.path)
         )
-        on_disk, sizes = [], {}
-        for path, is_dir, length in self._glob(
-            f"{BUCKET_COL}=*/{COMMIT_COL}=*{{,/*.parquet}}"
-        ):
-            if is_dir:
-                on_disk.append(_DATA_DIR.search(path).groups())
-            else:
-                d = _DATA_DIR.search(path.rsplit("/", 1)[0])[1]
-                sizes[d] = sizes.get(d, 0) + length
         live = (
             {}
             if entry is None or replaced is None
             else {b: d for b, d in entry["buckets"].items() if int(b) not in replaced}
         )
+        sizes = {b: entry["bytes"][b] for b in live}
+        on_disk = []
+        for path, is_dir, length in self._glob(
+            f"{BUCKET_COL}=*/{{{COMMIT_COL}=*,{COMMIT_COL}={cid}/*.parquet}}"
+        ):
+            if is_dir:
+                on_disk.append(_DATA_DIR.search(path).groups())
+            else:
+                b = _DATA_DIR.search(path.rsplit("/", 1)[0])[2]
+                sizes[b] = sizes.get(b, 0) + length
         live.update({b: d for d, b, c in on_disk if c == cid})
         new = {
             "version": version,
             "num_buckets": num_buckets,
             "schema": schema.jsonValue(),
             "buckets": live,
-            "bytes": {b: sizes.get(d, 0) for b, d in live.items()},
+            "bytes": sizes,
         }
         self._commit(new)
         self._gc(new, on_disk)
@@ -490,11 +504,12 @@ class ParquetMergeTable:
     def overwrite(self, df: DataFrame) -> None:
         """Full truncate-and-reload (O8): the new files land beside the
         old ones and one commit replaces the whole table. The bucket
-        count is sized from the stored bytes, never from ``df``: the
-        optimizer's estimate of a join's output is the product of its
-        inputs, not the rows it writes."""
+        count is sized from the stored bytes and the bytes of the files
+        ``df`` scans, never from the optimizer's estimate of ``df``: for
+        a join that is the product of its inputs, not the rows it
+        writes."""
         entry = self._snapshot()
-        n = self._resized(entry)
+        n = self._resized(entry, df)
         self._write_commit(entry, self._bucketed(df, n), df.schema, None, n)
 
     # -- merge -------------------------------------------------------------
@@ -537,7 +552,7 @@ class ParquetMergeTable:
         if not touched:
             return
 
-        replaced, n = self._plan_write(entry, set(touched))
+        replaced, n = self._plan_write(entry, set(touched), updates)
         merged = self._rewrite(entry, updates, touched, allow_schema_evolution, n)
         schema = (
             merged.drop(BUCKET_COL).schema
@@ -646,7 +661,7 @@ class ParquetMergeTable:
 
     def compact(self) -> None:
         """Full rewrite into fresh single-file buckets (Delta OPTIMIZE
-        analog), re-sized to the stored bytes like any write that
+        analog), re-sized to its bytes like any write that
         replaces the whole table (a pinned handle writes its own count).
         Merges already replace whole bucket dirs, so files don't
         accumulate per merge; compact matters after a table grew by
@@ -744,7 +759,7 @@ class Scd2MergeTable(ParquetMergeTable):
         }
         if not touched:
             return
-        replaced, n = self._plan_write(entry, touched)
+        replaced, n = self._plan_write(entry, touched, fresh)
         current = self._scan(entry, touched)
         closed = current.filter(F.col("is_current") == 0).drop(BUCKET_COL)
         open_rows = current.filter(F.col("is_current") == 1).select(

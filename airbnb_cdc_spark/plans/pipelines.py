@@ -87,7 +87,8 @@ def run_all(
     The three tables size their bucket counts to their bytes: each
     starts at 16 buckets, and its first write that replaces every bucket
     (the aggregate's next overwrite, a wave touching every bucket)
-    re-sizes it. At the reference's size that is one bucket, so every
+    re-sizes it. At the reference's size (under one
+    ``spark.sql.files.openCostInBytes``) that is one bucket, so every
     later commit writes one file instead of sixteen."""
     dim = ParquetMergeTable(spark, f"{warehouse_dir}/dim_customer", ["customer_id"])
     fact = ParquetMergeTable(
@@ -129,8 +130,8 @@ def run_all_incremental(
     dict includes the advanced cursors.
 
     At 100 TB: every leg is delta-proportional — the fact merge and the
-    view merge touch only the buckets the batch's keys hash to (each
-    table sized to about one ``maxPartitionBytes`` per bucket), the
+    view merge touch only the buckets the batch's keys hash to (a
+    table that large holds about one ``maxPartitionBytes`` per bucket), the
     change-feed read prunes to unseen seq partitions, the dim side of
     the enrichment broadcasts, and the dim-delta path semi-join-prunes
     the fact scan to affected join keys before re-enriching.

@@ -3,11 +3,11 @@
 Two modes over registered queries, and one over the E1 pipeline:
 
     # Capture .explain("formatted") snapshots (plans/r17/<q>_<tag>.txt):
-    python scripts/opt_profile.py plans --tag before q1 q2 ...
+    python scripts/opt_profile.py plans q1 q2 ... --tag before
 
     # Time queries with the noop sink (computes EVERY column — §1.4),
     # min-of-N, labeled jobs; prints one JSON line per query:
-    python scripts/opt_profile.py time --reps 3 q1 q2 ...
+    python scripts/opt_profile.py time q1 q2 ... --reps 3
 
 `time` uses the noop sink *in addition to* the bench's count() so the
 two methodologies stay distinguishable: bench.py remains the driver
@@ -74,50 +74,79 @@ def _stat(path: str) -> tuple[str, list[str]]:
     return head.split("(", 1)[1], rest.split()
 
 
-def _cpu_split() -> dict[str, float]:
-    """CPU seconds used so far by this process, by its JVM (less the
-    JIT compiler threads), by the JVM's Python workers and by the other
-    children the JVM has reaped. Fields after the command in a stat
-    file: utime=11 stime=12 cutime=13 cstime=14."""
-    parent, command = {}, {}
+class _Cpu:
+    """CPU seconds used so far by this process (``driver_py``), by its
+    JVM less the C1/C2 JIT compiler threads (``jvm``), by the children
+    the JVM has reaped (``jvm_children``) and, on request, by the JVM's
+    Python workers, reaped ones included (``workers``). The JVM and its
+    compiler threads, which live as long as the JVM under
+    -XX:-UseDynamicNumberOfCompilerThreads, are found once: a walk of
+    every process and JVM thread per sample costs more driver CPU than
+    an E1 arrival spends. Fields after the command in a stat file:
+    ppid=1 utime=11 stime=12 cutime=13 cstime=14."""
+
+    def __init__(self) -> None:
+        self.jvm = next(
+            (pid for pid, (command, ppid) in _processes().items()
+             if command == "java" and ppid == os.getpid()),
+            None,
+        )
+        if self.jvm is None:
+            raise RuntimeError("no JVM under this process")
+        self.jit = [
+            tid
+            for tid in os.listdir(f"/proc/{self.jvm}/task")
+            if _stat(f"/proc/{self.jvm}/task/{tid}/stat")[0].startswith(
+                ("C1 CompilerThre", "C2 CompilerThre")
+            )
+        ]
+        self.ticks = os.sysconf("SC_CLK_TCK")
+
+    def sample(self, workers: bool = False) -> dict[str, float]:
+        me = _stat("/proc/self/stat")[1]
+        jvm = _stat(f"/proc/{self.jvm}/stat")[1]
+        jit = sum(
+            int(tf[11]) + int(tf[12])
+            for tf in (_stat(f"/proc/{self.jvm}/task/{t}/stat")[1] for t in self.jit)
+        )
+        split = {
+            "driver_py": int(me[11]) + int(me[12]),
+            "jvm": int(jvm[11]) + int(jvm[12]) - jit,
+            "jvm_children": int(jvm[13]) + int(jvm[14]),
+        }
+        if workers:
+            split["workers"] = self._workers()
+        return {k: v / self.ticks for k, v in split.items()}
+
+    def _workers(self) -> int:
+        """Ticks of the Python processes under the JVM and their reaped
+        children."""
+        procs = _processes()
+        ticks, frontier = 0, [self.jvm]
+        while frontier:
+            up = frontier.pop()
+            kids = [p for p, (_, ppid) in procs.items() if ppid == up]
+            frontier += kids
+            for kid in kids:
+                if procs[kid][0].startswith("python"):
+                    try:
+                        ticks += sum(int(x) for x in _stat(f"/proc/{kid}/stat")[1][11:15])
+                    except OSError:  # a worker that ended meanwhile
+                        continue
+        return ticks
+
+
+def _processes() -> dict[int, tuple[str, int]]:
+    """pid -> (command, parent pid) of every process."""
+    procs = {}
     for name in os.listdir("/proc"):
         if name.isdigit():
             try:
-                command[int(name)], fields = _stat(f"/proc/{name}/stat")
+                command, fields = _stat(f"/proc/{name}/stat")
             except OSError:
                 continue
-            parent[int(name)] = int(fields[1])
-    ticks = os.sysconf("SC_CLK_TCK")
-    me = _stat(f"/proc/{os.getpid()}/stat")[1]
-    split = {"driver_py": int(me[11]) + int(me[12]), "jvm": 0, "workers": 0, "jvm_children": 0}
-    for jvm in (p for p, pp in parent.items() if pp == os.getpid() and command[p] == "java"):
-        try:
-            fields = _stat(f"/proc/{jvm}/stat")[1]
-            tids = os.listdir(f"/proc/{jvm}/task")
-        except OSError:
-            continue
-        split["jvm"] += int(fields[11]) + int(fields[12])
-        split["jvm_children"] += int(fields[13]) + int(fields[14])
-        for tid in tids:
-            try:
-                name, tf = _stat(f"/proc/{jvm}/task/{tid}/stat")
-            except OSError:  # a thread that ended meanwhile
-                continue
-            if name.startswith(("C1 CompilerThre", "C2 CompilerThre")):
-                split["jvm"] -= int(tf[11]) + int(tf[12])
-        frontier = [jvm]
-        while frontier:
-            up = frontier.pop()
-            kids = [c for c, pp in parent.items() if pp == up]
-            frontier += kids
-            for kid in kids:
-                try:
-                    fields = _stat(f"/proc/{kid}/stat")[1]
-                except OSError:
-                    continue
-                if command[kid].startswith("python"):
-                    split["workers"] += sum(int(x) for x in fields[11:15])
-    return {k: v / ticks for k, v in split.items()}
+            procs[int(name)] = (command, int(fields[1]))
+    return procs
 
 
 def tasks_run(sc, group: str) -> int:
@@ -135,38 +164,13 @@ def _machine_processes() -> int:
         return next(int(line.split()[1]) for line in f if line.startswith("processes "))
 
 
-def _child_jvm() -> int:
-    """The pid of the JVM this process started."""
-    for name in os.listdir("/proc"):
-        if name.isdigit():
-            try:
-                command, fields = _stat(f"/proc/{name}/stat")
-            except OSError:
-                continue
-            if command == "java" and int(fields[1]) == os.getpid():
-                return int(name)
-    raise RuntimeError("no JVM under this process")
-
-
 class _Probe:
     """Per-phase counters of one E1 run; see the module docstring."""
 
     def __init__(self, spark, warehouse: str) -> None:
         self.warehouse = warehouse
         self.dag = spark.sparkContext._jsc.sc().dagScheduler()
-        # _cpu_split walks every process and JVM thread: at a dozen
-        # samples per arrival that cost more driver CPU than the arrival
-        # itself spent, so the JVM and its compiler threads (which live
-        # as long as the JVM under -XX:-UseDynamicNumberOfCompilerThreads)
-        # are found once
-        self.jvm = _child_jvm()
-        self.jit = [
-            tid
-            for tid in os.listdir(f"/proc/{self.jvm}/task")
-            if _stat(f"/proc/{self.jvm}/task/{tid}/stat")[0].startswith(
-                ("C1 CompilerThre", "C2 CompilerThre")
-            )
-        ]
+        self.cpu = _Cpu()
         self.totals: dict[str, Counter] = {}
 
     def _files(self) -> set[str]:
@@ -178,22 +182,14 @@ class _Probe:
         }
 
     def _sample(self) -> dict:
-        ticks = os.sysconf("SC_CLK_TCK")
-        me = _stat("/proc/self/stat")[1]
-        jvm = _stat(f"/proc/{self.jvm}/stat")[1]
-        jit = sum(
-            int(tf[11]) + int(tf[12])
-            for tf in (_stat(f"/proc/{self.jvm}/task/{t}/stat")[1] for t in self.jit)
+        sample = {f"cpu_{k}": v for k, v in self.cpu.sample().items()}
+        sample.update(
+            jobs=int(self.dag.nextJobId()),  # py4j hands the AtomicInteger over as an int
+            processes=_machine_processes(),
+            files=self._files(),
+            wall_s=time.perf_counter(),
         )
-        return {
-            "cpu_driver_py": (int(me[11]) + int(me[12])) / ticks,
-            "cpu_jvm": (int(jvm[11]) + int(jvm[12]) - jit) / ticks,
-            "cpu_jvm_children": (int(jvm[13]) + int(jvm[14])) / ticks,
-            "jobs": int(self.dag.nextJobId()),  # py4j hands the AtomicInteger over as an int
-            "processes": _machine_processes(),
-            "files": self._files(),
-            "wall_s": time.perf_counter(),
-        }
+        return sample
 
     @contextmanager
     def phase(self, name: str):
@@ -278,7 +274,7 @@ def main() -> None:
 
     if args.mode != "plans":
         # compiler threads that live as long as the JVM, so the CPU they
-        # spend is told apart exactly (_cpu_split); the repo root lets
+        # spend is told apart exactly (_Cpu); the repo root lets
         # Spark's Python workers import the program from any directory
         os.environ["PYSPARK_SUBMIT_ARGS"] = (
             "--conf spark.driver.extraJavaOptions=-XX:-UseDynamicNumberOfCompilerThreads"
@@ -313,6 +309,7 @@ def main() -> None:
         return
 
     # time mode
+    probe = _Cpu()
     for name in names:
         fn = q.QUERIES[name]
         if args.warm:
@@ -328,13 +325,13 @@ def main() -> None:
         for rep in range(args.reps):
             group = f"opt:{name}:{rep}"
             sc.setJobGroup(group, group)
-            c0, t0 = _cpu_split(), time.perf_counter()
+            c0, t0 = probe.sample(workers=True), time.perf_counter()
             df = fn(spark, args.sf_dir)
             if args.sink == "noop":
                 df.write.format("noop").mode("overwrite").save()
             else:
                 df.count()
-            dt, c1 = time.perf_counter() - t0, _cpu_split()
+            dt, c1 = time.perf_counter() - t0, probe.sample(workers=True)
             sc.setLocalProperty("spark.jobGroup.id", None)
             release_cached()
             runs.append(round(dt, 3))

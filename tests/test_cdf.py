@@ -418,10 +418,11 @@ def test_cdf_checkpoint_crash_mid_swap_is_recoverable(spark, tmp_path, monkeypat
 
 def test_cdf_on_a_table_that_rebuckets_mid_feed(spark, tmp_path):
     """A default (self-sizing) table under capture: a wave touching all
-    16 buckets re-sizes it (to 4 here, maxPartitionBytes lowered to a
-    third of its bytes), and the after-image is read back by the count
-    the merge committed. Replaying the feed rebuilds the table exactly,
-    and a stale re-emit against the re-bucketed table emits nothing."""
+    16 buckets re-sizes it (to 32 here, maxPartitionBytes and
+    openCostInBytes lowered to a twentieth of its bytes), and the
+    after-image is read back by the count the merge committed. Replaying
+    the feed rebuilds the table exactly, and a stale re-emit against the
+    re-bucketed table emits nothing."""
     cdf = ChangeCapturingMergeTable(
         ParquetMergeTable(spark, str(tmp_path / "t"), ["id"], version_col="ver")
     )
@@ -430,14 +431,16 @@ def test_cdf_on_a_table_that_rebuckets_mid_feed(spark, tmp_path):
     entry = cdf.table._snapshot()
     assert entry["num_buckets"] == 16
 
-    key = "spark.sql.files.maxPartitionBytes"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(sum(entry["bytes"].values()) // 3))
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    old = {k: spark.conf.get(k) for k in keys}
+    for k in keys:
+        spark.conf.set(k, str(sum(entry["bytes"].values()) // 20))
     try:
         cdf.merge(spark.range(0, 400, 2).selectExpr("id", "'w' AS v", "2L AS ver"))
     finally:
-        spark.conf.set(key, old)
-    assert cdf.table._snapshot()["num_buckets"] == 4
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert cdf.table._snapshot()["num_buckets"] == 32
     assert len(cdf.read_changes(0).collect()) == 200  # all updates
 
     cdf.merge(spark.createDataFrame([(2, "stale", 1), (4, "stale", 1)], schema))

@@ -477,26 +477,38 @@ def test_type_mismatch_raises_and_writes_nothing(
 
 # -- the bucket count, sized to the table's bytes ----------------------------
 
+MAX_SPLIT = "spark.sql.files.maxPartitionBytes"
+OPEN_COST = "spark.sql.files.openCostInBytes"
+
 
 def _data_files(t):
     return sorted(Path(t.path).glob("_bucket=*/_c=*/*.parquet"))
 
 
 @contextmanager
-def _max_partition_bytes(spark, n):
-    key = "spark.sql.files.maxPartitionBytes"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(n))
+def _confs(spark, settings: dict):
+    """Session confs set for the block, restored after."""
+    old = {k: spark.conf.get(k) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, str(v))
     try:
         yield
     finally:
-        spark.conf.set(key, old)
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def _misplaced(t):
+    """Rows stored outside the bucket their key hashes to."""
+    entry = t._snapshot()
+    scan = t._scan(entry)
+    return scan.filter(f"{BUCKET_COL} != {t._bucket_sql(entry['num_buckets'])}").count()
 
 
 def test_default_table_sizes_itself_after_a_full_touch_merge(spark, tmp_path):
     """A first commit writes 16 buckets; a merge whose wave touches all
     of them rewrites the table anyway, so it re-sizes a 2,000-row table
-    (tens of kB, one maxPartitionBytes holds it) to one bucket, one data
+    (tens of kB, under one openCostInBytes) to one bucket, one data
     file. A fresh default handle adopts the entry's count: it reads the
     same rows and its merges route by that count (a handle hashing into
     16 buckets would insert a duplicate instead of updating)."""
@@ -522,8 +534,31 @@ def test_default_table_sizes_itself_after_a_full_touch_merge(spark, tmp_path):
     assert _rowset(t.read()) == _rowset(merge_dataframes(want, late, ["id"], "ver"))
 
 
+def test_table_above_open_cost_keeps_sixteen_buckets(spark, tmp_path):
+    """A table at least one openCostInBytes large (lowered here to a
+    fifth of its bytes) keeps 16 buckets through a full-touch merge, so
+    a later one-key wave still rewrites a sixteenth of it; only the
+    bucket that key hashes to gets a new directory."""
+    t = ParquetMergeTable(spark, str(tmp_path / "t"), ["id"])
+    base = spark.range(2000).selectExpr("id", "sha2(CAST(id AS STRING), 256) AS v")
+    t.merge(base)
+    stored = sum(t._snapshot()["bytes"].values())
+    wave = spark.range(0, 2000, 40).selectExpr("id", "'b' AS v")
+    with _confs(spark, {OPEN_COST: stored // 5}):
+        t.merge(wave)
+        before = _live_dirs(t)
+        t.merge(spark.createDataFrame([(3, "c")], "id long, v string"))
+    after = _live_dirs(t)
+    assert t._snapshot()["num_buckets"] == 16
+    assert sum(after[b] != before[b] for b in before) == 1
+    want = merge_dataframes(merge_dataframes(base, wave, ["id"]),
+                            spark.createDataFrame([(3, "c")], "id long, v string"), ["id"])
+    assert _rowset(t.read()) == _rowset(want)
+
+
 def test_compact_sizes_the_count_to_bytes_over_max_partition_bytes(spark, tmp_path):
     """compact() re-picks the count from the bytes the entry records:
+    one bucket under one openCostInBytes; past 16 splits,
     ceil(bytes / maxPartitionBytes) rounded up to a power of two. Rows
     are unchanged and every key sits in the bucket its hash names."""
     t = ParquetMergeTable(spark, str(tmp_path / "t"), ["id"])
@@ -534,14 +569,44 @@ def test_compact_sizes_the_count_to_bytes_over_max_partition_bytes(spark, tmp_pa
     assert entry["num_buckets"] == 1
     stored = entry["bytes"]["0"]
 
-    with _max_partition_bytes(spark, stored // 5):  # 5 or 6 splits
-        t.compact()
+    with _confs(spark, {MAX_SPLIT: stored // 20, OPEN_COST: stored // 20}):
+        t.compact()  # 20 or 21 splits
     entry = t._snapshot()
-    assert entry["num_buckets"] == 8
-    assert len(entry["buckets"]) == len(_data_files(t)) == 8
+    assert entry["num_buckets"] == 32
+    assert len(entry["buckets"]) == len(_data_files(t)) == 32
     assert _rowset(t.read()) == _rowset(base)
-    misplaced = t._scan(entry).filter(f"{BUCKET_COL} != {t._bucket_sql(8)}")
-    assert misplaced.count() == 0
+    assert _misplaced(t) == 0
+
+
+@pytest.mark.parametrize("op", ["merge", "overwrite"])
+def test_large_input_grows_a_one_bucket_table(spark, tmp_path, op):
+    """A one-bucket table that takes an input far larger than itself
+    sizes the write by the bytes of the files the input scans, not by
+    the table's own: here 2,000 rows of parquet against a 10-row table,
+    with maxPartitionBytes a twentieth of the input, give 32 buckets
+    instead of one task writing everything into one."""
+    t = ParquetMergeTable(spark, str(tmp_path / "t"), ["id"])
+    small = spark.range(10).selectExpr("id", "'a' AS v")
+    t.merge(small)
+    t.compact()
+    assert t._snapshot()["num_buckets"] == 1
+
+    src = str(tmp_path / "src")
+    spark.range(2000).selectExpr(
+        "id", "sha2(CAST(id AS STRING), 256) AS v"
+    ).coalesce(1).write.parquet(src)
+    big = spark.read.parquet(src)
+    incoming = sum(f.stat().st_size for f in Path(src).glob("*.parquet"))
+    assert incoming > 20 * sum(t._snapshot()["bytes"].values())
+
+    with _confs(spark, {MAX_SPLIT: incoming // 20, OPEN_COST: incoming // 20}):
+        getattr(t, op)(big)
+    entry = t._snapshot()
+    assert entry["num_buckets"] == 32
+    assert len(_data_files(t)) == 32
+    want = merge_dataframes(small, big, ["id"]) if op == "merge" else big
+    assert _rowset(t.read()) == _rowset(want)
+    assert _misplaced(t) == 0
 
 
 def test_pinned_table_keeps_its_count(spark, tmp_path):
@@ -553,7 +618,7 @@ def test_pinned_table_keeps_its_count(spark, tmp_path):
     wave = spark.range(0, 2000, 10).selectExpr("id", "'b' AS v")
     t.merge(wave)
     assert t._snapshot()["num_buckets"] == 8
-    with _max_partition_bytes(spark, 1024 * 1024):
+    with _confs(spark, {MAX_SPLIT: 1024, OPEN_COST: 1024}):
         t.compact()
     entry = t._snapshot()
     assert entry["num_buckets"] == 8 and len(entry["buckets"]) == 8
@@ -562,9 +627,10 @@ def test_pinned_table_keeps_its_count(spark, tmp_path):
 
 def test_suggest_num_buckets_targets_one_split_per_bucket():
     mib = 1024**2
-    assert suggest_num_buckets(0) == 1
-    assert suggest_num_buckets(128 * mib) == 1
-    assert suggest_num_buckets(128 * mib + 1) == 2
-    assert suggest_num_buckets(5 * 128 * mib) == 8
-    assert suggest_num_buckets(100 * 1024**4) == 65536  # 100 TB: clamped
-    assert suggest_num_buckets(10_000, target_bytes=1_000) == 16
+    split, small = 128 * mib, 4 * mib
+    assert suggest_num_buckets(0, split, small) == 1
+    assert suggest_num_buckets(small - 1, split, small) == 1
+    assert suggest_num_buckets(small, split, small) == 16  # never 2..15
+    assert suggest_num_buckets(16 * split, split, small) == 16
+    assert suggest_num_buckets(16 * split + 1, split, small) == 32
+    assert suggest_num_buckets(100 * 1024**4, split, small) == 65536  # 100 TB
