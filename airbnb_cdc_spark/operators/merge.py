@@ -111,12 +111,13 @@ _DIGITS = {T.ByteType: 3, T.ShortType: 5, T.IntegerType: 10, T.LongType: 20}
 
 def suggest_num_buckets(table_bytes: int, split_bytes: int, small_bytes: int) -> int:
     """The bucket count for ``table_bytes`` of parquet. A table smaller
-    than ``small_bytes`` is one bucket: the table passes
+    than ``small_bytes`` is one bucket (the table passes
     ``spark.sql.files.openCostInBytes``, the bytes Spark reckons a file
-    open costs, so rewriting all of it costs about one file open more
-    than rewriting a sixteenth, and each commit writes one file instead
-    of up to sixteen. A larger table keeps at least 16 buckets, so a wave
-    touching few keys rewrites no more of it than a fixed 16 would; past
+    open costs): a wave touching every bucket writes one file instead of
+    sixteen, while a one-key wave rewrites the whole table instead of a
+    sixteenth (SCALE.md has both measured). A larger table keeps at
+    least 16 buckets, so a wave touching few keys rewrites no more of it
+    than a fixed 16 would; past
     16 splits it takes ``ceil(bytes / split_bytes)`` (the table passes
     ``spark.sql.files.maxPartitionBytes``, one scan split per bucket)
     rounded up to a power of two, clamped to 65,536."""
