@@ -126,15 +126,8 @@ class ChangeCapturingMergeTable:
         )
         # routed by the entry's bucket count: a merge that re-buckets the
         # table is read back with the count it committed
-        bucket = table._bucket_sql(entry["num_buckets"])
-        touched = {
-            r[0]
-            for r in keyed.selectExpr(f"{bucket} AS {BUCKET_COL}")
-            .distinct()
-            .collect()
-        }
         return (
-            table._scan(entry, touched)
+            table._scan(entry, table._touched(entry, keyed))
             .drop(BUCKET_COL)
             .join(F.broadcast(keyed), table.keys, "leftsemi")
         )

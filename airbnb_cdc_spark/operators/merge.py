@@ -30,12 +30,21 @@ Design for 100 TB:
   bucket once that asks for more. Any other write keeps the entry's
   ``n``. A handle built with ``num_buckets`` pins the count and never
   re-buckets.
-- A merge shuffles once. The stored rows of the touched buckets and the
-  update rows are unioned and repartitioned on ``_bucket``; one
-  ``row_number`` window per key then picks each key's survivor, and the
-  same partitioning feeds the bucket-partitioned write, so each touched
-  bucket is written as one file. The only other job is the probe: a
-  distinct over the update keys' bucket ids.
+- A merge writes in one job. A table of several buckets first runs the
+  probe, a distinct over the update keys' bucket ids naming the touched
+  buckets, and clusters their stored rows with the update rows by one
+  repartition on ``_bucket``, the merge's one shuffle. A one-bucket
+  table needs neither: the probe could only answer bucket 0, and
+  ``coalesce(1)`` is already one partition. One ``row_number`` window
+  per key then picks each key's survivor, and the same partitioning
+  feeds the bucket-partitioned write, so each touched bucket is written
+  as one file.
+- ``read`` of a table smaller than one ``spark.sql.files.openCostInBytes``
+  (the one-bucket size; Spark plans a file that small as one split
+  anyway) is ``coalesce(1)``, which Catalyst knows is one partition, so
+  a refresh that joins and aggregates small tables plans no exchange
+  beside its broadcasts. A merge's own scan is clustered after the
+  union anyway and is left alone.
 - Every change commits through one log, the metadata log Structured
   Streaming uses for exactly-once file sinks and the shape of Delta's
   ``_delta_log``. Data only ever lands in new directories
@@ -84,7 +93,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from airbnb_cdc_spark.operators.lookup import latest_per_key
-from airbnb_cdc_spark.session import _byte_conf, _scan_bytes, sql_ident
+from airbnb_cdc_spark.session import _batch_bytes, _byte_conf, _scan_bytes, sql_ident
 
 BUCKET_COL = "_bucket"
 COMMIT_COL = "_c"
@@ -125,6 +134,16 @@ def suggest_num_buckets(table_bytes: int, split_bytes: int, small_bytes: int) ->
         return 1
     want = -(-table_bytes // split_bytes)
     return min(MAX_BUCKETS, max(FIRST_BUCKETS, 1 << (want - 1).bit_length()))
+
+
+def _open_cost(spark: SparkSession) -> int:
+    return _byte_conf(spark, "spark.sql.files.openCostInBytes", 4 * 1024**2)
+
+
+def _clustered(df: DataFrame, num_buckets: int) -> DataFrame:
+    """``df`` in one partition per bucket: ``coalesce(1)`` for one bucket
+    (no exchange), else a hash repartition on ``_bucket``."""
+    return df.coalesce(1) if num_buckets == 1 else df.repartition(BUCKET_COL)
 
 
 def merge_dataframes(
@@ -260,28 +279,47 @@ class ParquetMergeTable:
     def _bucketed(self, df: DataFrame, num_buckets: int) -> DataFrame:
         """``df`` with ``_bucket`` computed from the key, one partition
         per bucket."""
-        return df.selectExpr(
-            *(sql_ident(c) for c in df.columns if c != BUCKET_COL),
-            f"{self._bucket_sql(num_buckets)} AS {BUCKET_COL}",
-        ).repartition(BUCKET_COL)
+        return _clustered(
+            df.selectExpr(
+                *(sql_ident(c) for c in df.columns if c != BUCKET_COL),
+                f"{self._bucket_sql(num_buckets)} AS {BUCKET_COL}",
+            ),
+            num_buckets,
+        )
 
     def _resized(self, entry: dict | None, df: DataFrame | None = None) -> int:
         """The bucket count of a write that replaces the whole table
         after ``entry`` with rows drawn from ``df``: the pinned count;
         else 16 for a first commit; else sized to the larger of the bytes
-        ``entry`` records and the bytes of the files ``df`` scans, so an
+        ``entry`` records and the bytes ``df`` reads (its files, or for a
+        streaming micro-batch the file bytes its relation carries), so an
         input far larger than the table never funnels into its count."""
         if self.num_buckets is not None:
             return self.num_buckets
         if entry is None:
             return FIRST_BUCKETS
         stored = sum(entry["bytes"].values())
-        incoming = (_scan_bytes(df) or 0) if df is not None else 0
+        incoming = 0 if df is None else _scan_bytes(df) or _batch_bytes(df) or 0
         return suggest_num_buckets(
             max(stored, incoming),
             _byte_conf(self.spark, "spark.sql.files.maxPartitionBytes", 128 * 1024**2),
-            _byte_conf(self.spark, "spark.sql.files.openCostInBytes", 4 * 1024**2),
+            _open_cost(self.spark),
         )
+
+    def _touched(self, entry: dict, keys: DataFrame) -> set[int]:
+        """The buckets the rows of ``keys`` hash to. In a one-bucket
+        table that is bucket 0, known without a job (an empty ``keys``
+        included); any other table runs the probe, a distinct over the
+        keys' bucket ids (at most ``num_buckets`` ints) collected to the
+        driver. A key's bucket depends only on the key, so raw (not yet
+        deduplicated) keys touch the same buckets."""
+        if entry["num_buckets"] == 1:
+            return {0}
+        bucket = self._bucket_sql(entry["num_buckets"])
+        return {
+            r[0]
+            for r in keys.selectExpr(f"{bucket} AS {BUCKET_COL}").distinct().collect()
+        }
 
     def _plan_write(
         self, entry: dict, touched: set[int], df: DataFrame | None = None
@@ -406,11 +444,18 @@ class ParquetMergeTable:
         )
 
     def read(self) -> DataFrame:
-        """Current table contents (bucket column stripped)."""
+        """Current table contents (bucket column stripped). A table whose
+        buckets record less than one ``spark.sql.files.openCostInBytes``
+        reads as ``coalesce(1)``: one partition, as Spark already plans
+        a file that small, but one Catalyst knows is single, so the
+        joins, aggregates and windows after it need no exchange."""
         entry = self._snapshot()
         if entry is None:
             raise ValueError(f"no merge table at {self.path}")
-        return self._scan(entry).drop(BUCKET_COL)
+        rows = self._scan(entry).drop(BUCKET_COL)
+        if sum(entry["bytes"].values()) < _open_cost(self.spark):
+            return rows.coalesce(1)
+        return rows
 
     # -- commit ------------------------------------------------------------
 
@@ -519,7 +564,10 @@ class ParquetMergeTable:
         """Upsert ``updates`` by key: matched rows replaced, new rows
         inserted. Only buckets containing update keys are rewritten; a
         wave touching every live bucket rewrites the table, re-sized to
-        its bytes.
+        its bytes. An empty wave commits nothing to a table of several
+        buckets (the probe finds no bucket). A one-bucket table runs no
+        probe, so it commits its rows unchanged, for which the CDF
+        wrapper emits no change.
 
         ``allow_schema_evolution`` is the reference's ``allowSchemaDrift``
         / Delta ``mergeSchema``: new columns in ``updates`` widen the
@@ -540,20 +588,10 @@ class ParquetMergeTable:
             return
 
         updates = self._conform(updates, entry)
-        # Tiny collect: at most num_buckets ints — drives partition
-        # pruning. A key's bucket depends only on the key, so the raw
-        # (not yet deduplicated) keys touch the same buckets.
-        bucket = self._bucket_sql(entry["num_buckets"])
-        touched = sorted(
-            r[0]
-            for r in updates.selectExpr(f"{bucket} AS {BUCKET_COL}")
-            .distinct()
-            .collect()
-        )
+        touched = self._touched(entry, updates)
         if not touched:
             return
-
-        replaced, n = self._plan_write(entry, set(touched), updates)
+        replaced, n = self._plan_write(entry, touched, updates)
         merged = self._rewrite(entry, updates, touched, allow_schema_evolution, n)
         schema = (
             merged.drop(BUCKET_COL).schema
@@ -566,7 +604,7 @@ class ParquetMergeTable:
         self,
         entry: dict,
         updates: DataFrame,
-        touched: list[int],
+        touched: set[int],
         allow_schema_evolution: bool,
         num_buckets: int,
     ) -> DataFrame:
@@ -574,10 +612,11 @@ class ParquetMergeTable:
         ``_bucket`` of ``num_buckets`` computed from the key for stored
         and update rows alike, so a
         write that replaces every bucket re-buckets in the same pass:
-        stored rows and ALL update rows (in-batch duplicates included) in
-        one ``repartition(_bucket)``, then ONE ``row_number`` window per
-        (bucket, key) — the single shuffle of the merge, since hash
-        partitioning on ``_bucket`` already clusters the window.
+        stored rows and ALL update rows (in-batch duplicates included)
+        clustered one partition per bucket (``_clustered``), then ONE
+        ``row_number`` window per (bucket, key), which that clustering
+        already satisfies. Several buckets shuffle once, on ``_bucket``;
+        one bucket is ``coalesce(1)`` and shuffles not at all.
 
         The window order is whole-row MERGE with last-writer-wins:
         version desc nulls last (when configured), then source priority
@@ -585,7 +624,7 @@ class ParquetMergeTable:
         the max whole-row struct of the update's non-key columns picks
         among in-batch duplicates — ``dedup_keys_deterministic``'s
         partitioning-independent survivor."""
-        current = self._scan(entry, set(touched))
+        current = self._scan(entry, touched)
         table_cols = current.columns
         upd_cols = updates.columns
         if not allow_schema_evolution:
@@ -626,7 +665,7 @@ class ParquetMergeTable:
             f"{', '.join(map(sql_ident, self.keys))} ORDER BY {', '.join(order)})"
         )
         return (
-            combined.repartition(BUCKET_COL)
+            _clustered(combined, num_buckets)
             .selectExpr("*", f"{window} AS __rn")
             .filter("__rn = 1")
             .selectExpr(*map(sql_ident, out_cols))
@@ -636,24 +675,18 @@ class ParquetMergeTable:
         """CDC delete: remove rows whose key appears in ``keys_df``.
         (Beyond the reference — its sink declares ``deletable: false`` —
         but a complete CDC engine needs the tombstone path.) Same
-        bucket-pruned rewrite as merge."""
+        bucket-pruned rewrite as merge, and an empty ``keys_df`` does
+        what an empty merge wave does."""
         entry = self._snapshot()
         if entry is None:
             return
         keyed = self._conform(keys_df.select(*self.keys), entry)
-        keyed = keyed.dropDuplicates(self.keys).withColumn(
-            BUCKET_COL, F.expr(self._bucket_sql(entry["num_buckets"]))
-        )
         # only buckets holding rows can lose any
-        touched = {
-            r[0] for r in keyed.select(BUCKET_COL).distinct().collect()
-        } & {int(b) for b in entry["buckets"]}
+        touched = self._touched(entry, keyed) & {int(b) for b in entry["buckets"]}
         if not touched:
             return
         replaced, n = self._plan_write(entry, touched)
-        kept = self._scan(entry, touched).join(
-            keyed.select(*self.keys), on=self.keys, how="left_anti"
-        )
+        kept = self._scan(entry, touched).join(keyed, on=self.keys, how="left_anti")
         # A bucket whose every row was deleted writes no directory, so
         # the new entry drops it.
         self._write_commit(
@@ -737,7 +770,8 @@ class Scd2MergeTable(ParquetMergeTable):
         """Historizing merge. ``updates``: key + attribute columns +
         ``ts_col``. Schema evolution is not supported for SCD2 (closed
         history would need backfilling) — the flag is accepted for
-        interface parity and raises ``ValueError`` when set."""
+        interface parity and raises ``ValueError`` when set. An empty wave
+        does what it does to ``merge``."""
         if allow_schema_evolution:
             raise ValueError(
                 "SCD2 merge does not evolve schemas: closed history would "
@@ -753,11 +787,7 @@ class Scd2MergeTable(ParquetMergeTable):
             return
 
         fresh = self._conform(fresh, entry)
-        bucket = self._bucket_sql(entry["num_buckets"])
-        touched = {
-            r[0]
-            for r in fresh.selectExpr(f"{bucket} AS {BUCKET_COL}").distinct().collect()
-        }
+        touched = self._touched(entry, fresh)
         if not touched:
             return
         replaced, n = self._plan_write(entry, touched, fresh)

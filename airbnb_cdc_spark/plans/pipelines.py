@@ -89,7 +89,11 @@ def run_all(
     (the aggregate's next overwrite, a wave touching every bucket)
     re-sizes it. At the reference's size (under one
     ``spark.sql.files.openCostInBytes``) that is one bucket, so every
-    later commit writes one file instead of sixteen."""
+    later commit writes one file instead of sixteen, and Spark plans no
+    shuffle: a merge is one job (no bucket probe), and the refresh reads
+    each table as one partition, so it runs the dim's broadcast and the
+    aggregate's write, two jobs. An arrival without a customer CSV runs
+    three jobs in all."""
     dim = ParquetMergeTable(spark, f"{warehouse_dir}/dim_customer", ["customer_id"])
     fact = ParquetMergeTable(
         spark, f"{warehouse_dir}/fact_booking", ["booking_id"], version_col="updated_at"

@@ -218,6 +218,27 @@ def _scan_bytes(df: DataFrame) -> int | None:
     return total
 
 
+def _batch_bytes(df: DataFrame) -> int | None:
+    """Bytes behind a ``foreachBatch`` micro-batch, whose plan is one
+    ``LogicalRDD`` and whose ``inputFiles()`` is empty. The relation
+    carries the statistics of the plan it was cut from: for a
+    micro-batch, the stream source's scan, i.e. its files' bytes. Only a
+    plan whose one leaf is such a relation is sized this way; None for
+    any other. A plan with a join has two leaves, and its estimate is
+    the product of its inputs; a checkpointed frame may have been cut
+    from a join; and a frame of driver rows carries no size (its stats
+    read ``spark.sql.defaultSizeInBytes``)."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    if leaves.size() != 1:
+        return None
+    leaf = leaves.apply(0)
+    if leaf.nodeName() != "LogicalRDD" or leaf.rdd().isCheckpointed():
+        return None
+    size = leaf.computeStats().sizeInBytes()
+    unknown = df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes()
+    return size if size < unknown else None
+
+
 def sql_ident(name: str) -> str:
     """A column name as Spark-SQL identifier text: backtick-quoted, with
     embedded backticks doubled, so any name parses as exactly itself."""

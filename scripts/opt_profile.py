@@ -38,7 +38,9 @@ they nest, so each line is inclusive. Each line holds the driver
 Python's CPU (`cpu_driver_py`), the JVM's less its C1/C2 compiler
 threads (`cpu_jvm`), the CPU of the JVM's reaped children
 (`cpu_jvm_children`: Hadoop's chmod and readlink forks on a local file
-system without the native library), Spark jobs, the parquet files that
+system without the native library), Spark jobs and stages (both read
+from the DAGScheduler's id counters: a stage is counted when it is
+created, so one shuffle fewer is one stage fewer), the parquet files that
 appeared under the warehouse (`files`) and the delta of the
 ``processes`` counter in ``/proc/stat``. That counter counts every fork
 and every thread created on the whole machine, not only this run's, so
@@ -170,6 +172,9 @@ class _Probe:
     def __init__(self, spark, warehouse: str) -> None:
         self.warehouse = warehouse
         self.dag = spark.sparkContext._jsc.sc().dagScheduler()
+        # nextStageId has no public accessor: read the field itself
+        self.next_stage = self.dag.getClass().getDeclaredField("nextStageId")
+        self.next_stage.setAccessible(True)
         self.cpu = _Cpu()
         self.totals: dict[str, Counter] = {}
 
@@ -185,6 +190,7 @@ class _Probe:
         sample = {f"cpu_{k}": v for k, v in self.cpu.sample().items()}
         sample.update(
             jobs=int(self.dag.nextJobId()),  # py4j hands the AtomicInteger over as an int
+            stages=int(self.next_stage.get(self.dag)),
             processes=_machine_processes(),
             files=self._files(),
             wall_s=time.perf_counter(),

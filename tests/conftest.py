@@ -58,6 +58,30 @@ def py4j_calls():
     return _counting_py4j_calls
 
 
+@contextmanager
+def _counting_spark_jobs(spark):
+    # the DAGScheduler's id counter: every job, the skipped included
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    counter = {"jobs": 0}
+    first = int(dag.nextJobId())
+    try:
+        yield counter
+    finally:
+        counter["jobs"] = int(dag.nextJobId()) - first
+
+
+@pytest.fixture
+def spark_jobs():
+    """Counts the Spark jobs submitted inside a block, a counted (not
+    timed) plan guard::
+
+        with spark_jobs(spark) as c:
+            table.merge(wave)
+        assert c["jobs"] == 1
+    """
+    return _counting_spark_jobs
+
+
 # The slow tier (see pytest.ini): the Hypothesis oracle sweep, scale
 # rehearsals, the IVF-PQ compaction-crash matrix and the streaming
 # suites, all left out of Tier-1 for time. The CDC core

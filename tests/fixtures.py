@@ -14,6 +14,7 @@ import csv
 import json
 import random
 import uuid
+from contextlib import contextmanager
 from datetime import date, datetime, timedelta
 from pathlib import Path
 
@@ -164,3 +165,16 @@ def write_booking_feed(
         "n_bad": n_bad,
         "cancelled_ids": sorted(d["booking_id"] for d in cancelled),
     }
+
+
+@contextmanager
+def session_confs(spark, settings: dict):
+    """Session confs set for the block, restored after."""
+    old = {k: spark.conf.get(k) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, str(v))
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)

@@ -481,3 +481,18 @@ def test_seq_dirs_py4j_calls_do_not_grow_with_feed_commits(spark, tmp_path, py4j
         assert sorted(seqs) == list(range(n))
         counts.append(c["calls"])
     assert counts[1] <= counts[0], counts
+
+
+def test_cdf_empty_wave_into_a_one_bucket_table_emits_nothing(spark, tmp_path):
+    """A one-bucket table runs no probe, so an empty merge or delete
+    commits its rows unchanged; the feed records no change for it."""
+    cdf = ChangeCapturingMergeTable(
+        ParquetMergeTable(spark, str(tmp_path / "t"), ["id"], num_buckets=1)
+    )
+    cdf.merge(spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"))
+    version = cdf.table._snapshot()["version"]
+    cdf.merge(spark.createDataFrame([], "id long, v string"))
+    cdf.delete(spark.createDataFrame([], "id long"))
+    assert cdf.table._snapshot()["version"] == version + 2
+    assert _changes(cdf, since=0) == set()
+    assert len(_changes(cdf)) == 2

@@ -4,7 +4,6 @@ the commit log (``_log/<N>.json`` names each bucket's live directory).
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -17,6 +16,7 @@ from airbnb_cdc_spark.operators.merge import (
     merge_dataframes,
     suggest_num_buckets,
 )
+from tests.fixtures import session_confs
 
 
 def _table(spark, tmp_path, **kw):
@@ -285,7 +285,8 @@ def test_merge_rewrite_plan_has_one_exchange(spark, tmp_path, version_col):
     """The frame merge() writes shuffles once: the repartition on
     _bucket also clusters the window, so no second exchange. That holds
     when the write keeps the table's 8 buckets and when it re-buckets
-    the stored rows into 2."""
+    the stored rows into 2. A write of one bucket shuffles not at all:
+    coalesce(1) is one partition, which clusters the window already."""
     import io
     import re
     from contextlib import redirect_stdout
@@ -295,14 +296,14 @@ def test_merge_rewrite_plan_has_one_exchange(spark, tmp_path, version_col):
     updates = spark.createDataFrame(
         [Row(k="k1", v=-1, ver=2), Row(k="k1", v=-2, ver=3), Row(k="new", v=0, ver=1)]
     )
-    for num_buckets in (8, 2):
+    for num_buckets, exchanges in ((8, 1), (2, 1), (1, 0)):
         buf = io.StringIO()
         with redirect_stdout(buf):
             t._rewrite(
-                t._snapshot(), updates, list(range(8)), False, num_buckets
+                t._snapshot(), updates, set(range(8)), False, num_buckets
             ).explain()
         plan = buf.getvalue()
-        assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
+        assert len(re.findall(r"\bExchange\b", plan)) == exchanges, plan
         assert "Window" in plan, plan
 
 
@@ -485,19 +486,6 @@ def _data_files(t):
     return sorted(Path(t.path).glob("_bucket=*/_c=*/*.parquet"))
 
 
-@contextmanager
-def _confs(spark, settings: dict):
-    """Session confs set for the block, restored after."""
-    old = {k: spark.conf.get(k) for k in settings}
-    for k, v in settings.items():
-        spark.conf.set(k, str(v))
-    try:
-        yield
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
-
-
 def _misplaced(t):
     """Rows stored outside the bucket their key hashes to."""
     entry = t._snapshot()
@@ -544,7 +532,7 @@ def test_table_above_open_cost_keeps_sixteen_buckets(spark, tmp_path):
     t.merge(base)
     stored = sum(t._snapshot()["bytes"].values())
     wave = spark.range(0, 2000, 40).selectExpr("id", "'b' AS v")
-    with _confs(spark, {OPEN_COST: stored // 5}):
+    with session_confs(spark, {OPEN_COST: stored // 5}):
         t.merge(wave)
         before = _live_dirs(t)
         t.merge(spark.createDataFrame([(3, "c")], "id long, v string"))
@@ -569,7 +557,7 @@ def test_compact_sizes_the_count_to_bytes_over_max_partition_bytes(spark, tmp_pa
     assert entry["num_buckets"] == 1
     stored = entry["bytes"]["0"]
 
-    with _confs(spark, {MAX_SPLIT: stored // 20, OPEN_COST: stored // 20}):
+    with session_confs(spark, {MAX_SPLIT: stored // 20, OPEN_COST: stored // 20}):
         t.compact()  # 20 or 21 splits
     entry = t._snapshot()
     assert entry["num_buckets"] == 32
@@ -599,7 +587,7 @@ def test_large_input_grows_a_one_bucket_table(spark, tmp_path, op):
     incoming = sum(f.stat().st_size for f in Path(src).glob("*.parquet"))
     assert incoming > 20 * sum(t._snapshot()["bytes"].values())
 
-    with _confs(spark, {MAX_SPLIT: incoming // 20, OPEN_COST: incoming // 20}):
+    with session_confs(spark, {MAX_SPLIT: incoming // 20, OPEN_COST: incoming // 20}):
         getattr(t, op)(big)
     entry = t._snapshot()
     assert entry["num_buckets"] == 32
@@ -618,7 +606,7 @@ def test_pinned_table_keeps_its_count(spark, tmp_path):
     wave = spark.range(0, 2000, 10).selectExpr("id", "'b' AS v")
     t.merge(wave)
     assert t._snapshot()["num_buckets"] == 8
-    with _confs(spark, {MAX_SPLIT: 1024, OPEN_COST: 1024}):
+    with session_confs(spark, {MAX_SPLIT: 1024, OPEN_COST: 1024}):
         t.compact()
     entry = t._snapshot()
     assert entry["num_buckets"] == 8 and len(entry["buckets"]) == 8
@@ -634,3 +622,68 @@ def test_suggest_num_buckets_targets_one_split_per_bucket():
     assert suggest_num_buckets(16 * split, split, small) == 16
     assert suggest_num_buckets(16 * split + 1, split, small) == 32
     assert suggest_num_buckets(100 * 1024**4, split, small) == 65536  # 100 TB
+
+
+# -- one-bucket writes and small scans -----------------------------------
+
+
+def _one_bucket(spark, tmp_path, rows=200):
+    """A default table of ``rows`` keys, compacted to its one bucket."""
+    t = ParquetMergeTable(spark, str(tmp_path / "t"), ["id"], version_col="ver")
+    t.merge(spark.range(rows).selectExpr("id", "1 AS ver", "'a' AS v"))
+    t.compact()
+    assert t._snapshot()["num_buckets"] == 1
+    return t
+
+
+def test_one_bucket_merge_runs_one_job(spark, tmp_path, spark_jobs):
+    """A merge into a one-bucket table runs only its write: no probe
+    (its answer could only be bucket 0, and it cost two jobs) and no
+    shuffle (coalesce(1) already clusters the window; a repartition
+    cost a third job)."""
+    t = _one_bucket(spark, tmp_path)
+    wave = spark.range(190, 210).selectExpr("id", "2 AS ver", "'b' AS v")
+    with spark_jobs(spark) as c:
+        t.merge(wave)
+    assert c["jobs"] == 1
+    base = spark.range(200).selectExpr("id", "1 AS ver", "'a' AS v")
+    assert _rowset(t.read()) == _rowset(merge_dataframes(base, wave, ["id"], "ver"))
+
+
+@pytest.mark.parametrize("op", ["merge", "delete"])
+def test_empty_wave_into_a_one_bucket_table(spark, tmp_path, op):
+    """A one-bucket table runs no probe, so an empty merge or delete
+    wave is not seen as empty before the write: it commits the same rows
+    again (at several buckets the probe finds no bucket and nothing is
+    committed), and the next commit's GC leaves one live directory."""
+    t = _one_bucket(spark, tmp_path)
+    before = t._snapshot()
+    rows = _rowset(t.read())
+    empty = spark.createDataFrame([], "id long, ver int, v string")
+    if op == "merge":
+        t.merge(empty)
+    else:
+        t.delete(empty.select("id"))
+    after = t._snapshot()
+    assert after["version"] == before["version"] + 1
+    assert after["buckets"] != before["buckets"]
+    assert _rowset(t.read()) == rows
+
+    t.merge(spark.createDataFrame([(7, 2, "b")], "id long, ver int, v string"))
+    assert sorted(Path(t.path).glob("_bucket=*/_c=*")) == list(_live_dirs(t).values())
+    assert t.read().filter("v = 'b'").count() == 1
+
+
+@pytest.mark.parametrize("pinned", [1, None])
+def test_scan_above_open_cost_is_not_coalesced(spark, tmp_path, pinned):
+    """Only a scan under one openCostInBytes is read as coalesce(1). A
+    table whose bytes pass it (here both confs lowered to a quarter of
+    its bytes), one pinned bucket or sixteen self-sized, reads in more
+    than one split."""
+    t = ParquetMergeTable(spark, str(tmp_path / "t"), ["id"], num_buckets=pinned)
+    t.merge(spark.range(4000).selectExpr("id", "sha2(CAST(id AS STRING), 256) AS v"))
+    stored = sum(t._snapshot()["bytes"].values())
+    with session_confs(spark, {MAX_SPLIT: stored // 4, OPEN_COST: stored // 4}):
+        read = t.read()
+        assert "Coalesce" not in read._jdf.queryExecution().executedPlan().toString()
+        assert read.rdd.getNumPartitions() > 1

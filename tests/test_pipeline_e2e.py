@@ -12,7 +12,7 @@ from airbnb_cdc_spark.plans.pipelines import (
     run_customer_dim,
 )
 from airbnb_cdc_spark.streaming.cdc import run_booking_fact_stream
-from tests.fixtures import write_booking_feed, write_customer_csvs
+from tests.fixtures import session_confs, write_booking_feed, write_customer_csvs
 
 
 def test_customer_dim_upsert_replay(spark, tmp_path):
@@ -422,3 +422,79 @@ def test_list_files_py4j_calls_do_not_grow_with_files(spark, tmp_path, py4j_call
         counts.append(c["calls"])
     assert counts[1] <= counts[0], counts
     assert list_files(spark, str(tmp_path / "missing")) == []
+
+
+def _newest_plan(spark) -> str:
+    """The physical plan of the newest SQL execution as the UI shows it,
+    after adaptive re-planning."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return execs.apply(execs.size() - 1).physicalPlanDescription()
+
+
+def test_refresh_over_one_bucket_tables_runs_two_jobs(spark, tmp_path, spark_jobs):
+    """Tables under one openCostInBytes read as one partition, so the
+    refresh's join and its 17-measure aggregate need no shuffle: the dim
+    is broadcast (one job) and the one-bucket aggregate is written (one
+    job). Its executed plan holds the BroadcastExchange and no other
+    exchange."""
+    import re
+
+    facts = write_booking_feed(tmp_path / "feed", n_bookings=120, n_bad=0)
+    fact = ParquetMergeTable(
+        spark, str(tmp_path / "fact"), keys=["booking_id"], version_col="updated_at"
+    )
+    run_booking_fact_stream(spark, str(tmp_path / "feed"), fact, str(tmp_path / "ckpt"))
+    write_customer_csvs(tmp_path / "raw", n_base=100)
+    dim = ParquetMergeTable(spark, str(tmp_path / "dim"), keys=["customer_id"])
+    run_customer_dim(spark, str(tmp_path / "raw"), str(tmp_path / "arch"), dim)
+    agg = ParquetMergeTable(spark, str(tmp_path / "agg"), keys=["country"])
+    refresh_booking_aggregation(spark, fact, dim, agg)  # the first commit: 16 buckets
+    fact.compact()
+    dim.compact()
+    assert all(t._snapshot()["num_buckets"] == 1 for t in (fact, dim))
+
+    with spark_jobs(spark) as c:
+        refresh_booking_aggregation(spark, fact, dim, agg)
+    plan = _newest_plan(spark)
+    assert c["jobs"] == 2
+    assert agg._snapshot()["num_buckets"] == 1
+    assert "BroadcastExchange" in plan, plan
+    assert not re.search(r"\bExchange\b", plan), plan
+    total = agg.read().agg(F.sum("total_bookings")).collect()[0][0]
+    assert total == facts["n_inserted"]
+
+
+def test_stream_backlog_grows_a_one_bucket_fact_table(spark, tmp_path):
+    """A foreachBatch micro-batch reads no files of its own (its plan is
+    one LogicalRDD), so its size comes from the file bytes that relation
+    carries. A backlog of twenty openCostInBytes (both confs lowered to
+    a twentieth of it) replayed into a one-bucket fact table lands in at
+    least 16 buckets, not one task writing it all into one."""
+    import shutil
+    from pathlib import Path
+
+    feed = tmp_path / "feed"
+    first = write_booking_feed(feed, n_bookings=20, n_bad=0)
+    fact = ParquetMergeTable(
+        spark, str(tmp_path / "fact"), keys=["booking_id"], version_col="updated_at"
+    )
+    ckpt = str(tmp_path / "ckpt")
+    run_booking_fact_stream(spark, str(feed), fact, ckpt)
+    fact.compact()
+    assert fact._snapshot()["num_buckets"] == 1
+
+    backlog = write_booking_feed(tmp_path / "backlog", n_bookings=2000, n_bad=0, seed=12)
+    for f in sorted(Path(tmp_path / "backlog").iterdir()):
+        shutil.move(str(f), str(feed / f"backlog_{f.name}"))
+    size = sum(f.stat().st_size for f in feed.glob("backlog_*"))
+    assert size > 20 * sum(fact._snapshot()["bytes"].values())
+
+    confs = {
+        "spark.sql.files.maxPartitionBytes": size // 20,
+        "spark.sql.files.openCostInBytes": size // 20,
+    }
+    with session_confs(spark, confs):
+        run_booking_fact_stream(spark, str(feed), fact, ckpt)
+    assert fact._snapshot()["num_buckets"] >= 16
+    assert fact.read().count() == first["n_inserted"] + backlog["n_inserted"]
