@@ -686,6 +686,12 @@ class ParquetMergeTable:
         if not touched:
             return
         replaced, n = self._plan_write(entry, touched)
+        if entry["num_buckets"] == 1:
+            # Keys built on the driver carry no size estimate, so Catalyst
+            # would plan a sort-merge anti join with an exchange on each
+            # side (4 jobs for two keys, not 2). The table is under one
+            # openCostInBytes; its tombstone keys are broadcast.
+            keyed = F.broadcast(keyed)
         kept = self._scan(entry, touched).join(keyed, on=self.keys, how="left_anti")
         # A bucket whose every row was deleted writes no directory, so
         # the new entry drops it.

@@ -1,14 +1,15 @@
 """Similarity search over an embedding column (array<float>).
 
-Two paths:
 - ``brute_force_topk`` — exact top-k by cosine for a (small) query set:
   broadcast the queries, scan the corpus once, window top-k. The
   correctness baseline at any scale where queries are few.
-- ``lsh_topk`` — sign-random-projection LSH: integer hyperplanes bucket
-  vectors; candidates = same bucket; exact re-rank inside the bucket.
-  At 100 TB the bucket-join replaces the corpus×queries cross product;
-  recall is tuned by bits/tables. (An IVF variant would k-means the
-  corpus; LSH keeps everything deterministic for the oracle.)
+- In-session ANN (``lsh_topk``, ``ivf_topk``, ``sq8_topk``,
+  ``ivf_sq8_topk``, ``pq_topk``, ``ivf_pq_topk``, ``pq_refine_topk``):
+  each derives its index per call; they are the reference forms.
+- The persisted ANN store (``_Store``, end of module): a partitioner
+  (none, IVF centroids, LSH hyperplanes) times a codec (quantized
+  float, SQ8, PQ), built once and appended to, whose queries replay
+  the in-session forms bit-exactly.
 
 Numeric determinism (the "quantized dot product" trick): components are
 quantized to integers (round(x * 1e6)), so dot products and norms are
@@ -82,38 +83,21 @@ def _pair_cosine(qa: Column, qb: Column, na: Column, nb: Column) -> Column:
     return qdot(qa, qb).cast("double") / (na * nb)
 
 
-def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
-    """Shared top-k cut: rank (cosine desc, neighbor_id asc) per query,
-    keep k. One definition so the exact and ANN variants can never
-    desynchronize their tie-break or k semantics."""
+def _rank_topk(scored: DataFrame, k: int, score: str = "cosine") -> DataFrame:
+    """Shared top-k cut: rank (``score`` desc, neighbor_id asc) per
+    query, keep k. One definition for every score (cosine, score8,
+    pq_score), so the exact, in-session and stored variants can never
+    desynchronize their tie-break or k semantics — the bit-exact replay
+    contract tests/test_registry_oracle.py checks."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+        F.col(score).desc(), F.col("neighbor_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def _rank_topk_score8(scored: DataFrame, k: int) -> DataFrame:
-    """`_rank_topk`'s integer-score sibling for the SQ8 family: rank
-    (score8 desc, neighbor_id asc) per query, keep k. One definition
-    so the in-session variants (sq8_topk, ivf_sq8_topk) and the store
-    queries (query_sq8_index, query_ivf_sq8_index) can never
-    desynchronize their tie-break or k semantics — the bit-exact
-    replay contract tests/test_registry_oracle.py checks."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score8").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score8", "rank")
+        .select("query_id", "neighbor_id", score, "rank")
     )
 
 
@@ -216,6 +200,16 @@ def sq8_codes(
     )
 
 
+def _sq8_dot(a: Column, b: Column) -> Column:
+    """score8: the exact integer dot product of two int8 code arrays
+    (<= dim * 127^2, nowhere near int64)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("long") * y.cast("long")),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+
+
 def sq8_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -238,21 +232,12 @@ def sq8_topk(
             F.col(id_col).alias("query_id"), F.col("c8").alias("__cq")
         )
     )
-    score = F.aggregate(
-        F.zip_with(
-            F.col("__cq"),
-            F.col("__cc"),
-            lambda x, y: x.cast("long") * y.cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
     scored = (
         q.join(c, F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("score8", score)
+        .withColumn("score8", _sq8_dot(F.col("__cq"), F.col("__cc")))
         .select("query_id", "neighbor_id", "score8")
     )
-    return _rank_topk_score8(scored, k)
+    return _rank_topk(scored, k, "score8")
 
 
 def auto_bits(n_rows: int, target_bucket: int = 256, lo: int = 2, hi: int = 16) -> int:
@@ -427,32 +412,28 @@ def _read_store_part(spark, path: str) -> DataFrame:
 
 
 def _store_part_row(spark, path: str):
-    """First row of a 1-row store artifact (``meta/``), memoized."""
+    """First row of a flat store artifact (``meta/``, a ``codes/`` or
+    ``centroids/`` table), or None when it holds no row; memoized."""
     return _cached_part(
-        spark, path, "row", lambda: _read_store_part(spark, path).collect()[0]
+        spark,
+        path,
+        "row",
+        lambda: next(iter(_read_store_part(spark, path).limit(1).collect()), None),
     )
 
 
 def _stored_width_cached(spark, path: str, code_col: str) -> int | None:
-    """The limit-1 stored-width probe of ``_check_stored_width``,
-    memoized per (session, path, dir mtime). Returns None on an empty
-    store. The incoming-frame side of the guard stays per-call."""
-
-    def _probe():
-        row = (
-            _read_store_part(spark, path)
-            .select(F.size(F.col(code_col)).alias("d"))
-            .limit(1)
-            .collect()
-        )
-        return row[0].d if row else None
-
-    return _cached_part(spark, path, f"width:{code_col}", _probe)
+    """Width of ``code_col`` in a flat artifact's first row (the stored
+    vector width), or None on an empty artifact; memoized with the row.
+    The incoming-frame side of a width guard stays per-call."""
+    row = _store_part_row(spark, path)
+    return None if row is None else len(row[code_col])
 
 
-def _collected_probes(probes_sel: DataFrame):
+def _collected_probes(probes_sel: DataFrame, local: bool = True):
     """One bounded collect of a (query_id, list-id) probe assignment,
-    returned as (rows, local relation). |queries|·nprobe two-scalar
+    returned as (rows, local relation; None when not ``local``).
+    |queries|·nprobe two-scalar
     rows — the same driver-side-metadata trade the static partition
     filter already makes. Replaces the r17 persist + distinct-collect +
     cached-broadcast chain (3 driver jobs and a persist lifecycle) with
@@ -467,6 +448,8 @@ def _collected_probes(probes_sel: DataFrame):
     from airbnb_cdc_spark.session import local_rows_df
 
     rows = probes_sel.collect()
+    if not local:
+        return rows, None
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in probes_sel.schema.fields
     )
@@ -490,17 +473,6 @@ def _check_collected_dims(pairs, size_col: str, dim: int | None, vec_col: str) -
         raise ValueError(
             f"hyperplane dim={dim} but {vec_col!r} vectors have "
             f"{min(sizes)}..{max(sizes)} components"
-        )
-
-
-def _check_store_not_empty(width: int | None, queries: DataFrame, path: str) -> None:
-    """A store with no rows has no stored width (``width`` is None), so
-    no width guard can run and every query would silently get an empty
-    top-k. Fail loud for a non-empty query frame instead; an empty one
-    still gets its empty answer. Runs a job only on an empty store."""
-    if width is None and not queries.isEmpty():
-        raise ValueError(
-            f"ANN store {path!r} is empty; cannot answer a non-empty query frame"
         )
 
 
@@ -566,194 +538,6 @@ def lsh_topk(
     return _rank_topk(scored, k)
 
 
-def build_lsh_index(
-    corpus: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bits: int | None = 4,
-    dim: int = 64,
-) -> None:
-    """The sign-LSH bucket table as a DISK LAYOUT — ``lsh_topk``'s
-    production form: quantized vectors written as parquet PARTITIONED
-    by their sign-LSH bucket (``lists/bucket=N/``), with a 1-row
-    ``meta/`` (bits, dim) alongside. The hyperplanes are a
-    deterministic function of (j, dim) (``hyperplane``), so persisting
-    (bits, dim) IS persisting the hash family — queries re-derive the
-    planes and land in identical buckets on any engine. A query prunes
-    to its probed ``bucket=`` directories at the scan (nprobe
-    multi-probe fans out only the broadcast query side; the corpus is
-    bucketed exactly once — the 100 TB recall knob). ``bits=None``
-    derives the width from the corpus size, then freezes it.
-
-    Fails fast on an empty corpus (the _validated_sq8_scale /
-    _seed_centroids build-time contract): freezing a hash family over
-    zero list rows would make every later query/append silently return
-    empty instead of surfacing the broken build."""
-    import os
-
-    n = corpus.count()
-    if n == 0:
-        raise ValueError(
-            "build_lsh_index: empty corpus — refusing to freeze a hash "
-            "family over zero list rows (queries/appends against such a "
-            "store would silently return empty)"
-        )
-    if bits is None:
-        bits = auto_bits(n)
-    _check_dim(corpus, vec_col, dim)
-    planes = [hyperplane(j, dim) for j in range(bits)]
-    c = _with_quant(corpus, id_col, vec_col).select(
-        F.col(id_col),
-        F.col("__q"),
-        F.col("__norm"),
-        lsh_bucket(F.col("__q"), planes).alias("bucket"),
-    )
-    c.repartition("bucket").write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(os.path.join(path, "lists"))
-    corpus.sparkSession.createDataFrame(
-        [(int(bits), int(dim))], "bits int, dim int"
-    ).write.mode("overwrite").parquet(os.path.join(path, "meta"))
-
-
-def append_lsh_index(
-    spark,
-    path: str,
-    new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    skip_existing: bool = True,
-) -> int:
-    """Incrementally grow a ``build_lsh_index`` layout: hash each new
-    vector with the FROZEN (bits, dim) family and append into the
-    matching ``bucket=`` partitions. Same contract as the IVF-family
-    appends: partition-pruned existence probe over only the TOUCHED
-    buckets, ``skip_existing`` replays are append-zero, full-batch
-    width guard before anything is written, one file per touched
-    bucket per batch, and the ``_recover_parked_lists`` preamble makes
-    crashed-compaction interleavings safe. Returns rows appended.
-
-    INSERT-ONLY contract (the IVF-family frozen-geometry caveat): the
-    existence probe sees only the buckets the NEW batch hashes into,
-    so re-appending an id whose embedding CHANGED lands a second row
-    in its new bucket while the stale row persists in the old one —
-    updated vectors require a rebuild (the rebuild-cadence answer the
-    IVF appends document), not an append."""
-    import os
-
-    _recover_parked_lists(spark, os.path.join(path, "lists"))
-    # single-partition-batch guard (the family contract): hashing is
-    # per-row, but the persisted batch then feeds the existence probe
-    # and the bucket-clustered write — widen a one-file batch first
-    want = spark.sparkContext.defaultParallelism
-    if new_vectors.rdd.getNumPartitions() < want:
-        new_vectors = new_vectors.repartition(want)
-    meta = _store_part_row(spark, os.path.join(path, "meta"))
-    bits, dim = meta.bits, meta.dim
-    _check_dim(new_vectors, vec_col, dim, full=True)
-    planes = [hyperplane(j, dim) for j in range(bits)]
-    batch = persist_tracked(
-        _with_quant(new_vectors, id_col, vec_col).select(
-            F.col(id_col),
-            F.col("__q"),
-            F.col("__norm"),
-            lsh_bucket(F.col("__q"), planes).alias("bucket"),
-        )
-    )
-    if skip_existing:
-        touched = [
-            r.bucket for r in batch.select("bucket").distinct().collect()
-        ]
-        existing = _read_lists(
-            spark, os.path.join(path, "lists"), touched, part_col="bucket"
-        )
-        if existing is not None:
-            batch = persist_tracked(
-                batch.join(existing.select(id_col), id_col, "left_anti")
-            )
-    n = batch.count()
-    if n:
-        batch.repartition("bucket").write.mode("append").partitionBy(
-            "bucket"
-        ).parquet(os.path.join(path, "lists"))
-    return n
-
-
-def query_lsh_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    nprobe: int = 1,
-) -> DataFrame:
-    """Top-k over a ``build_lsh_index`` layout: queries hash with the
-    stored (bits, dim) family, their probe buckets (|queries|·nprobe
-    ints) are collected and pushed into the lists scan as a STATIC
-    partition filter — only the probed ``bucket=`` directories are
-    listed or read — and the survivors re-rank by exact quantized
-    cosine. Identical semantics and output contract
-    (query_id, neighbor_id, cosine, rank) to ``lsh_topk`` over the
-    same logical corpus and (bits, nprobe)."""
-    import os
-
-    meta = _store_part_row(spark, os.path.join(path, "meta"))
-    bits, dim = meta.bits, meta.dim
-    nprobe = max(1, min(nprobe, bits + 1))
-    # width guard evaluated from the probe collect below (r18)
-    planes = [hyperplane(j, dim) for j in range(bits)]
-    qbase = _with_quant(queries, id_col, vec_col, widen=False).select(
-        F.col(id_col).alias("query_id"),
-        F.col("__q").alias("__qq"),
-        F.col("__norm").alias("__nq"),
-        lsh_probe_buckets(F.col("__q"), planes, nprobe).alias("__probes"),
-    )
-    probe_sel = qbase.select(
-        "query_id",
-        F.explode(F.col("__probes")).alias("bucket"),
-        F.size(F.col("__qq")).alias("__d"),
-    )
-    # one bounded collect replaces the r17 persist + distinct-collect
-    # chain; the query vectors re-attach from a fresh projection
-    pairs, pairs_local = _collected_probes(probe_sel)
-    _check_collected_dims(pairs, "__d", dim, vec_col)
-    pairs_local = pairs_local.drop("__d")
-    probe_buckets = sorted({r.bucket for r in pairs})
-    q = qbase.select("query_id", "__qq", "__nq").join(
-        F.broadcast(pairs_local), "query_id"
-    )
-    lists = _read_lists(
-        spark, os.path.join(path, "lists"), probe_buckets, part_col="bucket"
-    )
-    if lists is None:
-        empty = (
-            q.select("query_id", F.col("query_id").alias("neighbor_id"))
-            .limit(0)
-            .withColumn("cosine", F.lit(None).cast("double"))
-        )
-        return _rank_topk(empty, k)
-    scored = (
-        lists.select(
-            "bucket",
-            F.col(id_col).alias("neighbor_id"),
-            F.col("__q").alias("__qc"),
-            F.col("__norm").alias("__nc"),
-        )
-        .join(F.broadcast(q), on="bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            _pair_cosine(
-                F.col("__qq"), F.col("__qc"), F.col("__nq"), F.col("__nc")
-            ),
-        )
-        .select("query_id", "neighbor_id", "cosine")
-    )
-    return _rank_topk(scored, k)
-
-
 def ivf_sq8_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -773,40 +557,16 @@ def ivf_sq8_topk(
     centroid rule as ``ivf_topk``); candidate scoring is the exact
     integer SQ8 dot product, so the result is integer-ranked and
     bit-replayable end to end."""
-    from pyspark.sql import Window
-
     base = persist_tracked(_with_quant(corpus, id_col, vec_col))
-    cents = F.broadcast(
-        _seed_centroids(corpus, base, id_col, centroid_mod, centroid_rem)
+    cents = _seed_centroids(corpus, base, id_col, centroid_mod, centroid_rem)
+    # map-side-combined argmax (see _nearest_centroid): one shuffled
+    # row per vector instead of one per (vector, centroid)
+    assign = _nearest_centroid(base, F.broadcast(cents), id_col).select(
+        F.col(id_col).alias("neighbor_id"), "cid"
     )
-
-    def nearest(side: DataFrame, out_id: str, n: int) -> DataFrame:
-        if n == 1:
-            # map-side-combined argmax (see _nearest_centroid): one
-            # shuffled row per vector instead of one per
-            # (vector, centroid)
-            return _nearest_centroid(side, cents, id_col).select(
-                F.col(id_col).alias(out_id), "cid"
-            )
-        scored = side.crossJoin(cents).withColumn(
-            "__cos",
-            _pair_cosine(
-                F.col("__q"), F.col("__qc"), F.col("__norm"), F.col("__nc")
-            ),
-        )
-        w = Window.partitionBy(side[id_col]).orderBy(
-            F.col("__cos").desc(), F.col("cid").asc()
-        )
-        return (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= n)
-            .select(F.col(id_col).alias(out_id), "cid")
-        )
-
-    assign = nearest(base, "neighbor_id", 1)
-    probes = nearest(
-        _with_quant(queries, id_col, vec_col, widen=False), "query_id", nprobe
-    )
+    probes = _probe_lists(
+        _with_quant(queries, id_col, vec_col, widen=False), cents, id_col, nprobe
+    ).drop("__d")
     scale = _sq8_max_abs(corpus, vec_col)
     codes = sq8_codes(corpus, scale, id_col, vec_col)
     cand = assign.join(
@@ -823,137 +583,13 @@ def ivf_sq8_topk(
             "query_id",
         )
     )
-    score = F.aggregate(
-        F.zip_with(
-            F.col("__cq"),
-            F.col("__cc"),
-            lambda x, y: x.cast("long") * y.cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
     scored = (
         qcodes.join(cand, "cid")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("score8", score)
+        .withColumn("score8", _sq8_dot(F.col("__cq"), F.col("__cc")))
         .select("query_id", "neighbor_id", "score8")
     )
-    return _rank_topk_score8(scored, k)
-
-
-def write_sq8_index(
-    corpus: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the SQ8 code table as a DISK LAYOUT: ``codes/``
-    (id, c8 tinyint array) plus the 1-row quantizer ``scale/``. The
-    persisted form is what makes SQ8 pay at scale — the 4x-smaller
-    code table is built once per corpus version and every later scan
-    reads codes, never floats. The scale is FROZEN at build time:
-    later appends quantize against it (the IVF frozen-centroid
-    contract), so codes stay mutually comparable; a corpus whose
-    value range drifts needs a rebuild, exactly like centroid drift."""
-    import os
-
-    scale = _validated_sq8_scale(corpus, vec_col, "write_sq8_index")
-    sq8_codes(corpus, scale, id_col, vec_col).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "codes"))
-    scale.write.mode("overwrite").parquet(os.path.join(path, "scale"))
-
-
-def append_sq8_index(
-    spark,
-    path: str,
-    new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    skip_existing: bool = True,
-) -> int:
-    """Incrementally grow a ``write_sq8_index`` layout: quantize the
-    batch against the FROZEN stored scale and append. The existing
-    code table is never rewritten — ingest cost is one batch-sized
-    quantization pass plus an id anti-join against the (id-column-only,
-    column-pruned) existing codes scan. Returns rows appended;
-    ``skip_existing`` makes replays idempotent (the store-not-rescan
-    contract every incremental store in this repo follows)."""
-    import os
-
-    scale = _read_store_part(spark, os.path.join(path, "scale"))
-    stored_d = _check_stored_width(
-        spark.read.parquet(os.path.join(path, "codes")),
-        new_vectors,
-        vec_col,
-        full=False,
-    )
-    batch = sq8_codes(new_vectors, scale, id_col, vec_col)
-    if skip_existing:
-        existing = spark.read.parquet(os.path.join(path, "codes")).select(
-            id_col
-        )
-        batch = batch.join(existing, id_col, "left_anti")
-    batch = persist_tracked(batch)
-    n = batch.count()
-    if n:
-        if stored_d is not None:
-            _check_batch_width_full(batch, "c8", stored_d, "append_sq8_index")
-        _bounded_files(batch, n).write.mode("append").parquet(
-            os.path.join(path, "codes")
-        )
-    return n
-
-
-def query_sq8_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-) -> DataFrame:
-    """Top-k against a persisted SQ8 layout: queries quantize with the
-    stored scale and broadcast; the corpus side reads ONLY the code
-    table — at no point is a float embedding materialized. Identical
-    semantics to ``sq8_topk`` over the same logical corpus (pytest-
-    asserted), so in-session results carry over to the stored form."""
-    import os
-
-    scale = _read_store_part(spark, os.path.join(path, "scale"))
-    stored_codes = _read_store_part(spark, os.path.join(path, "codes"))
-    # the scale is a scalar (max_abs), so the stored WIDTH lives in the
-    # code table: one limit-1 probe guards the query frame — zip_with
-    # silently truncates a wider query into plausible-but-wrong scores
-    # (the _stored_pq_geometry class of drift). Stored side memoized
-    # (r17); the query-frame check stays per-call.
-    d = _stored_width_cached(spark, os.path.join(path, "codes"), "c8")
-    _check_store_not_empty(d, queries, path)
-    if d is not None:
-        _check_dim(queries, vec_col, d, full=True)
-    c = stored_codes.select(
-        F.col(id_col).alias("neighbor_id"), F.col("c8").alias("__cc")
-    )
-    q = F.broadcast(
-        sq8_codes(queries, scale, id_col, vec_col, widen=False).select(
-            F.col(id_col).alias("query_id"), F.col("c8").alias("__cq")
-        )
-    )
-    score = F.aggregate(
-        F.zip_with(
-            F.col("__cq"),
-            F.col("__cc"),
-            lambda x, y: x.cast("long") * y.cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        q.join(c, F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("score8", score)
-        .select("query_id", "neighbor_id", "score8")
-    )
-    return _rank_topk_score8(scored, k)
+    return _rank_topk(scored, k, "score8")
 
 
 def cosine_neardup_pairs(
@@ -1034,6 +670,23 @@ def _nearest_centroid(base: DataFrame, cents_b, id_col: str) -> DataFrame:
     )
 
 
+def _probe_lists(qs: DataFrame, cents: DataFrame, id_col: str, nprobe: int) -> DataFrame:
+    """(query_id, cid, __d): each quantized query's ``nprobe`` nearest
+    centroids (cosine desc, cid asc) and its width."""
+    from pyspark.sql import Window
+
+    scored = qs.crossJoin(F.broadcast(cents)).withColumn(
+        "__cos",
+        _pair_cosine(F.col("__q"), F.col("__qc"), F.col("__norm"), F.col("__nc")),
+    )
+    w = Window.partitionBy(id_col).orderBy(F.col("__cos").desc(), F.col("cid").asc())
+    return (
+        scored.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= nprobe)
+        .select(F.col(id_col).alias("query_id"), "cid", F.size("__q").alias("__d"))
+    )
+
+
 def _seed_centroids(
     raw: DataFrame,
     base: DataFrame,
@@ -1075,25 +728,6 @@ def _seed_centroids(
         F.col("__q").alias("__qc"),
         F.col("__norm").alias("__nc"),
     )
-
-
-def _validated_sq8_scale(corpus: DataFrame, vec_col: str, op: str) -> DataFrame:
-    """The 1-row SQ8 quantizer scale, validated EAGERLY: sq8_codes'
-    in-plan guard is per-row, so an EMPTY corpus streams zero rows
-    through it and would silently freeze a NULL scale into ``scale/``
-    — deferring the failure to the first append instead of the build.
-    One driver-side row; the build is corpus-scale anyway. Shared by
-    write_sq8_index and build_ivf_sq8_index so the degenerate-corpus
-    contract stays identical across the SQ8 stores."""
-    scale = _sq8_max_abs(corpus, vec_col)
-    mx = scale.collect()[0]["__mx"]
-    if mx is None or mx <= 0:
-        raise ValueError(
-            f"{op}: degenerate quantizer scale (max_abs={mx!r}) — empty"
-            " or all-zero corpus; an index built from it would poison"
-            " every later append and query"
-        )
-    return scale
 
 
 def _lloyd_refine(
@@ -1247,396 +881,6 @@ def ivf_topk(
     return _rank_topk(scored, k)
 
 
-def build_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_mod: int | None = 37,
-    centroid_rem: int = 3,
-    refine_iters: int = 0,
-) -> None:
-    """Materialize the IVF inverted file as a DISK LAYOUT: quantized
-    vectors written as parquet partitioned by their nearest-centroid id
-    (``lists/cid=N/``), centroids alongside (``centroids/``). Build
-    once, query many — the production shape ``ivf_topk`` only simulates
-    in-session: at 100 TB the assignment pass runs once per corpus
-    version, and every later query prunes to its probed partitions at
-    the SCAN (directory-level pruning, nothing else is read or even
-    listed as input).
-
-    Same deterministic centroid choice as ``ivf_topk`` (vec_id ≡ rem
-    mod m; ``None`` derives ~sqrt(n)), so recall characteristics match
-    the benchmarked in-session variants. ``refine_iters`` runs that
-    many deterministic Lloyd iterations on the seeds before freezing
-    the centroids (``_lloyd_refine`` — the SAME refinement
-    ``ivf_topk(refine_iters=...)`` computes per run), so a store built
-    with it replays the k-means variant bit-exactly while paying the
-    refinement once instead of per query."""
-    from pyspark.sql import Window
-    import os
-
-    base = _with_quant(corpus, id_col, vec_col)
-    if refine_iters:
-        # the refinement re-scans the quantized corpus once per
-        # iteration plus the final assignment pass — persist it
-        base = persist_tracked(base)
-    cents = _seed_centroids(corpus, base, id_col, centroid_mod, centroid_rem)
-    cents = _lloyd_refine(base, cents, refine_iters, id_col)
-    assigned = _nearest_centroid(base, F.broadcast(cents), id_col).select(
-        F.col(id_col), F.col("__q"), F.col("__norm"), F.col("cid")
-    )
-    assigned.write.mode("overwrite").partitionBy("cid").parquet(
-        os.path.join(path, "lists")
-    )
-    cents.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-
-
-def append_ivf_index(
-    spark,
-    path: str,
-    new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    skip_existing: bool = True,
-) -> int:
-    """Incrementally grow a ``build_ivf_index`` layout: assign each new
-    vector to its nearest EXISTING centroid (same deterministic scoring
-    and tie-break as the build pass) and append the quantized rows to
-    the matching ``lists/cid=N/`` partitions. The corpus already in the
-    index is never rescanned or rewritten — the cost of ingesting a
-    batch is (batch x centroids) scoring plus a partition-pruned
-    existence probe, independent of index size. This is the standard
-    IVF maintenance story (FAISS ``add``): centroids drift only on a
-    full rebuild, matching how production ANN services batch-ingest.
-
-    ``skip_existing=True`` makes re-running the SAME batch idempotent
-    (crash-replay safe, the insert-only-merge pattern of the dedup
-    stores): already-indexed ids are dropped by an anti-join against
-    ONLY the ``cid=`` partitions this batch assigns into — the probe
-    reads the touched lists, not the index (verify: ``inputFiles()``).
-    Returns the number of rows appended.
-
-    Note the assignment uses the PERSISTED centroids, so a query after
-    append sees old + new vectors under the same geometry; recall on
-    appended vectors matches the build-time recall as long as the new
-    batch is drawn from a distribution the centroids still cover (the
-    rebuild cadence knob at 100 TB)."""
-    import os
-
-    from pyspark.sql import Window
-
-    # same crash-window contract as append_ivf_pq_index: restore any
-    # list parked by a crashed compact_ivf_lists BEFORE the existence
-    # probe, or a replayed id double-writes and the next recovery
-    # deletes the parked original (row loss)
-    _recover_parked_lists(spark, os.path.join(path, "lists"))
-    stored_cents = _read_store_part(spark, os.path.join(path, "centroids"))
-    # width guard (the _stored_pq_geometry class): a wrong-width batch
-    # would assign via silently-truncated cosines and poison the lists
-    stored_d = _check_stored_width(
-        stored_cents, new_vectors, vec_col, code_col="__qc", full=False
-    )
-    cents = F.broadcast(stored_cents)
-    base = _with_quant(new_vectors, id_col, vec_col)
-    # persist: the touched-cid collect, the existence probe, and the
-    # append all consume this frame — unpersisted, the batch x
-    # centroids scoring pass would run three times.
-    assigned = persist_tracked(
-        _nearest_centroid(base, cents, id_col).select(
-            F.col(id_col), F.col("__q"), F.col("__norm"), F.col("cid")
-        )
-    )
-    if skip_existing:
-        touched = [r.cid for r in assigned.select("cid").distinct().collect()]
-        existing = _read_lists(spark, os.path.join(path, "lists"), touched)
-        if existing is not None:
-            assigned = persist_tracked(
-                assigned.join(existing.select(id_col), id_col, "left_anti")
-            )
-    n = assigned.count()
-    if n:
-        if stored_d is not None:
-            _check_batch_width_full(
-                assigned, "__q", stored_d, "append_ivf_index"
-            )
-        # one file per touched list per batch (the IVF-PQ repartition
-        # rationale): an unclustered partitioned write fragments each
-        # cid= dir into up-to-#tasks files per append
-        assigned.repartition("cid").write.mode("append").partitionBy(
-            "cid"
-        ).parquet(os.path.join(path, "lists"))
-    return n
-
-
-def query_ivf_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    nprobe: int = 1,
-) -> DataFrame:
-    """Top-k over a ``build_ivf_index`` layout. The probe set (query →
-    nprobe nearest centroids) is bounded at |queries|·nprobe ints, so
-    it is collected and pushed into the scan as a STATIC partition
-    filter — the lists scan reads only the probed ``cid=`` directories
-    (verify: ``inputFiles()`` of the result touches that subset only).
-    The bounded collect is the same trade ``ParquetMergeTable`` makes
-    for bucket ids: driver-side metadata, never data."""
-    from pyspark.sql import Window
-    import os
-
-    stored_cents = _read_store_part(spark, os.path.join(path, "centroids"))
-    # width guard (the _stored_pq_geometry class): the probe cosine's
-    # zip_with silently truncates a wider query frame. Evaluated from
-    # the probe collect below (r18) — two fewer driver jobs per run.
-    d = _stored_width_cached(spark, os.path.join(path, "centroids"), "__qc")
-    _check_store_not_empty(d, queries, path)
-    cents = F.broadcast(stored_cents)
-    # widen=False (r18): the probe scoring (|queries| x |centroids|
-    # cosines) is collected as bounded metadata below — fanning the tiny
-    # query frame out first cost a round-robin exchange + an extra AQE
-    # job per run, the same trade the other store query paths make.
-    qs = _with_quant(queries, id_col, vec_col, widen=False)
-    scored = qs.crossJoin(cents).withColumn(
-        "__cos",
-        _pair_cosine(F.col("__q"), F.col("__qc"), F.col("__norm"), F.col("__nc")),
-    )
-    w = Window.partitionBy(id_col).orderBy(F.col("__cos").desc(), F.col("cid").asc())
-    probe_sel = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= nprobe)
-        .select(
-            F.col(id_col).alias("query_id"),
-            "cid",
-            F.size(F.col("__q")).alias("__d"),
-        )
-    )
-    # one bounded collect replaces the r17 persist + distinct-collect
-    # chain; the query vectors are re-attached from a fresh projection
-    # of the (tiny) query frame instead of riding the collected rows
-    pairs, pairs_local = _collected_probes(probe_sel)
-    _check_collected_dims(pairs, "__d", d, vec_col)
-    pairs_local = pairs_local.drop("__d")
-    probe_cids = sorted({r.cid for r in pairs})
-    qvec = _with_quant(queries, id_col, vec_col, widen=False).select(
-        F.col(id_col).alias("query_id"),
-        F.col("__q").alias("__qq"),
-        F.col("__norm").alias("__nq"),
-    )
-    # broadcast the LOCAL pairs inside the re-attach join: the probes
-    # broadcast then builds from one query-frame scan stage (a shuffle
-    # join here would re-exchange the query side per run)
-    probes = qvec.join(F.broadcast(pairs_local), "query_id")
-    lists = _read_lists(spark, os.path.join(path, "lists"), probe_cids)
-    if lists is None:
-        # every probed list mid-swap/absent: empty top-k, right schema
-        joined = (
-            probes.select(
-                "query_id", F.col("query_id").alias("neighbor_id")
-            )
-            .limit(0)
-            .withColumn("cosine", F.lit(None).cast("double"))
-        )
-        return _rank_topk(joined, k)
-    joined = (
-        lists.join(F.broadcast(probes), on="cid")
-        .filter(F.col("query_id") != F.col(id_col))
-        .withColumn(
-            "cosine",
-            _pair_cosine(F.col("__qq"), F.col("__q"), F.col("__nq"), F.col("__norm")),
-        )
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "cosine")
-    )
-    return _rank_topk(joined, k)
-
-
-def build_ivf_sq8_index(
-    corpus: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_mod: int | None = 37,
-    centroid_rem: int = 3,
-) -> None:
-    """The IVF×SQ8 composition as a DISK LAYOUT — ``ivf_sq8_topk``'s
-    production form, completing the persisted-store family (IVF, SQ8,
-    PQ, IVF-PQ): int8 code rows (``id, c8``) written as parquet
-    PARTITIONED by nearest-IVF-centroid id (``lists/cid=N/``), with
-    ``centroids/`` (quantized probe vectors) and the 1-row quantizer
-    ``scale/`` alongside. A query prunes to its probed ``cid=``
-    directories at the scan and integer-dot-scores 4x-smaller codes —
-    at 100 TB a top-k reads ~nprobe/n_centroids of a 4x-compressed
-    corpus, the product of both cuts. Centroids AND scale freeze at
-    build (the frozen-geometry contract shared by every store);
-    appends encode against both, rebuild cadence owns drift.
-
-    Same deterministic centroid rule and integer scoring as
-    ``ivf_sq8_topk``, so the store replays it bit-exactly
-    (checked by tests/test_registry_oracle.py against the
-    `ann_topk_ivf_sq8` DuckDB oracle)."""
-    import os
-
-    base = persist_tracked(_with_quant(corpus, id_col, vec_col))
-    cents = _seed_centroids(corpus, base, id_col, centroid_mod, centroid_rem)
-    scale = _validated_sq8_scale(corpus, vec_col, "build_ivf_sq8_index")
-    assigned = _nearest_centroid(base, F.broadcast(cents), id_col).select(
-        F.col(id_col), "cid"
-    )
-    codes = sq8_codes(corpus, scale, id_col, vec_col)
-    assigned.join(codes, id_col).repartition("cid").write.mode(
-        "overwrite"
-    ).partitionBy("cid").parquet(os.path.join(path, "lists"))
-    cents.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-    scale.write.mode("overwrite").parquet(os.path.join(path, "scale"))
-
-
-def append_ivf_sq8_index(
-    spark,
-    path: str,
-    new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    skip_existing: bool = True,
-) -> int:
-    """Incrementally grow a ``build_ivf_sq8_index`` layout: assign each
-    new vector to its nearest FROZEN centroid and encode it against the
-    FROZEN scale, then append into the matching ``cid=`` partitions.
-    Same contract as the sibling appends: partition-pruned existence
-    probe over only the TOUCHED lists, ``skip_existing`` replays are
-    append-zero, full-batch width guard before anything is written, one
-    file per touched list per batch, and the ``_recover_parked_lists``
-    preamble makes crashed-compaction interleavings safe. Returns rows
-    appended."""
-    import os
-
-    _recover_parked_lists(spark, os.path.join(path, "lists"))
-    # same single-partition-batch guard as append_ivf_index /
-    # append_ivf_pq_index: a one-file batch would serialize the
-    # batch x centroids scoring onto one core (the r6-measured 2.4x)
-    want = spark.sparkContext.defaultParallelism
-    if new_vectors.rdd.getNumPartitions() < want:
-        new_vectors = new_vectors.repartition(want)
-    stored_cents = _read_store_part(spark, os.path.join(path, "centroids"))
-    stored_d = _check_stored_width(
-        stored_cents, new_vectors, vec_col, code_col="__qc", full=False
-    )
-    scale = _read_store_part(spark, os.path.join(path, "scale"))
-    cents = F.broadcast(stored_cents)
-    base = _with_quant(new_vectors, id_col, vec_col)
-    assigned = persist_tracked(
-        _nearest_centroid(base, cents, id_col)
-        .select(F.col(id_col), "cid")
-        .join(sq8_codes(new_vectors, scale, id_col, vec_col), id_col)
-    )
-    if skip_existing:
-        touched = [r.cid for r in assigned.select("cid").distinct().collect()]
-        existing = _read_lists(spark, os.path.join(path, "lists"), touched)
-        if existing is not None:
-            assigned = persist_tracked(
-                assigned.join(existing.select(id_col), id_col, "left_anti")
-            )
-    n = assigned.count()
-    if n:
-        if stored_d is not None:
-            _check_batch_width_full(
-                assigned, "c8", stored_d, "append_ivf_sq8_index"
-            )
-        assigned.repartition("cid").write.mode("append").partitionBy(
-            "cid"
-        ).parquet(os.path.join(path, "lists"))
-    return n
-
-
-def query_ivf_sq8_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    nprobe: int = 2,
-) -> DataFrame:
-    """Integer-SQ8 top-k over a ``build_ivf_sq8_index`` layout: the
-    probe set (query → nprobe nearest stored centroids by exact
-    quantized cosine) is |queries|·nprobe ints, collected and pushed
-    into the lists scan as a STATIC partition filter (the family's
-    driver-side-metadata trade), so only the probed ``cid=``
-    directories are listed or read; the survivors' int8 codes are
-    scored against the broadcast query codes with the exact integer
-    dot product. Identical semantics and output contract
-    (query_id, neighbor_id, score8, rank) to ``ivf_sq8_topk`` over the
-    same logical corpus and parameters."""
-    import os
-
-    from pyspark.sql import Window
-
-    stored_cents = _read_store_part(spark, os.path.join(path, "centroids"))
-    # width guard evaluated from the probe collect below (r18)
-    d = _stored_width_cached(spark, os.path.join(path, "centroids"), "__qc")
-    _check_store_not_empty(d, queries, path)
-    scale = _read_store_part(spark, os.path.join(path, "scale"))
-    cents = F.broadcast(stored_cents)
-    qs = _with_quant(queries, id_col, vec_col, widen=False)
-    scored = qs.crossJoin(cents).withColumn(
-        "__cos",
-        _pair_cosine(F.col("__q"), F.col("__qc"), F.col("__norm"), F.col("__nc")),
-    )
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("__cos").desc(), F.col("cid").asc()
-    )
-    probe_sel = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= nprobe)
-        .select(
-            F.col(id_col).alias("query_id"),
-            "cid",
-            F.size(F.col("__q")).alias("__d"),
-        )
-    )
-    # one bounded collect replaces the r17 persist + distinct-collect
-    # chain; the query codes re-attach from a fresh projection
-    pairs, pairs_local = _collected_probes(probe_sel)
-    _check_collected_dims(pairs, "__d", d, vec_col)
-    pairs_local = pairs_local.drop("__d")
-    probe_cids = sorted({r.cid for r in pairs})
-    qcodes = sq8_codes(queries, scale, id_col, vec_col, widen=False).select(
-        F.col(id_col).alias("query_id"), F.col("c8").alias("__cq")
-    ).join(F.broadcast(pairs_local), "query_id")
-    lists = _read_lists(spark, os.path.join(path, "lists"), probe_cids)
-    if lists is None:
-        empty = (
-            qcodes.select(
-                "query_id", F.col("query_id").alias("neighbor_id")
-            )
-            .limit(0)
-            .withColumn("score8", F.lit(None).cast("long"))
-            .withColumn("rank", F.lit(None).cast("int"))
-        )
-        return empty
-    score = F.aggregate(
-        F.zip_with(
-            F.col("__cq"),
-            F.col("__cc"),
-            lambda x, y: x.cast("long") * y.cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    out = (
-        lists.select(
-            "cid", F.col(id_col).alias("neighbor_id"), F.col("c8").alias("__cc")
-        )
-        .join(F.broadcast(qcodes), "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("score8", score)
-        .select("query_id", "neighbor_id", "score8")
-    )
-    return _rank_topk_score8(out, k)
-
-
 def semantic_decontam(
     corpus: DataFrame,
     eval_set: DataFrame,
@@ -1766,58 +1010,6 @@ PQ_M = 8  # subspaces over the dim-64 embedding -> 8 dims per codebook
 # codebook (``_stored_pq_geometry``), so a default can never silently
 # disagree with an artifact on disk.
 PQ_INDEX_M = 16
-
-
-def _check_stored_width(
-    stored_codes: DataFrame,
-    frame: DataFrame,
-    vec_col: str,
-    code_col: str = "c8",
-    full: bool = True,
-) -> int | None:
-    """Guard an incoming frame's vector width against a persisted code
-    table whose geometry has no sidecar (SQ8: the scale is a scalar):
-    one limit-1 probe reads the stored code width, then ``_check_dim``
-    checks the incoming frame (``full=True`` min/max-scans it — the
-    broadcast query side; ``full=False`` is the limit-1 fail-fast probe
-    append paths run BEFORE doing any quantization work). Returns the
-    stored width so append paths can re-check the full batch post-
-    persist (``_check_batch_width_full``), or None on an empty store."""
-    row = (
-        stored_codes.select(F.size(F.col(code_col)).alias("d"))
-        .limit(1)
-        .collect()
-    )
-    if not row:
-        return None
-    _check_dim(frame, vec_col, row[0].d, full=full)
-    return row[0].d
-
-
-def _check_batch_width_full(
-    batch: DataFrame, arr_col: str, d: int, op: str
-) -> None:
-    """Append-side mixed-width guard: the limit-1 fail-fast probe
-    admits a mixed-width batch whose FIRST sampled row matches the
-    stored width — the quantize transform would then persist
-    plausible-but-wrong codes for the odd rows, the exact failure
-    class the width guards target. The batch is already persisted and
-    counted by every append path, so this min/max aggregation over the
-    CACHED frame is one cheap extra job before the write (the quantize
-    transforms are element-wise, so the code array width per row
-    equals the incoming vector width — a full check on the persisted
-    codes IS a full check on the batch, with no second source scan)."""
-    row = batch.agg(
-        F.min(F.size(F.col(arr_col))).alias("mn"),
-        F.max(F.size(F.col(arr_col))).alias("mx"),
-    ).collect()
-    if row and row[0].mn is not None and not (row[0].mn == row[0].mx == d):
-        raise ValueError(
-            f"{op}: mixed/mismatched vector widths in append batch "
-            f"({row[0].mn}..{row[0].mx} components vs stored {d}) — "
-            "nothing was written; fix the batch and re-run (appends "
-            "are idempotent)"
-        )
 
 
 def _read_lists(spark, lists_dir: str, cids, part_col: str = "cid") -> DataFrame | None:
@@ -1979,15 +1171,21 @@ def pq_codebook(
             f"no {id_col} satisfies id % {cb_mod} == {cb_rem}; "
             "choose a codebook sample rule that hits the corpus"
         )
-    return sample.select(
-        F.col(id_col).alias("cid"),
+    return _subvectors(sample, id_col, "cid", m, d, "__csub").select(
+        "j", "cid", "__csub"
+    )
+
+
+def _subvectors(
+    quant: DataFrame, id_col: str, id_out: str, m: int, d: int, name: str
+) -> DataFrame:
+    """(id_out, j, name): the j-th ``d``-wide slice of each quantized
+    vector ``__q``, one row per subspace j < m."""
+    return quant.select(
+        F.col(id_col).alias(id_out),
         F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("j"),
         F.col("__q"),
-    ).select(
-        "j",
-        "cid",
-        F.slice(F.col("__q"), F.col("j") * d + 1, F.lit(d)).alias("__csub"),
-    )
+    ).select(id_out, "j", F.slice(F.col("__q"), F.col("j") * d + 1, F.lit(d)).alias(name))
 
 
 def _sub_l2(a: Column, b: Column) -> Column:
@@ -2018,18 +1216,8 @@ def pq_codes(
     code table is the 32x-compressed artifact a PQ deployment
     materializes once: m codes/vector instead of dim floats."""
     d = dim // m
-    subs = (
-        _with_quant(corpus, id_col, vec_col, widen=widen)
-        .select(
-            F.col(id_col),
-            F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("j"),
-            F.col("__q"),
-        )
-        .select(
-            F.col(id_col),
-            "j",
-            F.slice(F.col("__q"), F.col("j") * d + 1, F.lit(d)).alias("__xsub"),
-        )
+    subs = _subvectors(
+        _with_quant(corpus, id_col, vec_col, widen=widen), id_col, id_col, m, d, "__xsub"
     )
     return (
         subs.join(F.broadcast(codebook), "j")
@@ -2057,18 +1245,8 @@ def _pq_lut(
     (this table is what makes PQ scanning cheap: scoring a vector is
     m lookups instead of a dim-length dot product)."""
     d = dim // m
-    qsubs = (
-        _with_quant(queries, id_col, vec_col, widen=False)
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("j"),
-            F.col("__q"),
-        )
-        .select(
-            "query_id",
-            "j",
-            F.slice(F.col("__q"), F.col("j") * d + 1, F.lit(d)).alias("__qsub"),
-        )
+    qsubs = _subvectors(
+        _with_quant(queries, id_col, vec_col, widen=False), id_col, "query_id", m, d, "__qsub"
     )
     return qsubs.join(F.broadcast(codebook), "j").select(
         "query_id", "j", "cid", qdot(F.col("__qsub"), F.col("__csub")).alias("__pdot")
@@ -2112,16 +1290,7 @@ def pq_topk(
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("__pdot").alias("pq_score"))
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("pq_score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "pq_score", "rank")
-    )
+    return _rank_topk(scored, k, "pq_score")
 
 
 def ivf_pq_topk(
@@ -2206,14 +1375,7 @@ def ivf_pq_topk(
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("__pdot").alias("pq_score"))
     )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("pq_score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "pq_score", "rank")
-    )
+    return _rank_topk(scored, k, "pq_score")
 
 
 def pq_refine_topk(
@@ -2296,310 +1458,6 @@ def _exact_refine(
         .select("query_id", "neighbor_id", "cosine")
     )
     return _rank_topk(scored, k)
-
-
-def query_pq_index_refined(
-    spark,
-    path: str,
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    refine: int = 10,
-    m: int | None = None,
-    dim: int | None = None,
-) -> DataFrame:
-    """The on-disk FAISS ``IndexRefineFlat``: ADC shortlist from the
-    PERSISTED code table (``query_pq_index`` semantics — the
-    corpus-wide scan reads m bigint codes per vector, never a float),
-    then ONLY the refine*k shortlist is re-ranked with the exact
-    quantized cosine against the caller's float ``corpus`` frame (the
-    index deliberately stores no floats; the refine side reads them
-    from the primary table, which a production deployment keeps
-    anyway). Identical output contract and tie-breaks to the
-    in-session ``pq_refine_topk`` over the same logical corpus and
-    codebook — the amortized production path for the exact-quality ANN
-    configuration: build once, every query batch pays one code-table
-    scan plus refine*k exact scores per query."""
-    shortlist = query_pq_index(
-        spark, path, queries, id_col, vec_col, refine * k, m, dim
-    ).select("query_id", "neighbor_id")
-    return _exact_refine(corpus, queries, shortlist, id_col, vec_col, k)
-
-
-def write_pq_index(
-    corpus: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = PQ_INDEX_M,
-    dim: int = 64,
-    cb_mod: int | None = None,
-    cb_rem: int = 1,
-) -> None:
-    """Materialize the PQ index as a DISK LAYOUT: ``codebook/`` (the
-    ~256-entries-per-subspace long-form table) plus ``codes/``
-    (id, j, cid — m bigints per vector, the 32x compression). The
-    codebook is FROZEN at build time, the same contract as the SQ8
-    scale and the IVF centroids: later appends encode against it so
-    codes stay mutually comparable; corpus drift needs a rebuild.
-    ``pq_codebook`` fails loud on an empty/unsampled corpus, so a
-    degenerate build can never persist a poisoned store."""
-    import os
-
-    cb = persist_tracked(
-        pq_codebook(corpus, id_col, vec_col, m, dim, cb_mod, cb_rem)
-    )
-    cb.write.mode("overwrite").parquet(os.path.join(path, "codebook"))
-    pq_codes(corpus, cb, id_col, vec_col, m, dim).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "codes"))
-
-
-def append_pq_index(
-    spark,
-    path: str,
-    new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int | None = None,
-    dim: int | None = None,
-    skip_existing: bool = True,
-) -> int:
-    """Incrementally grow a ``write_pq_index`` layout: encode the batch
-    against the FROZEN stored codebook and append. The existing code
-    table is never rewritten — ingest cost is one batch-sized encode
-    plus an id anti-join against the (id-column-only, column-pruned)
-    existing codes scan. Returns rows appended (vectors, not code
-    rows); ``skip_existing`` makes replays idempotent — the
-    store-not-rescan contract every incremental store here follows.
-    ``m``/``dim`` default to the STORED geometry
-    (``_stored_pq_geometry``); an explicit value must match it."""
-    import os
-
-    # Fan the batch out before encoding: ensure_parallelism leaves
-    # non-file frames (foreachBatch micro-batches) untouched, but the
-    # encode is compute-heavy (batch x m x 256 subspace distances) and
-    # serializes on a narrow JSON/Kafka batch. The RDD partition probe
-    # is a per-BATCH fixed cost — fine at ingest cadence, unlike the
-    # per-call hot-path cost ensure_parallelism's design avoids.
-    want = spark.sparkContext.defaultParallelism
-    if new_vectors.rdd.getNumPartitions() < want:
-        new_vectors = new_vectors.repartition(want)
-    stored_cb = _read_store_part(spark, os.path.join(path, "codebook"))
-    m, dim = _stored_pq_geometry(stored_cb, m, dim)
-    # full=True (not the limit-1 probe): PQ encodes via F.slice, which
-    # silently truncates a WIDER row into plausible-but-wrong codes —
-    # undetectable post-encode, so the mixed-width check must scan the
-    # incoming batch itself (one batch-sized min/max agg at ingest
-    # cadence, nothing corpus-sized)
-    _check_dim(new_vectors, vec_col, dim, full=True)
-    cb = F.broadcast(stored_cb)
-    batch = pq_codes(new_vectors, cb, id_col, vec_col, m, dim)
-    if skip_existing:
-        existing = spark.read.parquet(os.path.join(path, "codes")).select(
-            id_col
-        )
-        batch = batch.join(existing.distinct(), id_col, "left_anti")
-    batch = persist_tracked(batch)
-    n_rows = batch.count()
-    if n_rows:
-        _bounded_files(batch, n_rows).write.mode("append").parquet(
-            os.path.join(path, "codes")
-        )
-    return n_rows // m
-
-
-def query_pq_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    m: int | None = None,
-    dim: int | None = None,
-) -> DataFrame:
-    """ADC top-k against a persisted PQ layout: the query side builds
-    its LUT from the stored codebook and broadcasts it; the corpus
-    side reads ONLY the m-bigints-per-vector code table — at no point
-    is a stored float embedding materialized. Identical ADC semantics
-    to ``pq_topk`` over the same logical corpus and codebook
-    (pytest-asserted). Callers wanting exact-quality answers re-rank
-    the returned shortlist against their float table — the
-    ``pq_refine_topk`` composition; the index itself never needs the
-    floats. ``m``/``dim`` default to the STORED geometry
-    (``_stored_pq_geometry``); an explicit value must match it."""
-    import os
-
-    from pyspark.sql import Window
-
-    stored_cb = _read_store_part(spark, os.path.join(path, "codebook"))
-    m, dim = _stored_pq_geometry(stored_cb, m, dim)
-    # the query frame must match the stored width too: F.slice never
-    # errors on longer arrays, so a 128-dim query against a 64-dim
-    # index would otherwise score the first 64 components silently
-    _check_dim(queries, vec_col, dim, full=True)
-    cb = F.broadcast(stored_cb)
-    codes = _read_store_part(spark, os.path.join(path, "codes")).select(
-        F.col(id_col).alias("neighbor_id"), "j", "cid"
-    )
-    lut = _pq_lut(queries, cb, id_col, vec_col, m, dim)
-    scored = (
-        codes.join(F.broadcast(lut), ["j", "cid"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("__pdot").alias("pq_score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("pq_score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "pq_score", "rank")
-    )
-
-
-def build_ivf_pq_index(
-    corpus: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_mod: int | None = 37,
-    centroid_rem: int = 3,
-    m: int = PQ_INDEX_M,
-    dim: int = 64,
-    cb_mod: int | None = None,
-    cb_rem: int = 1,
-) -> None:
-    """The composed FAISS ``IVFx,PQy`` DISK LAYOUT — the full
-    production ANN artifact: PQ codes (one array<long> of m codes per
-    vector) written as parquet PARTITIONED by nearest-IVF-centroid id
-    (``lists/cid=N/``), with ``centroids/`` and ``codebook/``
-    alongside. A query prunes to its probed ``cid=`` directories at
-    the scan (directory-level, nothing else read or listed) and then
-    ADC-scores m-code rows — at 100 TB a top-k touches
-    ~nprobe/n_centroids of a 32x-compressed corpus, the product of
-    both cuts. Centroids AND codebook freeze at build; appends encode
-    against both, rebuild cadence owns drift."""
-    import os
-
-    base = persist_tracked(_with_quant(corpus, id_col, vec_col))
-    cents = _seed_centroids(corpus, base, id_col, centroid_mod, centroid_rem)
-    cb = persist_tracked(
-        pq_codebook(corpus, id_col, vec_col, m, dim, cb_mod, cb_rem)
-    )
-    assigned = _nearest_centroid(base, F.broadcast(cents), id_col).select(
-        F.col(id_col), "cid"
-    )
-    codes = _pq_code_arrays(corpus, cb, id_col, vec_col, m, dim)
-    (
-        codes.join(assigned, id_col)
-        # hash-cluster on the partition column before the partitioned
-        # write: each cid lands in exactly ONE task, so the layout is
-        # one file per list instead of (tasks x lists) fragments — at
-        # 32 tasks x 200 centroids the difference is 200 files vs
-        # 6,400, and every later probe/query scan pays the file count
-        .repartition("cid")
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(os.path.join(path, "lists"))
-    )
-    cents.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-    cb.write.mode("overwrite").parquet(os.path.join(path, "codebook"))
-
-
-def _pq_code_arrays(
-    corpus: DataFrame,
-    codebook: DataFrame,
-    id_col: str,
-    vec_col: str,
-    m: int,
-    dim: int,
-) -> DataFrame:
-    """(id, codes array<long>): the long-form ``pq_codes`` rolled back
-    up to one m-element array per vector, ordered by subspace — the
-    on-disk shape (m bigints per row packs better than m rows and
-    reads back with one scan)."""
-    long_form = pq_codes(corpus, codebook, id_col, vec_col, m, dim)
-    return long_form.groupBy(id_col).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("j", "cid"))),
-            lambda s: s["cid"],
-        ).alias("codes")
-    )
-
-
-def append_ivf_pq_index(
-    spark,
-    path: str,
-    new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int | None = None,
-    dim: int | None = None,
-    skip_existing: bool = True,
-) -> int:
-    """Incrementally grow a ``build_ivf_pq_index`` layout: assign each
-    new vector to its nearest FROZEN centroid and encode it against
-    the FROZEN codebook, then append into the matching ``cid=``
-    partitions. Ingest cost is one batch-sized assignment+encode plus
-    a partition-pruned existence probe over only the TOUCHED lists'
-    id columns — proportional to the probed lists, never the whole
-    index (a skewed batch touching few lists probes few; a uniform
-    batch probes its centroid spread). ``skip_existing`` replays are
-    append-zero (the insert-only contract). Returns rows appended.
-    ``m``/``dim`` default to the STORED geometry
-    (``_stored_pq_geometry``); an explicit value must match it.
-
-    Runs the ``_recover_parked_lists`` preamble first: an append must
-    never land while a crashed compaction has a list parked at
-    ``.old`` with its live directory missing — the existence probe
-    would miss the parked rows (double-write) and the next recovery
-    would drop them (row loss). Live compaction and appends belong in
-    separate maintenance windows (the compactor's documented caveat);
-    the preamble makes the CRASHED-compactor interleavings safe."""
-    import os
-
-    _recover_parked_lists(spark, os.path.join(path, "lists"))
-    want = spark.sparkContext.defaultParallelism
-    if new_vectors.rdd.getNumPartitions() < want:
-        new_vectors = new_vectors.repartition(want)
-    cents = F.broadcast(_read_store_part(spark, os.path.join(path, "centroids")))
-    stored_cb = _read_store_part(spark, os.path.join(path, "codebook"))
-    m, dim = _stored_pq_geometry(stored_cb, m, dim)
-    # full=True for the same reason as append_pq_index: the F.slice
-    # encode silently truncates wider rows, so only a pre-encode
-    # batch-sized min/max scan catches a mixed-width batch
-    _check_dim(new_vectors, vec_col, dim, full=True)
-    cb = F.broadcast(stored_cb)
-    base = _with_quant(new_vectors, id_col, vec_col, widen=False)
-    assigned = _nearest_centroid(base, cents, id_col).select(F.col(id_col), "cid")
-    batch = persist_tracked(
-        _pq_code_arrays(new_vectors, cb, id_col, vec_col, m, dim).join(
-            assigned, id_col
-        )
-    )
-    if skip_existing:
-        touched = [r.cid for r in batch.select("cid").distinct().collect()]
-        existing = _read_lists(spark, os.path.join(path, "lists"), touched)
-        if existing is not None:
-            batch = persist_tracked(
-                batch.join(existing.select(id_col), id_col, "left_anti")
-            )
-    n = batch.count()
-    if n:
-        # one file per touched list per batch (the build's repartition
-        # rationale): without it every append fragments each cid= dir
-        # into up-to-#tasks files and the NEXT batch's existence probe
-        # pays the growing file count — measured 64 -> 370 scan tasks
-        # over 10 uniform batches before this clustering
-        batch.repartition("cid").write.mode("append").partitionBy(
-            "cid"
-        ).parquet(os.path.join(path, "lists"))
-    return n
 
 
 def _recover_parked_lists(spark, lists_dir: str) -> None:
@@ -2709,108 +1567,609 @@ def compact_ivf_lists(
     return len(frag)
 
 
-# Historical name (the function predates the plain-IVF store gaining
-# append-driven fragmentation); the implementation is layout-generic.
-compact_ivf_pq_lists = compact_ivf_lists
+# -- the persisted ANN store: partitioner x codec -----------------------------
+#
+# Every stored layout is one PARTITIONER (how vectors split into lists, and
+# which lists a query probes) times one CODEC (how a vector is stored and
+# how a pair scores) -- the composition FAISS ``index_factory`` strings
+# name ("IVF256,PQ16"), and REPOSE's split of partition pruning from the
+# local index. The six layouts the public functions bind:
+#
+#   store    partitioner  codec   data                  frozen artifacts
+#   LSH      _Lsh         _Float  lists/bucket=N        meta/ (bits, dim)
+#   SQ8      _Flat        _Sq8    codes/ (id, c8)       scale/
+#   IVF      _Ivf         _Float  lists/cid=N           centroids/
+#   IVF-SQ8  _Ivf         _Sq8    lists/cid=N           centroids/, scale/
+#   PQ       _Flat        _Pq     codes/ (id, j, cid)   codebook/
+#   IVF-PQ   _Ivf         _Pq     lists/cid=N (codes)   centroids/, codebook/
+#
+# Artifacts freeze at build: appends assign and encode against them, so
+# stored rows stay mutually comparable, and a corpus that drifts needs a
+# rebuild (the FAISS ``add`` contract). Each store replays its in-session
+# ``*_topk`` form bit-exactly over the same logical corpus (pytest- and
+# oracle-checked). Appends are insert-only: an id whose vector changed
+# needs a rebuild, because the replay anti-join sees only the lists the
+# new batch lands in.
+
+
+class _Flat:
+    """No partitioner: one ``codes/`` table that every query scans."""
+
+    col, data, artifact = None, "codes", None
+
+    def train(self, corpus, base, id_col, vec_col):
+        return base, None
+
+    def open(self, spark, path):
+        pass
+
+    def width(self, spark, path):
+        return None
+
+    def assign(self, base, id_col):
+        return base
+
+    def probe(self, qs, id_col, nprobe):
+        return qs.select(F.col(id_col).alias("query_id"), F.size("__q").alias("__d"))
+
+
+class _Ivf:
+    """Inverted file: a vector lives in the list of its nearest centroid
+    (exact quantized cosine, ties to the smaller cid), and a query probes
+    its ``nprobe`` nearest centroids' lists. The centroids are the
+    deterministic ``id % centroid_mod == centroid_rem`` sample
+    (``_seed_centroids``; None derives ~sqrt(n)), refined by
+    ``refine_iters`` Lloyd iterations (``_lloyd_refine``) before they
+    freeze, so the refinement is paid once per corpus version."""
+
+    col, data, artifact = "cid", "lists", "centroids"
+
+    def __init__(self, centroid_mod=37, centroid_rem=3, refine_iters=0):
+        self.mod, self.rem, self.iters = centroid_mod, centroid_rem, refine_iters
+
+    def train(self, corpus, base, id_col, vec_col):
+        # the seed probe, the refinement and the assignment all read the
+        # quantized corpus
+        base = persist_tracked(base)
+        cents = _seed_centroids(corpus, base, id_col, self.mod, self.rem)
+        self.cents = _lloyd_refine(base, cents, self.iters, id_col)
+        return base, self.cents
+
+    def open(self, spark, path):
+        self.cents = _read_store_part(spark, os.path.join(path, "centroids"))
+
+    def width(self, spark, path):
+        return _stored_width_cached(spark, os.path.join(path, "centroids"), "__qc")
+
+    def assign(self, base, id_col):
+        return _nearest_centroid(base, F.broadcast(self.cents), id_col).select(
+            id_col, "__q", "__norm", "cid"
+        )
+
+    def probe(self, qs, id_col, nprobe):
+        return _probe_lists(qs, self.cents, id_col, nprobe)
+
+
+class _Lsh:
+    """Sign-random-projection LSH: a vector lives in the bucket its
+    ``bits`` hyperplane signs spell (``lsh_bucket``), and a query probes
+    its own bucket plus the ``nprobe - 1`` buckets behind its
+    least-confident planes (``lsh_probe_buckets``; only the broadcast
+    query side fans out). The planes are a deterministic function of
+    (j, dim), so the 1-row ``meta/`` (bits, dim) IS the hash family.
+    ``bits=None`` derives the width from the corpus size, then freezes
+    it. A build refuses an empty corpus: a frozen family over zero rows
+    would answer every later query with nothing."""
+
+    col, data, artifact = "bucket", "lists", "meta"
+
+    def __init__(self, bits=4, dim=64):
+        self.bits, self.dim = bits, dim
+
+    def train(self, corpus, base, id_col, vec_col):
+        n = corpus.count()
+        if n == 0:
+            raise ValueError(
+                "build_lsh_index: empty corpus — refusing to freeze a hash "
+                "family over zero list rows"
+            )
+        if self.bits is None:
+            self.bits = auto_bits(n)
+        _check_dim(corpus, vec_col, self.dim)
+        meta = corpus.sparkSession.createDataFrame(
+            [(int(self.bits), int(self.dim))], "bits int, dim int"
+        )
+        return base, meta
+
+    def open(self, spark, path):
+        meta = _store_part_row(spark, os.path.join(path, "meta"))
+        self.bits, self.dim = meta.bits, meta.dim
+
+    def width(self, spark, path):
+        return self.dim
+
+    def _planes(self):
+        return [hyperplane(j, self.dim) for j in range(self.bits)]
+
+    def assign(self, base, id_col):
+        return base.select(
+            id_col, "__q", "__norm", lsh_bucket(F.col("__q"), self._planes()).alias("bucket")
+        )
+
+    def probe(self, qs, id_col, nprobe):
+        nprobe = max(1, min(nprobe, self.bits + 1))
+        return qs.select(
+            F.col(id_col).alias("query_id"),
+            F.explode(lsh_probe_buckets(F.col("__q"), self._planes(), nprobe)).alias("bucket"),
+            F.size("__q").alias("__d"),
+        )
+
+
+class _Float:
+    """Quantized float: rows keep ``__q`` (the 1e6-quantized vector) and
+    its ``__norm``; a pair scores its exact quantized ``cosine``."""
+
+    score, score_type, artifact = "cosine", "double", None
+
+    def train(self, corpus, id_col, vec_col):
+        return None
+
+    def open(self, spark, path):
+        pass
+
+    def width(self, spark, path, listed):
+        return None
+
+    def stored(self, listed):
+        return ["__q", "__norm"]
+
+    def vectors(self, n_rows, listed):
+        return n_rows
+
+    def query_side(self, queries, id_col, vec_col):
+        return _with_quant(queries, id_col, vec_col, widen=False).select(
+            F.col(id_col).alias("query_id"),
+            F.col("__q").alias("__qq"),
+            F.col("__norm").alias("__nq"),
+        )
+
+    def attach(self, side, probes):
+        """The broadcast side of the candidate join: the query vectors,
+        with their probed list ids in a listed store."""
+        return side if probes is None else side.join(F.broadcast(probes), "query_id")
+
+    def scored(self, cand, side):
+        cos = _pair_cosine(F.col("__qq"), F.col("__q"), F.col("__nq"), F.col("__norm"))
+        return cand.select("query_id", "neighbor_id", cos.alias("cosine"))
+
+
+class _Sq8(_Float):
+    """SQ8: one int8 code array ``c8`` per vector against the frozen
+    corpus-wide ``scale/`` (``sq8_codes``), 4x fewer bytes than the float
+    embedding; a pair scores ``score8``, the exact integer dot product of
+    the two code arrays. The scale is validated at build: an empty or
+    all-zero corpus would freeze a NULL or zero scale that poisons every
+    later append and query."""
+
+    score, score_type, artifact = "score8", "long", "scale"
+
+    def train(self, corpus, id_col, vec_col):
+        self.scale = _sq8_max_abs(corpus, vec_col)
+        mx = self.scale.collect()[0]["__mx"]
+        if mx is None or mx <= 0:
+            raise ValueError(
+                f"SQ8 store build: degenerate quantizer scale (max_abs={mx!r})"
+                " — empty or all-zero corpus"
+            )
+        return self.scale
+
+    def open(self, spark, path):
+        self.scale = _read_store_part(spark, os.path.join(path, "scale"))
+
+    def width(self, spark, path, listed):
+        # the scale is a scalar: a flat store's codes carry the width (a
+        # listed store's centroids do)
+        return None if listed else _stored_width_cached(spark, os.path.join(path, "codes"), "c8")
+
+    def stored(self, listed):
+        return ["c8"]
+
+    def encode(self, frame, id_col, vec_col, listed, widen):
+        return sq8_codes(frame, self.scale, id_col, vec_col, widen)
+
+    def query_side(self, queries, id_col, vec_col):
+        return sq8_codes(queries, self.scale, id_col, vec_col, widen=False).select(
+            F.col(id_col).alias("query_id"), F.col("c8").alias("__cq")
+        )
+
+    def scored(self, cand, side):
+        return cand.select(
+            "query_id", "neighbor_id", _sq8_dot(F.col("__cq"), F.col("c8")).alias("score8")
+        )
+
+
+class _Pq(_Float):
+    """PQ/ADC: a vector as ``m`` codebook ids, one per ``dim / m``-wide
+    subspace (``pq_codes``), against the frozen ``codebook/``; a pair
+    scores ``pq_score``, the exact BIGINT sum of its m lookups in the
+    query's broadcast LUT (``_pq_lut``). A flat store keeps the long
+    form, one (id, j, cid) row per subspace; a listed store keeps one
+    m-element ``codes`` array per vector. Queries and appends read
+    (m, dim) from the stored codebook (``_stored_pq_geometry``); an
+    explicit m or dim must match it."""
+
+    score, score_type, artifact = "pq_score", "long", "codebook"
+
+    def __init__(self, m=None, dim=None, cb_mod=None, cb_rem=1):
+        self.m, self.dim, self.cb_mod, self.cb_rem = m, dim, cb_mod, cb_rem
+
+    def train(self, corpus, id_col, vec_col):
+        self.cb = persist_tracked(
+            pq_codebook(corpus, id_col, vec_col, self.m, self.dim, self.cb_mod, self.cb_rem)
+        )
+        return self.cb
+
+    def open(self, spark, path):
+        self.cb = _read_store_part(spark, os.path.join(path, "codebook"))
+        self.m, self.dim = _stored_pq_geometry(self.cb, self.m, self.dim)
+
+    def width(self, spark, path, listed):
+        return self.dim
+
+    def stored(self, listed):
+        return ["codes"] if listed else ["j", "cid"]
+
+    def vectors(self, n_rows, listed):
+        return n_rows if listed else n_rows // self.m
+
+    def encode(self, frame, id_col, vec_col, listed, widen):
+        codes = pq_codes(frame, self.cb, id_col, vec_col, self.m, self.dim, widen)
+        if not listed:
+            return codes
+        return codes.groupBy(id_col).agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("j", "cid"))), lambda s: s["cid"]
+            ).alias("codes")
+        )
+
+    def query_side(self, queries, id_col, vec_col):
+        return _pq_lut(queries, self.cb, id_col, vec_col, self.m, self.dim)
+
+    def attach(self, side, probes):
+        # the LUT joins per code below; only the probes ride the list join
+        return probes
+
+    def scored(self, cand, lut):
+        if "codes" in cand.columns:
+            cand = cand.select(
+                "query_id", "neighbor_id", F.posexplode("codes").alias("j", "cid")
+            )
+        keys = [c for c in ("query_id", "j", "cid") if c in cand.columns]
+        return (
+            cand.join(F.broadcast(lut), keys)
+            .filter(F.col("query_id") != F.col("neighbor_id"))
+            .groupBy("query_id", "neighbor_id")
+            .agg(F.sum("__pdot").alias("pq_score"))
+        )
+
+
+class _Store:
+    """One persisted ANN store: a partitioner and a codec.
+
+    - ``build`` trains both artifacts, encodes the corpus and writes it.
+    - ``append`` encodes a batch against the frozen artifacts and adds
+      the rows no stored id already has; the corpus is never rescanned
+      or rewritten.
+    - ``query`` collects the probes once, reads only the probed lists
+      (``_read_lists``), scores and cuts the top-k.
+
+    A listed store writes one file per list per write, clustered on the
+    list column: an unclustered partitioned write lands up to one file
+    per task in every list, and every later probe pays the file count."""
+
+    def __init__(self, part, codec):
+        self.part, self.codec = part, codec
+
+    @property
+    def listed(self):
+        return self.part.col is not None
+
+    def _encode(self, frame, base, id_col, vec_col, widen):
+        """The rows a write lands: (id, codec columns[, list column])."""
+        if type(self.codec) is _Float:
+            return self.part.assign(base, id_col)
+        rows = self.codec.encode(frame, id_col, vec_col, self.listed, widen)
+        if not self.listed:
+            return rows
+        return rows.join(self.part.assign(base, id_col).select(id_col, self.part.col), id_col)
+
+    def _write(self, rows, path, mode, n_rows=None):
+        data = os.path.join(path, self.part.data)
+        if self.listed:
+            rows = rows.repartition(self.part.col)
+            rows.write.mode(mode).partitionBy(self.part.col).parquet(data)
+        else:
+            rows = rows if n_rows is None else _bounded_files(rows, n_rows)
+            rows.write.mode(mode).parquet(data)
+
+    def _open(self, spark, path):
+        """Load the frozen artifacts; return the stored vector width, or
+        None when the artifact that carries it holds no rows."""
+        self.part.open(spark, path)
+        self.codec.open(spark, path)
+        return self.codec.width(spark, path, self.listed) or self.part.width(spark, path)
+
+    def _empty(self, spark, path, d):
+        """Whether the store holds no vector: no width, no stored row
+        (flat), or no centroid or no list at all (listed)."""
+        if d is None:
+            return True
+        if not self.listed:
+            return _store_part_row(spark, os.path.join(path, "codes")) is None
+        lists = os.path.join(path, "lists")
+        return self.part.width(spark, path) is None or not _any_list(
+            spark, lists, self.part.col
+        )
+
+    def build(self, corpus, path, id_col, vec_col):
+        base = _with_quant(corpus, id_col, vec_col) if self.listed else None
+        base, part_art = self.part.train(corpus, base, id_col, vec_col)
+        codec_art = self.codec.train(corpus, id_col, vec_col)
+        for name, art in ((self.part.artifact, part_art), (self.codec.artifact, codec_art)):
+            if art is not None:
+                art.write.mode("overwrite").parquet(os.path.join(path, name))
+        self._write(self._encode(corpus, base, id_col, vec_col, True), path, "overwrite")
+
+    def append(self, spark, path, new_vectors, id_col, vec_col, skip_existing):
+        """Rows appended (vectors, not long-form code rows).
+        ``skip_existing`` makes a replayed batch append zero: the
+        anti-join reads only the ids of the lists the batch lands in."""
+        data = os.path.join(path, self.part.data)
+        if self.listed:
+            # a list parked by a crashed compaction is invisible to the
+            # anti-join: restore it first, or a replay double-writes
+            _recover_parked_lists(spark, data)
+        # the assignment and encode are per-row compute: fan a narrow
+        # (one-file, micro-batch) input out to every core first
+        want = spark.sparkContext.defaultParallelism
+        if new_vectors.rdd.getNumPartitions() < want:
+            new_vectors = new_vectors.repartition(want)
+        d = self._open(spark, path)
+        if d is not None:
+            # the full pre-encode scan: zip_with and PQ's F.slice
+            # truncate a wider row into plausible codes silently
+            _check_dim(new_vectors, vec_col, d, full=True)
+        base = _with_quant(new_vectors, id_col, vec_col, widen=False) if self.listed else None
+        rows = persist_tracked(self._encode(new_vectors, base, id_col, vec_col, False))
+        if skip_existing:
+            if self.listed:
+                touched = [r[0] for r in rows.select(self.part.col).distinct().collect()]
+                existing = _read_lists(spark, data, touched, self.part.col)
+            else:
+                existing = spark.read.parquet(data)
+            if existing is not None:
+                rows = persist_tracked(rows.join(existing.select(id_col), id_col, "left_anti"))
+        n = rows.count()
+        if n:
+            self._write(rows, path, "append", n)
+        return self.codec.vectors(n, self.listed)
+
+    def query(self, spark, path, queries, id_col, vec_col, k, nprobe=1):
+        """(query_id, neighbor_id, <codec score>, rank): the top ``k``
+        per query by score desc, neighbor id asc, self-matches excluded.
+
+        One bounded collect of the probes (|queries|·nprobe rows: query
+        id, list id, query width) gives both the static partition filter
+        and the width check; the query vectors re-attach from a fresh
+        projection of the query frame. A store that holds no vector
+        fails loud for a non-empty query frame; an empty query frame, or
+        probes that reach no stored list, get an empty top-k."""
+        d = self._open(spark, path)
+        qs = _with_quant(queries, id_col, vec_col, widen=False)
+        pairs, probes = _collected_probes(self.part.probe(qs, id_col, nprobe), self.listed)
+        if d is not None:
+            _check_collected_dims(pairs, "__d", d, vec_col)
+        if self.listed:
+            ids = sorted({r[self.part.col] for r in pairs})
+            data = _read_lists(spark, os.path.join(path, "lists"), ids, self.part.col)
+        else:
+            data = None if self._empty(spark, path, d) else _read_store_part(
+                spark, os.path.join(path, "codes")
+            )
+        if data is None:
+            if self._empty(spark, path, d) and (pairs or not queries.isEmpty()):
+                raise ValueError(
+                    f"ANN store {path!r} is empty; cannot answer a non-empty query frame"
+                )
+            scored = (
+                queries.select(
+                    F.col(id_col).alias("query_id"), F.col(id_col).alias("neighbor_id")
+                )
+                .limit(0)
+                .withColumn(self.codec.score, F.lit(None).cast(self.codec.score_type))
+            )
+            return _rank_topk(scored, k, self.codec.score)
+        cand = data.select(
+            F.col(id_col).alias("neighbor_id"),
+            *self.codec.stored(self.listed),
+            *([self.part.col] if self.listed else []),
+        )
+        side = self.codec.query_side(queries, id_col, vec_col)
+        attached = self.codec.attach(side, probes.drop("__d") if self.listed else None)
+        if attached is not None:
+            cand = cand.join(F.broadcast(attached), self.part.col).filter(
+                F.col("query_id") != F.col("neighbor_id")
+            )
+        return _rank_topk(self.codec.scored(cand, side), k, self.codec.score)
+
+
+def _any_list(spark, lists_dir: str, part_col: str) -> bool:
+    """Whether ``lists_dir`` holds any ``{part_col}=`` list directory (a
+    parked ``.old`` one included): one listing, run only when a query's
+    probes reached no list."""
+    from airbnb_cdc_spark.operators.merge import _fs
+
+    fs, hp = _fs(spark, lists_dir)
+    return fs.exists(hp) and any(
+        st.getPath().getName().startswith(f"{part_col}=") for st in fs.listStatus(hp)
+    )
+
+
+# -- the six stores by name -----------------------------------------------------
+#
+# Each public name binds a partitioner and a codec. Builds and appends
+# are the per-corpus-version and per-batch costs; a query reads codes
+# (or quantized vectors) from only what its probes reach.
+
+
+def build_lsh_index(
+    corpus: DataFrame, path: str, id_col: str = "vec_id", vec_col: str = "embedding",
+    bits: int | None = 4, dim: int = 64,
+) -> None:
+    """``lsh_topk`` as a store: ``lists/bucket=N`` of quantized vectors, ``meta/``."""
+    _Store(_Lsh(bits, dim), _Float()).build(corpus, path, id_col, vec_col)
+
+
+def append_lsh_index(
+    spark, path: str, new_vectors: DataFrame, id_col: str = "vec_id",
+    vec_col: str = "embedding", skip_existing: bool = True,
+) -> int:
+    return _Store(_Lsh(), _Float()).append(spark, path, new_vectors, id_col, vec_col, skip_existing)
+
+
+def query_lsh_index(
+    spark, path: str, queries: DataFrame, id_col: str = "vec_id",
+    vec_col: str = "embedding", k: int = 5, nprobe: int = 1,
+) -> DataFrame:
+    return _Store(_Lsh(), _Float()).query(spark, path, queries, id_col, vec_col, k, nprobe)
+
+
+def write_sq8_index(
+    corpus: DataFrame, path: str, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> None:
+    """``sq8_topk`` as a store: ``codes/`` (id, c8), ``scale/``."""
+    _Store(_Flat(), _Sq8()).build(corpus, path, id_col, vec_col)
+
+
+def append_sq8_index(
+    spark, path: str, new_vectors: DataFrame, id_col: str = "vec_id",
+    vec_col: str = "embedding", skip_existing: bool = True,
+) -> int:
+    return _Store(_Flat(), _Sq8()).append(spark, path, new_vectors, id_col, vec_col, skip_existing)
+
+
+def query_sq8_index(
+    spark, path: str, queries: DataFrame, id_col: str = "vec_id",
+    vec_col: str = "embedding", k: int = 5,
+) -> DataFrame:
+    return _Store(_Flat(), _Sq8()).query(spark, path, queries, id_col, vec_col, k)
+
+
+def build_ivf_index(
+    corpus: DataFrame, path: str, id_col: str = "vec_id", vec_col: str = "embedding",
+    centroid_mod: int | None = 37, centroid_rem: int = 3, refine_iters: int = 0,
+) -> None:
+    """``ivf_topk`` as a store: ``lists/cid=N`` of quantized vectors, ``centroids/``."""
+    _Store(_Ivf(centroid_mod, centroid_rem, refine_iters), _Float()).build(corpus, path, id_col, vec_col)
+
+
+def append_ivf_index(
+    spark, path: str, new_vectors: DataFrame, id_col: str = "vec_id",
+    vec_col: str = "embedding", skip_existing: bool = True,
+) -> int:
+    return _Store(_Ivf(), _Float()).append(spark, path, new_vectors, id_col, vec_col, skip_existing)
+
+
+def query_ivf_index(
+    spark, path: str, queries: DataFrame, id_col: str = "vec_id",
+    vec_col: str = "embedding", k: int = 5, nprobe: int = 1,
+) -> DataFrame:
+    return _Store(_Ivf(), _Float()).query(spark, path, queries, id_col, vec_col, k, nprobe)
+
+
+def build_ivf_sq8_index(
+    corpus: DataFrame, path: str, id_col: str = "vec_id", vec_col: str = "embedding",
+    centroid_mod: int | None = 37, centroid_rem: int = 3,
+) -> None:
+    """``ivf_sq8_topk`` as a store: ``lists/cid=N`` of (id, c8), ``centroids/``, ``scale/``."""
+    _Store(_Ivf(centroid_mod, centroid_rem), _Sq8()).build(corpus, path, id_col, vec_col)
+
+
+def append_ivf_sq8_index(
+    spark, path: str, new_vectors: DataFrame, id_col: str = "vec_id",
+    vec_col: str = "embedding", skip_existing: bool = True,
+) -> int:
+    return _Store(_Ivf(), _Sq8()).append(spark, path, new_vectors, id_col, vec_col, skip_existing)
+
+
+def query_ivf_sq8_index(
+    spark, path: str, queries: DataFrame, id_col: str = "vec_id",
+    vec_col: str = "embedding", k: int = 5, nprobe: int = 2,
+) -> DataFrame:
+    return _Store(_Ivf(), _Sq8()).query(spark, path, queries, id_col, vec_col, k, nprobe)
+
+
+def write_pq_index(
+    corpus: DataFrame, path: str, id_col: str = "vec_id", vec_col: str = "embedding",
+    m: int = PQ_INDEX_M, dim: int = 64, cb_mod: int | None = None, cb_rem: int = 1,
+) -> None:
+    """``pq_topk`` as a store: ``codes/`` (id, j, cid), ``codebook/``."""
+    _Store(_Flat(), _Pq(m, dim, cb_mod, cb_rem)).build(corpus, path, id_col, vec_col)
+
+
+def append_pq_index(
+    spark, path: str, new_vectors: DataFrame, id_col: str = "vec_id",
+    vec_col: str = "embedding", m: int | None = None, dim: int | None = None,
+    skip_existing: bool = True,
+) -> int:
+    return _Store(_Flat(), _Pq(m, dim)).append(spark, path, new_vectors, id_col, vec_col, skip_existing)
+
+
+def query_pq_index(
+    spark, path: str, queries: DataFrame, id_col: str = "vec_id",
+    vec_col: str = "embedding", k: int = 5, m: int | None = None, dim: int | None = None,
+) -> DataFrame:
+    return _Store(_Flat(), _Pq(m, dim)).query(spark, path, queries, id_col, vec_col, k)
+
+
+def query_pq_index_refined(
+    spark, path: str, corpus: DataFrame, queries: DataFrame, id_col: str = "vec_id",
+    vec_col: str = "embedding", k: int = 5, refine: int = 10,
+    m: int | None = None, dim: int | None = None,
+) -> DataFrame:
+    """``pq_refine_topk`` over the store (FAISS ``IndexRefineFlat``): the
+    ADC shortlist of ``refine * k`` per query from the stored codes, then
+    the exact cosine re-rank of only that shortlist against the caller's
+    float ``corpus`` (the store keeps no floats)."""
+    shortlist = query_pq_index(spark, path, queries, id_col, vec_col, refine * k, m, dim)
+    return _exact_refine(corpus, queries, shortlist.select("query_id", "neighbor_id"), id_col, vec_col, k)
+
+
+def build_ivf_pq_index(
+    corpus: DataFrame, path: str, id_col: str = "vec_id", vec_col: str = "embedding",
+    centroid_mod: int | None = 37, centroid_rem: int = 3, m: int = PQ_INDEX_M,
+    dim: int = 64, cb_mod: int | None = None, cb_rem: int = 1,
+) -> None:
+    """``ivf_pq_topk`` as a store: ``lists/cid=N`` of (id, codes), ``centroids/``, ``codebook/``."""
+    _Store(_Ivf(centroid_mod, centroid_rem), _Pq(m, dim, cb_mod, cb_rem)).build(corpus, path, id_col, vec_col)
+
+
+def append_ivf_pq_index(
+    spark, path: str, new_vectors: DataFrame, id_col: str = "vec_id",
+    vec_col: str = "embedding", m: int | None = None, dim: int | None = None,
+    skip_existing: bool = True,
+) -> int:
+    return _Store(_Ivf(), _Pq(m, dim)).append(spark, path, new_vectors, id_col, vec_col, skip_existing)
 
 
 def query_ivf_pq_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    nprobe: int = 2,
-    m: int | None = None,
-    dim: int | None = None,
+    spark, path: str, queries: DataFrame, id_col: str = "vec_id",
+    vec_col: str = "embedding", k: int = 5, nprobe: int = 2,
+    m: int | None = None, dim: int | None = None,
 ) -> DataFrame:
-    """ADC top-k over a ``build_ivf_pq_index`` layout: the probe set
-    (query -> nprobe nearest stored centroids) is |queries|·nprobe
-    ints, collected and pushed into the lists scan as a STATIC
-    partition filter (the ``query_ivf_index`` trade — driver-side
-    metadata, never data), so only the probed ``cid=`` directories are
-    read; the survivors' m-code arrays are scored against the
-    broadcast query LUT. Identical ADC semantics to ``ivf_pq_topk``
-    over the same logical corpus and parameters (pytest-asserted).
-    ``m``/``dim`` default to the STORED geometry
-    (``_stored_pq_geometry``); an explicit value must match it."""
-    import os
+    return _Store(_Ivf(), _Pq(m, dim)).query(spark, path, queries, id_col, vec_col, k, nprobe)
 
-    from pyspark.sql import Window
 
-    cents = F.broadcast(_read_store_part(spark, os.path.join(path, "centroids")))
-    # geometry first (before probe selection): the probe-side cosine
-    # zip_with would silently truncate a wrong-width query frame too
-    stored_cb = _read_store_part(spark, os.path.join(path, "codebook"))
-    m, dim = _stored_pq_geometry(stored_cb, m, dim)
-    # width guard evaluated from the probe collect below (r18)
-    # widen=False: the query frame is tiny and feeds a broadcast —
-    # repartitioning it first is pure fixed overhead (the query-side
-    # convention ivf_pq_topk / pq_refine_topk / _pq_lut follow).
-    qs = _with_quant(queries, id_col, vec_col, widen=False)
-    scored = qs.crossJoin(cents).withColumn(
-        "__cos",
-        _pair_cosine(F.col("__q"), F.col("__qc"), F.col("__norm"), F.col("__nc")),
-    )
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("__cos").desc(), F.col("cid").asc()
-    )
-    probe_sel = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= nprobe)
-        .select(
-            F.col(id_col).alias("query_id"),
-            "cid",
-            F.size(F.col("__q")).alias("__d"),
-        )
-    )
-    pairs, probes = _collected_probes(probe_sel)
-    if not pairs:  # an empty query frame, or no centroids to probe
-        cents_path = os.path.join(path, "centroids")
-        _check_store_not_empty(
-            _stored_width_cached(spark, cents_path, "__qc"), queries, path
-        )
-    _check_collected_dims(pairs, "__d", dim, vec_col)
-    probes = probes.drop("__d")
-    probe_cids = sorted({r.cid for r in pairs})
-    cb = F.broadcast(stored_cb)
-    lut = _pq_lut(queries, cb, id_col, vec_col, m, dim)
-    lists = _read_lists(spark, os.path.join(path, "lists"), probe_cids)
-    if lists is None:
-        # every probed list mid-swap/absent: empty top-k, right schema
-        scored_pairs = (
-            probes.select(
-                "query_id", F.col("query_id").alias("neighbor_id")
-            )
-            .limit(0)
-            .withColumn("pq_score", F.lit(None).cast("long"))
-        )
-    else:
-        cand = (
-            lists.join(F.broadcast(probes), "cid")
-            .filter(F.col("query_id") != F.col(id_col))
-            .select(
-                "query_id",
-                F.col(id_col).alias("neighbor_id"),
-                F.posexplode("codes").alias("j", "code"),
-            )
-        )
-        scored_pairs = (
-            cand.join(
-                F.broadcast(lut),
-                (cand["j"] == lut["j"])
-                & (cand["code"] == lut["cid"])
-                & (cand["query_id"] == lut["query_id"]),
-            )
-            .groupBy(cand["query_id"], "neighbor_id")
-            .agg(F.sum("__pdot").alias("pq_score"))
-        )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("pq_score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored_pairs.withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "pq_score", "rank")
-    )
+def compact_ivf_pq_lists(spark, path: str, max_files: int = 4, part_col: str = "cid") -> int:
+    """The historical name of ``compact_ivf_lists``."""
+    return compact_ivf_lists(spark, path, max_files, part_col)

@@ -93,7 +93,7 @@ def test_append_frozen_family_and_replay_zero(spark, tmp_path):
 def test_empty_corpus_build_fails_loud(spark, tmp_path):
     """Freezing a hash family over zero rows would make every later
     query/append silently return empty — build refuses instead (the
-    _validated_sq8_scale build-time contract, r16 ADVICE)."""
+    SQ8 scale's build-time contract, r16 ADVICE)."""
     empty = _vecs(spark, [])
     for bits in (4, None):  # explicit width AND the auto_bits path
         with pytest.raises(ValueError, match="empty corpus"):
@@ -136,3 +136,37 @@ def test_generic_compactor_applies_with_bucket_part_col(spark, tmp_path):
     got = sorted(map(tuple, query_lsh_index(spark, path, qs, k=5,
                                             nprobe=2).collect()))
     assert got == want and got
+
+
+def test_query_against_empty_store_fails_loud(spark, tmp_path):
+    """LSH probes come from the query alone, so a store whose lists hold
+    no row still yields probes: a non-empty query frame must fail loud
+    instead of getting an empty top-k. (The build refuses an empty
+    corpus, so the test empties a built store's lists.)"""
+    path = str(tmp_path / "lsh")
+    build_lsh_index(_vecs(spark, range(60)), path, bits=4)
+    lists = spark.read.parquet(path + "/lists").schema
+    spark.createDataFrame([], lists).write.mode("overwrite").partitionBy(
+        "bucket"
+    ).parquet(path + "/lists")
+    queries = _vecs(spark, range(3))
+    with pytest.raises(ValueError, match="is empty"):
+        query_lsh_index(spark, path, queries, k=3)
+    # an empty query frame still gets an empty answer
+    assert query_lsh_index(spark, path, queries.limit(0), k=3).count() == 0
+
+
+def test_probes_that_reach_no_list_get_an_empty_top_k(spark, tmp_path):
+    """A non-empty store whose probed bucket holds no vector answers
+    with an empty top-k: no corpus vector landed there."""
+    import os
+    import shutil
+
+    path = str(tmp_path / "lsh")
+    build_lsh_index(_vecs(spark, range(60)), path, bits=4)
+    own = spark.read.parquet(path + "/lists").filter("vec_id = 0").first().bucket
+    shutil.rmtree(os.path.join(path, "lists", f"bucket={own}"))
+    assert any(d.startswith("bucket=") for d in os.listdir(path + "/lists"))
+    out = query_lsh_index(spark, path, _vecs(spark, [0]), k=3, nprobe=1)
+    assert out.columns == ["query_id", "neighbor_id", "cosine", "rank"]
+    assert out.count() == 0

@@ -650,6 +650,24 @@ def test_one_bucket_merge_runs_one_job(spark, tmp_path, spark_jobs):
     assert _rowset(t.read()) == _rowset(merge_dataframes(base, wave, ["id"], "ver"))
 
 
+@pytest.mark.parametrize("keys", [[(3,), (150,)], []], ids=["two_keys", "no_keys"])
+def test_one_bucket_delete_of_driver_built_keys_runs_two_jobs(
+    spark, tmp_path, spark_jobs, keys
+):
+    """Keys built on the driver carry no size estimate: without the
+    broadcast the anti join was a sort-merge join with an exchange on
+    each side, 4 jobs for two keys and 3 for none. Broadcast, it is the
+    broadcast and the write."""
+    t = _one_bucket(spark, tmp_path)
+    doomed = spark.createDataFrame(keys, "id long")
+    with spark_jobs(spark) as c:
+        t.delete(doomed)
+    assert c["jobs"] <= 2
+    gone = [k for (k,) in keys]
+    base = spark.range(200).selectExpr("id", "1 AS ver", "'a' AS v")
+    assert _rowset(t.read()) == _rowset(base.filter(~base.id.isin(gone)))
+
+
 @pytest.mark.parametrize("op", ["merge", "delete"])
 def test_empty_wave_into_a_one_bucket_table(spark, tmp_path, op):
     """A one-bucket table runs no probe, so an empty merge or delete

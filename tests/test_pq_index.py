@@ -168,3 +168,21 @@ def test_mixed_width_append_batch_fails_loud(spark, tmp_path):
     with pytest.raises(ValueError, match="components"):
         append_pq_index(spark, path, mixed)
     assert spark.read.parquet(path + "/codes").count() == n_before
+
+
+def test_query_against_empty_store_fails_loud(spark, tmp_path):
+    """A flat PQ store's codebook carries its width, so the width guard
+    passes even when ``codes/`` holds no row: a non-empty query frame
+    must fail loud instead of getting an empty top-k. (The build refuses
+    an empty corpus, so the test empties a built store's code table.)"""
+    path = str(tmp_path / "pq")
+    write_pq_index(_vecs(spark, range(60)), path, cb_mod=7, cb_rem=1)
+    codes = spark.read.parquet(path + "/codes").schema
+    spark.createDataFrame([], codes).write.mode("overwrite").parquet(
+        path + "/codes"
+    )
+    queries = _vecs(spark, range(3))
+    with pytest.raises(ValueError, match="is empty"):
+        query_pq_index(spark, path, queries, k=3)
+    # an empty query frame still gets an empty answer
+    assert query_pq_index(spark, path, queries.limit(0), k=3).count() == 0
